@@ -6,7 +6,9 @@ from __future__ import annotations
 
 import glob
 import gzip
+import logging
 import os
+import shutil
 
 import pytest
 
@@ -97,6 +99,50 @@ def test_get_modified_pq_reads_reference_footer(tmp_path):
 
 def test_get_modified_pq_missing(tmp_path):
     assert get_modified_pq(str(tmp_path / "nope.parquet")) == ""
+
+
+def test_torn_sidecar_means_stale_and_is_rewritten(spark, tmp_path):
+    """A sidecar cut short by a crash reads as '' (needs update), not a
+    JSONDecodeError on every later run; the next wrds_update_pq
+    rewrites the table and stamps it again."""
+    src = tmp_path / "src.parquet"
+    spark.range(4).write.parquet(str(src))
+    data_dir = str(tmp_path / "lake")
+    assert wrds_update_pq(spark, str(src), "t", "s", data_dir=data_dir) is True
+    path = os.path.join(data_dir, "s", "t.parquet")
+    stamp = get_modified_pq(path)
+    assert stamp
+
+    sidecar = os.path.join(path, "_meta.json")
+    with open(sidecar) as f:
+        text = f.read()
+    with open(sidecar, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert get_modified_pq(path) == ""
+
+    assert wrds_update_pq(spark, str(src), "t", "s", data_dir=data_dir) is True
+    assert get_modified_pq(path) == stamp
+    assert spark.read.parquet(path).count() == 4
+
+
+def test_set_modified_pq_failed_write_keeps_old_stamp(tmp_path, monkeypatch):
+    """The sidecar is swapped in by rename: a failure before the swap
+    leaves the old stamp readable and no temp file behind."""
+    from wrds2pg_spark import catalog
+
+    d = tmp_path / "t.parquet"
+    d.mkdir()
+    set_modified_pq(str(d), STAMP)
+
+    def fail(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(catalog.os, "replace", fail)
+    with pytest.raises(OSError):
+        set_modified_pq(str(d), STAMP2)
+    monkeypatch.undo()
+    assert get_modified_pq(str(d)) == STAMP
+    assert os.listdir(d) == ["_meta.json"]
 
 
 # --- csv sink --------------------------------------------------------------
@@ -197,6 +243,21 @@ def test_wrds_update_pq_end_to_end(spark, tmp_path):
         data_dir=data_dir, where="flag = 'KEEP'", rename="val=value",
     ) is False
 
+    # force rewrites the unchanged source: the new options show
+    assert wrds_update_pq(
+        spark, str(src), "mytab", "myschema", data_dir=data_dir, force=True,
+    ) is True
+    out = spark.read.parquet(os.path.join(data_dir, "myschema", "mytab.parquet"))
+    assert out.count() == 3
+
+    # a vanished source has stamp '' and still goes to the read, which
+    # raises, rather than skipping against the stamped sink
+    from pyspark.errors import AnalysisException
+
+    shutil.rmtree(src)
+    with pytest.raises(AnalysisException):
+        wrds_update_pq(spark, str(src), "mytab", "myschema", data_dir=data_dir)
+
 
 def test_wrds_update_csv_end_to_end(spark, tmp_path):
     src = tmp_path / "src.parquet"
@@ -212,6 +273,15 @@ def test_wrds_update_csv_end_to_end(spark, tmp_path):
     parts = glob.glob(os.path.join(path, "*.csv.gz"))
     with gzip.open(parts[0], "rt") as f:
         assert len(f.read().strip().splitlines()) == 4  # header + 3 rows
+
+    # force rewrites the unchanged source under the new options
+    assert wrds_update_csv(
+        spark, str(src), "t", "s", data_dir=data_dir, obs=2,
+        single_file=True, force=True,
+    ) is True
+    parts = glob.glob(os.path.join(path, "*.csv.gz"))
+    with gzip.open(parts[0], "rt") as f:
+        assert len(f.read().strip().splitlines()) == 3
 
 
 def test_wrds_update_pg_gate(spark, tmp_path):
@@ -230,6 +300,57 @@ def test_wrds_update_pg_gate(spark, tmp_path):
     assert called == []
 
 
+@pytest.mark.parametrize("entry", ["pq", "csv", "pg_jdbc", "pg_copy"])
+def test_up_to_date_call_reads_no_source_and_runs_no_job(
+    spark, tmp_path, monkeypatch, capsys, caplog, entry
+):
+    """An up-to-date table is settled by the stamps alone, as in the
+    reference (wrds2pg/api.py:174-194): the source is not read, no
+    ingest plan is built and Spark runs no job.  The message goes to
+    logging, not stdout."""
+    from wrds2pg_spark import update
+
+    src = tmp_path / "src.parquet"
+    spark.range(3).write.parquet(str(src))
+    stamp = update.source_modified(str(src))
+    data_dir = str(tmp_path / "lake")
+    seams = dict(execute_sql=lambda sql: None, copy_csv=lambda *a, **k: None)
+
+    def call():
+        if entry == "pq":
+            return update.wrds_update_pq(
+                spark, str(src), "t", "s", data_dir=data_dir, obs=2)
+        if entry == "csv":
+            return update.wrds_update_csv(
+                spark, str(src), "t", "s", data_dir=data_dir, obs=2)
+        return update.wrds_update(
+            spark, str(src), "t", "s", "jdbc:postgresql://nowhere/db",
+            sink_modified=stamp, obs=2,
+            transport="copy" if entry == "pg_copy" else "jdbc", **seams)
+
+    if entry in ("pq", "csv"):
+        assert call() is True  # first write stamps the sink
+
+    def boom(*args, **kwargs):
+        raise AssertionError("an up-to-date source was read")
+
+    monkeypatch.setattr(update, "read_source", boom)
+    monkeypatch.setattr(update, "apply_options", boom)
+    sc = spark.sparkContext
+    group = f"up_to_date_{entry}"
+    capsys.readouterr()
+    sc.setJobGroup(group, "stamp check only")
+    try:
+        with caplog.at_level(logging.INFO, logger="wrds2pg_spark.update"):
+            assert call() is False
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert capsys.readouterr().out == ""
+    assert "already up to date" in caplog.text
+
+
 def test_wrds_update_pq_alt_table_name(spark, tmp_path):
     """alt_table_name renames on load (wrds2pg/api.py:359-362): the
     sink lands under the alternate name, source read under the real."""
@@ -243,6 +364,19 @@ def test_wrds_update_pq_alt_table_name(spark, tmp_path):
     out = os.path.join(data_dir, "crsp", "dsf_new.parquet")
     assert spark.read.parquet(out).count() == 4
     assert not os.path.exists(os.path.join(data_dir, "crsp", "dsf.parquet"))
+
+    # the stamp check reads the alternate table's sink, not table_name's:
+    # a current dsf_new skips, an unstamped dsf_old still loads
+    assert wrds_update_pq(
+        spark, str(src), "dsf", "crsp",
+        data_dir=data_dir, alt_table_name="dsf_new",
+    ) is False
+    assert wrds_update_pq(
+        spark, str(src), "dsf", "crsp",
+        data_dir=data_dir, alt_table_name="dsf_old",
+    ) is True
+    assert spark.read.parquet(
+        os.path.join(data_dir, "crsp", "dsf_old.parquet")).count() == 4
 
 
 def test_wrds_update_pq_sas_schema(spark, tmp_path):
@@ -473,9 +607,15 @@ def test_wrds_update_pq_sas7bdat_content_stamp_gates(spark, tmp_path):
         hdr[176:184] = struct.pack("<d", secs)
         path.write_bytes(bytes(hdr))
 
+    # the schema sample runs read_fn on the driver while the source is
+    # read, so a skip that still opened the source would raise here
+    loaded = {"once": False}
+
     def fake_read_sas(path, format=None, chunksize=None, iterator=None):
         import pandas as pd
 
+        if loaded["once"]:
+            raise AssertionError("an up-to-date source was read")
         yield pd.DataFrame({"PERMNO": [1.0, 2.0], "RET": [0.1, 0.2]})
 
     src = tmp_path / "funds.sas7bdat"
@@ -487,11 +627,13 @@ def test_wrds_update_pq_sas7bdat_content_stamp_gates(spark, tmp_path):
         read_fn=fake_read_sas)
     assert did is True
 
+    loaded["once"] = True
     os.utime(src, (1e9, 1.7e9))  # touched/copied: content unchanged
     assert wrds_update_pq(
         spark, str(src), "funds", "crsp", data_dir=data_dir,
         read_fn=fake_read_sas) is False
 
+    loaded["once"] = False
     write_sas(src, datetime(2022, 6, 1, 10, 0, 0))  # SAS rewrote it
     assert wrds_update_pq(
         spark, str(src), "funds", "crsp", data_dir=data_dir,

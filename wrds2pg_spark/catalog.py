@@ -19,7 +19,9 @@ honored.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import logging
 import os
 import time
 from datetime import datetime, timezone
@@ -38,6 +40,8 @@ _WRDS_TZ = ZoneInfo("America/Chicago")
 _PREFIX = "Last modified: "
 _FMT = "%m/%d/%Y %H:%M:%S"
 _SIDECAR = "_meta.json"
+
+log = logging.getLogger(__name__)
 
 
 def modified_encode(last_modified: str) -> float:
@@ -72,10 +76,15 @@ def get_modified_pq(path: str) -> str:
     """
     if os.path.isdir(path):
         sidecar = os.path.join(path, _SIDECAR)
-        if not os.path.exists(sidecar):
+        try:
+            with open(sidecar) as f:
+                meta = json.load(f)
+        except FileNotFoundError:
             return ""
-        with open(sidecar) as f:
-            return json.load(f).get("last_modified", "")
+        except ValueError:  # torn or garbled: JSON or UTF-8 decode error
+            log.warning("%s is unreadable; the table needs an update", sidecar)
+            return ""
+        return meta.get("last_modified", "")
     if os.path.isfile(path):
         import pyarrow.parquet as pq
 
@@ -88,9 +97,21 @@ def get_modified_pq(path: str) -> str:
 
 
 def set_modified_pq(path: str, last_modified: str) -> bool:
-    """Write the sidecar stamp into a Spark-written table directory."""
-    with open(os.path.join(path, _SIDECAR), "w") as f:
-        json.dump({"last_modified": last_modified}, f)
+    """Write the sidecar stamp into a Spark-written table directory.
+
+    The stamp goes to a temp file in the same directory and is then
+    renamed over the sidecar, so a crash leaves the old stamp or the
+    new one, never a torn file.  The temp name starts with a dot, which
+    Spark's and DuckDB's parquet readers skip if one is left behind."""
+    tmp = os.path.join(path, f".{_SIDECAR}.{os.getpid()}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            json.dump({"last_modified": last_modified}, f)
+        os.replace(tmp, os.path.join(path, _SIDECAR))
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
+        raise
     return True
 
 

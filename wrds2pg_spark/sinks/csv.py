@@ -14,11 +14,15 @@ one partition for small reference-parity outputs.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 
 from wrds2pg_spark.catalog import get_modified_csv, needs_update, set_modified_csv
 
 __all__ = ["update_csv"]
+
+log = logging.getLogger(__name__)
 
 
 def update_csv(
@@ -38,7 +42,7 @@ def update_csv(
     (wrds2pg/api.py) — SAS names like ``wlatin1`` are normalized to
     java.nio charsets."""
     if not needs_update(modified, get_modified_csv(path), force):
-        print(f"{path} already up to date")
+        log.info("%s already up to date", path)
         return False
     out = df.coalesce(1) if single_file else df
     writer = (

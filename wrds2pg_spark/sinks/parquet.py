@@ -18,6 +18,8 @@ driver-side bottleneck at scale).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
 
 from wrds2pg_spark.catalog import get_modified_pq, needs_update, set_modified_pq
@@ -26,6 +28,8 @@ __all__ = [
     "update_parquet", "write_sorted", "write_partitioned",
     "compact_small_files",
 ]
+
+log = logging.getLogger(__name__)
 
 
 def update_parquet(
@@ -42,7 +46,7 @@ def update_parquet(
     entry-point boolean, wrds2pg/api.py:375-377 gate / :431 return).
     """
     if not needs_update(modified, get_modified_pq(path), force):
-        print(f"{path} already up to date")
+        log.info("%s already up to date", path)
         return False
     df.write.mode("overwrite").option("compression", compression).parquet(path)
     if modified:

@@ -23,6 +23,7 @@ JDBC runner).  All SQL generation is pure and unit-tested.
 
 from __future__ import annotations
 
+import logging
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -34,6 +35,8 @@ __all__ = [
     "update_postgres_copy", "psql_runners", "PsqlError",
     "spark_to_pg_type",
 ]
+
+log = logging.getLogger(__name__)
 
 # Spark SQL type -> PostgreSQL type, used for columns without an
 # explicit col_types override.  Matches the reference's inference
@@ -197,7 +200,7 @@ def update_postgres(
     wrds2pg/postgres/copy.py:38-52) without holding a long lock.
     """
     if not needs_update(modified, sink_modified, force):
-        print(f"{schema}.{table_name} already up to date")
+        log.info("%s.%s already up to date", schema, table_name)
         return False
 
     types = pg_types_for(df, col_types)
@@ -362,7 +365,7 @@ def update_postgres_copy(
     import tempfile
 
     if not needs_update(modified, sink_modified, force):
-        print(f"{schema}.{table_name} already up to date")
+        log.info("%s.%s already up to date", schema, table_name)
         return False
 
     types = pg_types_for(df, col_types)

@@ -5,8 +5,15 @@ reference's ``wrds_update`` / ``wrds_update_pq`` / ``wrds_update_csv``
 Shape per SURVEY §3: resolve source -> probe stamps -> gate -> one
 declarative read+transform+write plan -> store stamp.  Where the
 reference makes three SAS round-trips per update (stamp, data,
-metadata), Spark needs a single job: schema comes with the read,
-transforms ride the same plan, and the sink gates itself.
+metadata), Spark needs a single job: schema comes with the read and
+transforms ride the same plan.
+
+The stamp check runs before the source is opened, as the reference's
+does (wrds2pg/api.py:174-194): an up-to-date table costs the two stamp
+reads and no source read, plan or Spark job.  So option errors, such
+as a ``keep`` that names a missing column, surface only on a call that
+writes, as in the reference.  The sinks keep their own check for
+callers that hand them a DataFrame directly.
 
 Sources are local files (parquet / csv / sas7bdat via
 sources.*); there is no SAS server in this world, so the
@@ -15,11 +22,14 @@ sources.*); there is no SAS server in this world, so the
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from wrds2pg_spark.catalog import get_modified_csv, modified_decode
+from wrds2pg_spark.catalog import (
+    get_modified_csv, get_modified_pq, modified_decode, needs_update,
+)
 from wrds2pg_spark.paths import get_csv_path, get_pq_path
 from wrds2pg_spark.plans.ingest import IngestOptions, apply_options
 from wrds2pg_spark.sinks.csv import update_csv
@@ -31,6 +41,8 @@ __all__ = [
 ]
 
 _SOURCE_EXTS = (".parquet", ".pq", ".sas7bdat", ".csv", ".csv.gz")
+
+log = logging.getLogger(__name__)
 
 
 def resolve_source(
@@ -156,6 +168,17 @@ def read_source(
     raise ValueError(f"Unsupported source: {source_path}")
 
 
+def _up_to_date(
+    modified: str, sink_modified: str, force: bool, target: str
+) -> bool:
+    """The entry points' stamp check, made before the source is
+    opened; the rules are ``catalog.needs_update``'s."""
+    if needs_update(modified, sink_modified, force):
+        return False
+    log.info("%s already up to date", target)
+    return True
+
+
 def wrds_update_pq(
     spark: SparkSession,
     source_path: str | None,
@@ -187,6 +210,8 @@ def wrds_update_pq(
     )
     pq_path = get_pq_path(alt_table_name or table_name, schema, data_dir)
     modified = source_modified(source_path)
+    if _up_to_date(modified, get_modified_pq(pq_path), force, pq_path):
+        return False
     df = apply_options(
         read_source(spark, source_path, encoding, read_fn=read_fn),
         IngestOptions(**ingest_kwargs),
@@ -223,6 +248,8 @@ def wrds_update_csv(
     )
     csv_path = get_csv_path(alt_table_name or table_name, schema, data_dir)
     modified = source_modified(source_path)
+    if _up_to_date(modified, get_modified_csv(csv_path), force, csv_path):
+        return False
     df = apply_options(
         read_source(spark, source_path, encoding, read_fn=read_fn),
         IngestOptions(**ingest_kwargs),
@@ -278,33 +305,34 @@ def wrds_update(
         get_table_comment, update_postgres, update_postgres_copy,
     )
 
+    if transport == "copy" and (copy_csv is None or execute_sql is None):
+        raise ValueError(
+            "transport='copy' needs execute_sql and copy_csv seams "
+            "(see sinks.postgres.psql_runners)")
     encoding = resolve_encoding(encoding, sas_encoding)
     source_path = resolve_source(
         source_path, table_name, schema, sas_schema, source_dir
     )
+    table = alt_table_name or table_name
     if not sink_modified and execute_query is not None:
-        sink_modified = get_table_comment(
-            schema, alt_table_name or table_name, execute_query
-        )
+        sink_modified = get_table_comment(schema, table, execute_query)
     modified = source_modified(source_path)
+    if _up_to_date(modified, sink_modified, force, f"{schema}.{table}"):
+        return False
     df = apply_options(
         read_source(spark, source_path, encoding, read_fn=read_fn),
         IngestOptions(**ingest_kwargs),
     )
     if transport == "copy":
-        if copy_csv is None or execute_sql is None:
-            raise ValueError(
-                "transport='copy' needs execute_sql and copy_csv seams "
-                "(see sinks.postgres.psql_runners)")
         return update_postgres_copy(
-            df, alt_table_name or table_name, schema,
+            df, table, schema,
             execute_sql=execute_sql, copy_csv=copy_csv,
             modified=modified, sink_modified=sink_modified, force=force,
             col_types=col_types, create_roles=create_roles,
             stage_and_rename=stage_and_rename,
         )
     return update_postgres(
-        df, alt_table_name or table_name, schema, jdbc_url,
+        df, table, schema, jdbc_url,
         modified=modified, sink_modified=sink_modified, force=force,
         col_types=col_types, create_roles=create_roles,
         execute_sql=execute_sql, stage_and_rename=stage_and_rename,
