@@ -1424,12 +1424,11 @@ WITH s0 AS (
 )
 
 
-def _bpe_chain(docs, rounds=_BPE_ROUNDS, extra_cols=(), seed_cut=False):
+def _bpe_chain(docs, rounds=_BPE_ROUNDS, extra_cols=()):
     """The shared BPE training cascade: returns (per-round best-pair
     DataFrames, final token table with column ``t``).  ``extra_cols``
     (e.g. source) ride the document stream untouched through every
-    round.  ``seed_cut`` checkpoints the round-1 input string frame
-    (see the round-11 note at the bottom).
+    round.
 
     Round-8 rewrite: documents travel between rounds as the SAME
     doubled-separator string encoding the oracle replays — tokens
@@ -1458,19 +1457,13 @@ def _bpe_chain(docs, rounds=_BPE_ROUNDS, extra_cols=(), seed_cut=False):
             F.array_join(F.split(F.lower(F.col("text")), " "), sep2),
             F.lit(sep2),
         ).alias("s"))
-    if seed_cut:
-        # Round-11 audit NEGATIVE, recorded (VERDICT item 4, tools/
-        # bpe_seed_variants.py): the seed frame has TWO consumers
-        # (round-1 best_pair and round-1 merge), so un-checkpointed
-        # the scan + lowercase + separator-join runs twice — but
-        # cutting it measured a WASH at sf0.1 (merges 1.86->1.72,
-        # compress 1.76->1.77 min-of-5 interleaved; per-round winners
-        # mixed).  The corpus-as-string frame is BIGGER than the
-        # parquet it derives from, so persisting it costs what the
-        # saved re-scan gains — and at cluster scale the columnar
-        # re-scan is the cheaper side.  Default stays OFF; the flag
-        # exists so the probe stays reproducible.
-        cur = cur.transform(lineage_cut(eager=False))
+    # The seed frame has TWO consumers (round-1 best_pair and round-1
+    # merge), so the scan + lowercase + separator-join runs twice.
+    # Cutting it measured a wash at sf0.1 (OPTIMIZATION_r11.md,
+    # "_bpe_chain"): the corpus-as-string frame is bigger than the
+    # parquet it derives from, so persisting it costs what the saved
+    # re-scan gains (merges 1.86->1.72, compress 1.76->1.77 s,
+    # min-of-5 interleaved).
 
     def toks(sdf):
         t = F.split(F.col("s"), sep2)

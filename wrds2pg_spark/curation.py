@@ -3510,12 +3510,12 @@ def dq_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     commutes, so the checksum is independent of row order, file
     layout and partitioning — two tables match iff (n_rows, chk1,
     chk2) match per group, with collision odds ~2^-60 per group from
-    the paired slices (r9 A/B, tools/portable_hash_variants.py: ONE
-    conv of 15 hex chars split by shift/mask beat two 8-char convs
-    0.48 vs 0.55 s sf0.1; the md5 itself is the irreducible portable
-    cost — an intbucket CMS variant replacing string buckets with
-    conv+bit ops measured SLOWER, 1.49 vs 1.20, so conv is paid once
-    only where it subsumes two).
+    the paired slices (r9 A/B, BASELINE.md "Round 9: portable-md5
+    constant A/B": ONE conv of 15 hex chars split by shift/mask beat
+    two 8-char convs 0.48 vs 0.55 s sf0.1; the md5 itself is the
+    irreducible portable cost — an intbucket CMS variant replacing
+    string buckets with conv+bit ops measured SLOWER, 1.49 vs 1.20, so
+    conv is paid once only where it subsumes two).
 
     Scale shape: narrow map + map-side-combined groupBy — the
     exchange carries one row per group per task, so checksumming a

@@ -748,7 +748,10 @@ def connected_components(
 
     Dedup-pair graphs are symmetric cliques in the limit, so
     ``max_iter`` is a safety rail, not a tuning knob; raise it only
-    for long-chain graphs (their diameter bounds the rounds)."""
+    for long-chain graphs (their diameter bounds the rounds).  It
+    must be at least 1: the seed round always runs."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     # Checkpoint the loop-invariant edge list ONCE: the per-round join
     # re-evaluates sym's lineage, and while shuffle-stage reuse makes
     # exchanges free across rounds, BROADCAST-side work upstream (the

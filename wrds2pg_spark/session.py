@@ -6,12 +6,15 @@ and are tuned so the same code runs on ``local[N]`` for tests and on a
 real cluster unchanged: AQE on (runtime re-plan, skew-join handling),
 Arrow on (fast pandas interchange for the few Pandas-UDF operators),
 shuffle partitions sized to cores locally (override on a cluster).
+Python workers start through ``wrds2pg_spark.pydaemon``, which keeps
+each task from re-reading the zip archives on the workers' path.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import PySparkAttributeError
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -64,11 +67,15 @@ def get_spark(
         # locality — irrelevant with modern disaggregated storage.
         "spark.locality.wait": "0s",
         # Fewer, larger Arrow batches across the Python boundary for
-        # the Pandas-UDF operators (minhash banding, simhash folding):
-        # per-batch Python dispatch is the fixed cost worth amortizing.
+        # the Pandas-UDF operators (minhash banding, simhash folding).
+        # The boundary's measured fixed cost is per task, not per
+        # batch: import-cache invalidation, cut by the daemon below.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        # Before CPython 3.13 each Python task otherwise re-reads
+        # pyspark.zip and the spark-core jar (~0.24 s CPU, pydaemon.py).
+        "spark.python.daemon.module": "wrds2pg_spark.pydaemon",
         "spark.driver.memory": driver_memory,
         # Long-lived sessions hold checkpointed-RDD / shuffle state
         # until the ContextCleaner's weak refs fire, which needs a JVM
@@ -124,12 +131,10 @@ def lineage_cut(eager: bool = True):
     Usage: ``df.transform(lineage_cut(eager=False))``."""
     def _cut(df):
         try:
-            reliable = (
-                df.sparkSession.sparkContext.getCheckpointDir()
-                is not None
-            )
-        except Exception:
-            reliable = False
+            sc = df.sparkSession.sparkContext
+        except PySparkAttributeError:  # Spark Connect: no SparkContext
+            sc = None
+        reliable = sc is not None and sc.getCheckpointDir() is not None
         if reliable:
             return df.checkpoint(eager=eager)
         return df.localCheckpoint(eager=eager)
