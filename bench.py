@@ -1,9 +1,12 @@
-"""Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness — runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line:
 
     {"metric": "headline_wall_clock", "value": <total sec>,
-     "unit": "sec", "queries": {name: sec, ...}, "sf": 0.1}
+     "unit": "sec", "queries": {name: sec, ...}, "sf": 0.1, "cpus": N}
+
+    python bench.py              # every REGISTRY key, in registration order
+    python bench.py k1,k2        # just these keys, in this order
 
 Each query is fully materialized via the no-op data sink (forces the
 whole plan without driver-side collect overhead).
@@ -21,330 +24,100 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from wrds2pg_spark.queries import REGISTRY  # noqa: E402
 from wrds2pg_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    "ingest_q1_composite",
-    "scan_parquet",
-    "scan_csv_typed",
-    "join_inner",
-    "join_left",
-    "join_semi",
-    "join_anti",
-    "join_asof",
-    "join_range_banded",
-    "agg_distinct",
-    "agg_rollup",
-    "agg_cube",
-    "agg_percentiles",
-    "window_rank",
-    "window_running_sum",
-    "window_ntile",
-    "sort_topk",
-    "set_except_all",
-    "scalar_string_date",
-    "array_embedding_norm",
-    "json_props_extract",
-    "subquery_scalar",
-    "pivot_status_by_priority",
-    "unpivot_customer_metrics",
-    "tpch_q3_shape",
-    "tpch_q5_shape",
-    "tpch_q10_shape",
-    "tpch_q18_shape",
-    "tpch_q12_shape",
-    "tpch_q14_shape",
-    "tpch_q2_shape",
-    "tpch_q4_shape",
-    "tpch_q6_shape",
-    "tpch_q7_shape",
-    "tpch_q8_shape",
-    "tpch_q9_shape",
-    "tpch_q11_shape",
-    "tpch_q13_shape",
-    "tpch_q15_shape",
-    "tpch_q16_shape",
-    "tpch_q17_shape",
-    "tpch_q19_shape",
-    "tpch_q20_shape",
-    "tpch_q21_shape",
-    "tpch_q22_shape",
-    "window_range_frame",
-    "subquery_correlated",
-    "agg_salted_skew",
-    "join_salted_skew",
-    "explode_unnest",
-    "scan_json_typed",
-    "scan_binaryfile",
-    # north-star ops
-    "pipeline_training_data",
-    "dedup_exact",
-    "dedup_exact_normalized",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
+# Split-size tuning matched to the measured scale: the sf0.1 fact
+# tables are ~5-25 MB, so the 128 MB default packs each scan into ONE
+# split and serializes scan + partial-agg onto one core; 8 MB gives the
+# fact scans slot-count parallelism (the standard "splits ~ a few per
+# core" sizing).  At cluster scale the 128 MB session default is the
+# right number — this override is the same knob an operator would set
+# for a small hot table.
+BENCH_CONF = {"spark.sql.files.maxPartitionBytes": "8m"}
+
+# The hash/HOF-heavy operators run large interpreted expression trees
+# whose C2 compilation needs a full-size pass, not just the Janino
+# cache, so they are warmed at the target SF too.  So is the flagship:
+# its target-SF pass fills the page cache for the lineitem scan, so the
+# first timed keys measure the query, not the first-touch read.
+TARGET_WARM = (
+    "dedup_minhash_lsh", "dedup_minhash_portable",
+    "dedup_minhash_capped", "dedup_containment_lsh",
+    "dedup_ngram_jaccard", "dedup_simhash",
     "dedup_simhash_portable",
-    "dedup_embedding_cosine",
-    "similarity_topk",
-    "similarity_range_search",
-    "similarity_ann_lsh",
-    "text_stats",
-    "text_langid",
-    "text_fingerprint",
-    "text_entropy",
-    "text_token_bpe",
-    "text_rolling_hash",
-    "multimodal_binary_stats",
-    "udf_pandas_scalar",
-    "stream_tumbling_counts",
-    "stream_sliding_counts",
-    "stream_topk_per_window",
-    "stream_session_window",
-    "stream_dedup",
-    # time-series / stats batch
-    "ts_resample_ffill",
-    "ts_interpolate_linear",
-    "text_ngram_topk",
-    "dedup_levenshtein",
-    "agg_corr_exact",
-    "rollup_time_hier",
-    # curation / analytics batch
-    "sample_stratified",
-    "split_train_test",
-    "text_quality_gopher",
-    "text_pii_scrub",
-    "window_topk_per_group",
-    "hist_totalprice",
-    "funnel_events",
-    "events_funnel_windowed",
-    "cohort_retention",
-    "embedding_centroid",
-    "dedup_minhash_portable",
-    "dedup_minhash_capped",
-    "dedup_containment_lsh",
-    "merge_upsert",
-    "scd2_intervals",
-    "scan_orc_typed",
-    "join_asof_nearest",
-    "scan_partition_pruned",
-    "stream_join_attrib",
-    # full-surface batch (round 2): every registered key is timed
-    "agg_approx_distinct",
-    "agg_grouping_sets",
-    "agg_hll_sketch",
-    "agg_stats",
-    "agg_higher_moments",
-    "anomaly_zscore",
-    "decontaminate_ngram",
-    "dedup_cluster_exact",
-    "join_asof_forward",
-    "join_cross",
-    "join_full",
-    "join_right",
-    "multimodal_audio_features",
-    "multimodal_frame_sample",
-    "multimodal_image_features",
-    "pack_sequences",
-    "text_chunk_overlap",
-    "set_intersect",
-    "set_union",
-    "similarity_ivf",
-    "stream_enrich_static",
-    "text_repetition_topgram",
-    "text_unigram_logprob",
-    "text_bigram_logprob",
-    "tfidf_top_terms",
-    "window_first_last",
-    "window_lag_lead",
-    "winsorize_outliers",
-    "similarity_ann_indexed",
-    # training-shard & mixture batch
-    "shard_global_shuffle",
-    "mixture_weighted_sample",
-    "mixture_temperature_sample",
-    "vocab_induction",
-    "vocab_oov_coverage",
-    "vocab_bpe_merges",
-    "vocab_bpe_compression",
-    "quality_percentile_gate",
-    "stream_upsert_totals",
-    "agg_median_mode",
-    "agg_weighted_median",
-    "events_gaps_islands",
-    "events_threshold_crossings",
-    "events_ab_test_lift",
-    "graph_pagerank",
-    "graph_jaccard_neighbors",
-    "graph_jaccard_minhash",
-    "graph_jaccard_minhash_recall",
-    "graph_triangle_count",
-    "profile_table",
-    "dedup_survivorship",
-    "stream_late_drop_counts",
-    "cdc_apply_changelog",
-    "ts_downsample_m4",
-    "events_markov_transitions",
-    "similarity_maxsim",
-    "multimodal_keyframe_select",
-    "multimodal_image_resize",
-    "sql_q6_direct",
-    "dedup_incremental_minhash",
-    "dedup_embedding_lsh",
-    "basket_priority_lift",
-    "join_asof_tolerance",
-    "join_asof_cogrouped",
-    # round-3 additions
-    "join_interval_overlap",
-    "dedup_ngram_containment",
-    "embedding_covariance_exact",
-    "embedding_quantize_int8",
-    "anomaly_mad",
-    "text_zipf_slope",
-    "similarity_recall_at_k",
-    "similarity_matryoshka_recall",
-    "dedup_exact_substr",
-    "text_hapax_ratio",
-    "overlap_source_trigram",
-    # round-4 additions
-    "similarity_ivf_recall_at_k",
-    "multimodal_png_decode",
-    "tpch_q5_bucketed",
-    "tpch_q18_bucketed",
-    "tpch_q9_bucketed",
-    "tpch_q11_bucketed",
-    "tpch_q21_bucketed",
-    "tpch_q17_bucketed",
-    "tpch_q3_bucketed",
-    "tpch_q12_bucketed",
-    "agg_approx_error_audit",
-    "embedding_pq_codes",
-    "similarity_pq_adc",
-    "decontaminate_embedding",
-    "similarity_ivfpq_indexed",
-    "similarity_ivfpq_upsert",
-    "similarity_lsh_upsert",
-    "dedup_incremental_embedding",
-    "json_variant_extract",
-    "agg_listagg",
-    "join_lateral_topn",
-    "agg_bitmap_distinct",
-    "window_cume_dist",
-    "scan_zorder_pruned",
-    "similarity_pq_recall_at_k",
-    "scan_csv_quarantine",
-    "join_dpp_pruned",
-    "agg_hll_partial_union",
-    "agg_theta_setops",
-    "agg_kll_quantile_rollup",
-    "join_bloom_filtered",
-    "sql_recursive_cte",
-    "udtf_word_runs",
-    "join_point_in_time",
-    "cdc_snapshot_diff",
-    "dq_expectations",
-    "agg_grouping_id",
-    "join_null_safe",
-    "scan_xml_typed",
-    # quantitative-research stats family
-    "stats_ols_by_group",
-    "stats_rolling_beta",
-    "stats_portfolio_deciles",
-    "stats_fama_macbeth",
-    "stats_event_study_car",
-    "sql_pipe_syntax",
-    "scan_text_lines",
-    "sample_reservoir_group",
-    "scan_schema_evolution",
-    "scan_sas7bdat",
-    "stats_herfindahl",
-    "stats_rfm_segments",
-    "stats_ridge_by_group",
-    "ts_seasonal_decompose",
-    # round-8 additions
-    "events_sessionize",
-    "agg_cms_topk",
-    "maintenance_compact_small_files",
-    "dedup_cluster_minhash",
-    "dq_table_checksum",
-    "scan_sas7bdat_format",
-    "scan_csv_gzip",
-    # round-10 additions
-    "quality_model_score",
-    "quality_model_report",
-    "dedup_semantic_cells",
-    "pipeline_rag_index",
-    "pipeline_curation_funnel",
-    "quality_ccnet_buckets",
-    "text_boilerplate_ngram",
-    "vocab_fertility",
-    "mixture_token_budget",
-]
+    "dedup_embedding_cosine", "dedup_levenshtein",
+    "text_stats", "text_ngram_topk",
+    "ingest_q1_composite",
+)
 
 
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def main() -> None:
-    # Drift guard: every registered query must be timed (the round-1
-    # judge found 9 keys that landed after the list was last extended).
-    missing = sorted(set(REGISTRY) - set(HEADLINE))
-    if missing:
-        print(f"WARNING: unbenched registered queries: {missing}",
-              file=sys.stderr)
+def select_keys(argv: list[str]) -> list[str]:
+    """The keys named by the optional comma-separated argument, in the
+    given order; every registered key when there is none.  An unknown
+    key exits non-zero and names the key."""
+    if len(argv) > 1:
+        raise SystemExit(f"expected one comma-separated key list, got {argv}")
+    if not argv:
+        return list(REGISTRY)
+    keys = [k for k in argv[0].split(",") if k]
+    unknown = [k for k in keys if k not in REGISTRY]
+    if unknown:
+        raise SystemExit(f"unknown registry key(s): {', '.join(unknown)}")
+    return keys
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
-    # Split-size tuning matched to the measured scale: the sf0.1 fact
-    # tables are ~5-25 MB, so the 128 MB default packs each scan into
-    # ONE split and serializes scan + partial-agg onto one core; 8 MB
-    # gives the fact scans slot-count parallelism (the standard
-    # "splits ~ a few per core" sizing).  At cluster scale the 128 MB
-    # session default is the right number — this override is the same
-    # knob an operator would set for a small hot table.
-    spark = get_spark(
-        app_name="wrds2pg_spark_bench",
-        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
-    )
 
-    # Warm-up pass at the smallest scale factor: every query has the
-    # same schema there, so its generated whole-stage code is identical
-    # and Janino's compile cache is hot when the timed run starts.
-    # This measures steady-state engine throughput, not JIT compile.
+def warm(spark, keys: list[str], sf_dir: str) -> None:
+    """One pass of ``keys`` at the smallest scale factor, then two
+    target-SF passes of the ``TARGET_WARM`` keys among them.
+
+    At sf0.001 every query has the same schema, so its generated
+    whole-stage code is identical and Janino's compile cache is hot
+    when the timed run starts: the bench measures steady-state engine
+    throughput, not JIT compile.  Of the two target-SF passes, the
+    first triggers C2 compilation of the wide codegen'd shingle/hash
+    stages and the second runs against the compiled code.  A key that
+    fails here is reported on stderr; the timed loop then fails on it
+    loudly."""
     warm_dir = "/root/testdata/sf0.001"
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    for name in HEADLINE:
-        spec = REGISTRY.get(name)
-        if spec is not None:
+    heavy = [k for k in TARGET_WARM if k in keys]
+    for d, names in ((warm_dir, keys), (sf_dir, heavy), (sf_dir, heavy)):
+        for name in names:
             try:
-                materialize(spec.fn(spark, warm_dir))
-            except Exception:
-                pass
-    # The hash/HOF-heavy operators run large interpreted expression
-    # trees whose C2 compilation needs a full-size pass, not just the
-    # Janino cache: warm them once at the target SF so the timed run
-    # measures steady-state throughput.
-    # Two passes: the first triggers C2 compilation of the wide
-    # codegen'd shingle/hash stages, the second runs against the
-    # compiled code so the timed loop below starts at steady state.
-    for _ in range(2):
-        for name in (
-            "dedup_minhash_lsh", "dedup_minhash_portable",
-            "dedup_minhash_capped", "dedup_containment_lsh",
-            "dedup_ngram_jaccard", "dedup_simhash",
-            "dedup_simhash_portable",
-            "dedup_embedding_cosine", "dedup_levenshtein",
-            "text_stats", "text_ngram_topk",
-            # the flagship runs FIRST in the timed loop: warm it at the
-            # target SF too, so its slot measures the query, not the
-            # first-touch page-cache fill of the sf0.1 lineitem scan
-            "ingest_q1_composite",
-        ):
-            spec = REGISTRY.get(name)
-            if spec is not None:
-                try:
-                    materialize(spec.fn(spark, sf_dir))
-                except Exception:
-                    pass
+                materialize(REGISTRY[name].fn(spark, d))
+            except Exception as exc:  # noqa: BLE001
+                print(f"[warm {d}] {name}: {type(exc).__name__}: {exc}",
+                      file=sys.stderr)
+
+
+def time_keys(run, keys: list[str], passes: int) -> dict[str, float]:
+    """Per-key minimum of ``run(key)`` wall seconds over ``passes``
+    full interleaved passes.
+
+    GC pauses and external CPU bursts last seconds-to-minutes and would
+    otherwise land on an arbitrary contiguous run of (sub-second)
+    queries.  Passes are minutes apart, so a burst cannot hit the same
+    query twice; the minimum is the steady-state throughput number."""
+    times: dict[str, float] = {}
+    for _ in range(passes):
+        for name in keys:
+            t0 = time.perf_counter()
+            run(name)
+            dt = round(time.perf_counter() - t0, 3)
+            if name not in times or dt < times[name]:
+                times[name] = dt
+    return times
+
+
+def main() -> None:
+    keys = select_keys(sys.argv[1:])
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
+    spark = get_spark(app_name="wrds2pg_spark_bench", extra_conf=BENCH_CONF)
+    warm(spark, keys, sf_dir)
 
     # Plan construction runs INSIDE the timed region, once per pass:
     # several plans do eager work at build time (localCheckpoint of an
@@ -358,26 +131,11 @@ def main() -> None:
     # oracle harness re-executing its full SQL statement each pass.
     # (Materialized index FIXTURES under /tmp are still reused across
     # passes — deliberately: the index build is the amortized ingest
-    # step, the probe is the query being measured.)
-
-    # Three full interleaved passes, per-query minimum: GC pauses and
-    # external CPU bursts last seconds-to-minutes and would otherwise
-    # land on an arbitrary contiguous run of (sub-second) queries.
-    # Passes are minutes apart, so a burst cannot hit the same query
-    # twice; the minimum is the steady-state throughput number.
-    # (Measured cross-run variance on UDF-heavy keys is ~±0.2 s; the
-    # third pass tightens the min.)
-    times: dict[str, float] = {}
-    for _ in range(3):
-        for name in HEADLINE:
-            spec = REGISTRY.get(name)
-            if spec is None:
-                continue
-            t0 = time.perf_counter()
-            materialize(spec.fn(spark, sf_dir))
-            dt = round(time.perf_counter() - t0, 3)
-            if name not in times or dt < times[name]:
-                times[name] = dt
+    # step, the probe is the query being measured.)  Three passes:
+    # measured cross-run variance on UDF-heavy keys is ~±0.2 s, and the
+    # third pass tightens the min.
+    times = time_keys(
+        lambda name: materialize(REGISTRY[name].fn(spark, sf_dir)), keys, 3)
 
     line = json.dumps({
         "metric": "headline_wall_clock",
@@ -385,6 +143,7 @@ def main() -> None:
         "unit": "sec",
         "queries": times,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
     })
     # Armor against driver-side tail truncation (round-10 verdict: the
     # 244-key one-line JSON outgrew the driver's stdout tail buffer in

@@ -49,11 +49,22 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_every_registered_key_is_benched():
-    """Drift guard, CI-side: bench.py must time every REGISTRY key
-    (round-2 verdict found join_asof_tolerance registered but
-    unbenched).  Also: nothing benched that isn't registered."""
+def test_bench_selects_every_registered_key_by_default():
+    """bench.py times REGISTRY itself, in registration order."""
     import bench
 
-    assert sorted(set(REGISTRY) - set(bench.HEADLINE)) == []
-    assert sorted(set(bench.HEADLINE) - set(REGISTRY)) == []
+    assert bench.select_keys([]) == list(REGISTRY)
+
+
+def test_bench_key_subset_keeps_given_order():
+    import bench
+
+    keys = ["dedup_simhash", "scan_parquet", "tpch_q3_shape"]
+    assert bench.select_keys([",".join(keys)]) == keys
+
+
+def test_bench_unknown_key_exits_naming_it():
+    import bench
+
+    with pytest.raises(SystemExit, match="no_such_key"):
+        bench.select_keys(["scan_parquet,no_such_key"])

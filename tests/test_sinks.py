@@ -459,6 +459,28 @@ def test_update_postgres_tz_session_init(spark):
     assert any("CREATE TABLE" in s for s in called)
 
 
+def test_update_postgres_staging_swap_is_one_statement(spark, monkeypatch):
+    """With stage_and_rename the DROP and RENAME reach execute_sql as
+    ONE string: on a runner where every call is its own connection
+    (psql_runners), separate calls would leave readers without a table
+    between them and no table at all after a failure mid-swap."""
+    from pyspark.sql import DataFrameWriter
+
+    monkeypatch.setattr(DataFrameWriter, "save", lambda self, *a, **k: None)
+    called = []
+    assert update_postgres(
+        spark.range(1), "t", "s", "jdbc:postgresql://nowhere:1/db",
+        modified=STAMP, execute_sql=called.append, stage_and_rename=True,
+    ) is True
+    assert any('CREATE TABLE "s"."t__staging"' in c for c in called)
+    assert called[-2:] == [
+        'BEGIN; DROP TABLE IF EXISTS "s"."t" CASCADE; '
+        'ALTER TABLE "s"."t__staging" RENAME TO "t"; COMMIT',
+        comment_sql("s", "t", STAMP),
+    ]
+    assert "BEGIN" not in called
+
+
 def test_write_sorted_rowgroup_stats_disjoint(spark, tmp_path):
     """write_sorted must produce files whose row-group min/max ranges
     on the sort key are tight and pairwise disjoint ACROSS files —
@@ -584,60 +606,82 @@ def test_sas_encoding_alias(spark, tmp_path, recwarn):
         assert "Café" in f.read()
 
 
-def test_wrds_update_pq_sas7bdat_content_stamp_gates(spark, tmp_path):
+def test_wrds_update_pq_sas7bdat_content_stamp_gates(
+    spark, tmp_path, monkeypatch
+):
     """A16 end-to-end: wrds_update_pq over a sas7bdat source keys its
     incremental gate on the dataset's HEADER stamp. A touched (or
-    re-copied) file whose header didn't change must skip; a rewrite
-    with a new header timestamp must reload (mirrors the reference's
-    minimal_test.ipynb idempotency, wrds2pg/sas/metadata.py:79-113)."""
-    import os
-    import struct
+    re-copied) file whose header didn't change must skip without
+    reading the source; a rewrite with a new header timestamp must
+    reload (mirrors the reference's minimal_test.ipynb idempotency,
+    wrds2pg/sas/metadata.py:79-113)."""
     from datetime import datetime
 
-    from wrds2pg_spark.sources.sas7bdat import _MAGIC
-    from wrds2pg_spark.update import wrds_update_pq
+    import pandas as pd
 
-    def write_sas(path, modified_dt):
+    from wrds2pg_spark import update
+    from wrds2pg_spark.paths import get_pq_path
+    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
+
+    def write_sas(path, modified_dt, rets):
         secs = (modified_dt - datetime(1960, 1, 1)).total_seconds()
-        hdr = bytearray(400)
-        hdr[:32] = _MAGIC
-        hdr[35] = 0x33
-        hdr[37] = 0x01
-        hdr[168:176] = struct.pack("<d", 0.0)
-        hdr[176:184] = struct.pack("<d", secs)
-        path.write_bytes(bytes(hdr))
+        write_sas7bdat(
+            pd.DataFrame({"PERMNO": [1.0, 2.0], "RET": rets}), str(path),
+            modified_secs=secs)
 
-    # the schema sample runs read_fn on the driver while the source is
-    # read, so a skip that still opened the source would raise here
-    loaded = {"once": False}
-
-    def fake_read_sas(path, format=None, chunksize=None, iterator=None):
-        import pandas as pd
-
-        if loaded["once"]:
-            raise AssertionError("an up-to-date source was read")
-        yield pd.DataFrame({"PERMNO": [1.0, 2.0], "RET": [0.1, 0.2]})
+    def loaded():
+        back = spark.read.parquet(get_pq_path("funds", "crsp", data_dir))
+        return sorted(tuple(r) for r in back.collect())
 
     src = tmp_path / "funds.sas7bdat"
-    write_sas(src, datetime(2022, 5, 1, 10, 0, 0))
     data_dir = str(tmp_path / "lake")
+    write_sas(src, datetime(2022, 5, 1, 10, 0, 0), [0.1, 0.2])
+    assert update.wrds_update_pq(
+        spark, str(src), "funds", "crsp", data_dir=data_dir) is True
+    assert loaded() == [(1.0, 0.1), (2.0, 0.2)]
 
-    did = wrds_update_pq(
-        spark, str(src), "funds", "crsp", data_dir=data_dir,
-        read_fn=fake_read_sas)
-    assert did is True
+    def boom(*args, **kwargs):
+        raise AssertionError("an up-to-date source was read")
 
-    loaded["once"] = True
     os.utime(src, (1e9, 1.7e9))  # touched/copied: content unchanged
-    assert wrds_update_pq(
-        spark, str(src), "funds", "crsp", data_dir=data_dir,
-        read_fn=fake_read_sas) is False
+    with monkeypatch.context() as m:
+        m.setattr(update, "read_source", boom)
+        assert update.wrds_update_pq(
+            spark, str(src), "funds", "crsp", data_dir=data_dir) is False
 
-    loaded["once"] = False
-    write_sas(src, datetime(2022, 6, 1, 10, 0, 0))  # SAS rewrote it
+    write_sas(src, datetime(2022, 6, 1, 10, 0, 0), [0.3, 0.4])  # SAS rewrote it
+    assert update.wrds_update_pq(
+        spark, str(src), "funds", "crsp", data_dir=data_dir) is True
+    assert loaded() == [(1.0, 0.3), (2.0, 0.4)]
+
+
+def test_wrds_update_pq_sas7bdat_lake_all_missing_char_in_first_file(
+    spark, tmp_path
+):
+    """A char column that is all-missing in the first file is still a
+    string column: the schema is inferred from the raw SAS types, and
+    every file's batches are cast to it, so a later file's real
+    strings load instead of failing the Arrow read."""
+    import pandas as pd
+
+    from wrds2pg_spark.paths import get_pq_path
+    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_sas7bdat(
+        pd.DataFrame({"ID": [1.0, 2.0],
+                      "NM": pd.Series([None, None], dtype=object)}),
+        str(src / "a.sas7bdat"))
+    write_sas7bdat(pd.DataFrame({"ID": [3.0], "NM": ["x"]}),
+                   str(src / "b.sas7bdat"))
+    data_dir = str(tmp_path / "lake")
     assert wrds_update_pq(
-        spark, str(src), "funds", "crsp", data_dir=data_dir,
-        read_fn=fake_read_sas) is True
+        spark, str(src / "*.sas7bdat"), "t", "s", data_dir=data_dir) is True
+    back = spark.read.parquet(get_pq_path("t", "s", data_dir))
+    assert dict(back.dtypes) == {"id": "double", "nm": "string"}
+    assert sorted(tuple(r) for r in back.collect()) == [
+        (1.0, None), (2.0, None), (3.0, "x")]
 
 
 # --- small-file compaction (round 8) ---------------------------------------

@@ -36,52 +36,17 @@ def jvm_stats(spark):
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/marathon_probe.tsv"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        app_name="wrds2pg_spark_marathon_probe",
-        extra_conf={"spark.sql.files.maxPartitionBytes": "8m"},
-    )
-
-    def mat(df):
-        df.write.mode("overwrite").format("noop").save()
-
-    # Warm-up failures are logged, not swallowed (r10 advice): a key
-    # that breaks here silently skews the probe it exists to explain.
-    warm_dir = "/root/testdata/sf0.001"
-    for name in bench.HEADLINE:
-        spec = REGISTRY.get(name)
-        if spec is not None:
-            try:
-                mat(spec.fn(spark, warm_dir))
-            except Exception as exc:  # noqa: BLE001
-                print(f"[warm sf0.001] {name}: {type(exc).__name__}: {exc}",
-                      file=sys.stderr)
-    for _ in range(2):
-        for name in (
-            "dedup_minhash_lsh", "dedup_minhash_portable",
-            "dedup_minhash_capped", "dedup_containment_lsh",
-            "dedup_ngram_jaccard", "dedup_simhash",
-            "dedup_simhash_portable",
-            "dedup_embedding_cosine", "dedup_levenshtein",
-            "text_stats", "text_ngram_topk",
-            "ingest_q1_composite",
-        ):
-            spec = REGISTRY.get(name)
-            if spec is not None:
-                try:
-                    mat(spec.fn(spark, sf_dir))
-                except Exception as exc:  # noqa: BLE001
-                    print(f"[warm {sf_dir}] {name}: "
-                          f"{type(exc).__name__}: {exc}", file=sys.stderr)
+    keys = bench.select_keys([])
+    spark = get_spark(app_name="wrds2pg_spark_marathon_probe",
+                      extra_conf=bench.BENCH_CONF)
+    bench.warm(spark, keys, sf_dir)
 
     with open(out_path, "w", buffering=1) as out:
         out.write("pass\tidx\tkey\tsec\tt_wall\tgc_ms\tgc_n\theap_mb\n")
         for p in range(3):
-            for i, name in enumerate(bench.HEADLINE):
-                spec = REGISTRY.get(name)
-                if spec is None:
-                    continue
+            for i, name in enumerate(keys):
                 t0 = time.perf_counter()
-                mat(spec.fn(spark, sf_dir))
+                bench.materialize(REGISTRY[name].fn(spark, sf_dir))
                 dt = round(time.perf_counter() - t0, 3)
                 gc_ms, gc_n, heap = jvm_stats(spark)
                 out.write(f"{p}\t{i}\t{name}\t{dt}\t{time.time():.1f}"

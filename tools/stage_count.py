@@ -3,9 +3,9 @@ BASELINE.md floor decomposition: stages x per-stage quantum vs wall).
 
 Usage: python tools/stage_count.py SF_DIR k1,k2,...
 Prints one JSON line: {key: {"jobs": J, "stages": S, "wall_s": W}}.
-Walls here are single-shot (not min-of-2) — pair with
-weak_spark_bench.py for the headline times; this tool is for the
-STRUCTURE (how many scheduler quanta the plan pays).
+Walls here are single-shot — pair with ``python bench.py k1,k2,...``
+for the headline times; this tool is for the STRUCTURE (how many
+scheduler quanta the plan pays).
 """
 
 from __future__ import annotations

@@ -166,6 +166,18 @@ def ddl_script(
     return stmts
 
 
+def _swap_sql(schema: str, staging: str, table_name: str) -> str:
+    """The staging swap as ONE multi-statement string: one implicit
+    transaction on the psql runner (each ``execute_sql`` call is its own
+    connection there) and one explicit block elsewhere, so readers never
+    see the table missing and a failure leaves the old table."""
+    return (
+        f'BEGIN; DROP TABLE IF EXISTS "{schema}"."{table_name}" CASCADE; '
+        f'ALTER TABLE "{schema}"."{staging}" RENAME TO "{table_name}"; '
+        f'COMMIT'
+    )
+
+
 def update_postgres(
     df: DataFrame,
     table_name: str,
@@ -234,12 +246,7 @@ def update_postgres(
 
     if execute_sql is not None:
         if stage_and_rename:
-            execute_sql("BEGIN")
-            execute_sql(f'DROP TABLE IF EXISTS "{schema}"."{table_name}" CASCADE')
-            execute_sql(
-                f'ALTER TABLE "{schema}"."{target}" RENAME TO "{table_name}"'
-            )
-            execute_sql("COMMIT")
+            execute_sql(_swap_sql(schema, target, table_name))
         if modified:
             execute_sql(comment_sql(schema, table_name, modified))
     return True
@@ -400,13 +407,7 @@ def update_postgres_copy(
             shutil.rmtree(out_dir, ignore_errors=True)
 
     if stage_and_rename:
-        # ONE multi-statement string == one implicit transaction on
-        # the psql runner (and one explicit block elsewhere)
-        execute_sql(
-            f'BEGIN; DROP TABLE IF EXISTS "{schema}"."{table_name}" '
-            f'CASCADE; ALTER TABLE "{schema}"."{target}" RENAME TO '
-            f'"{table_name}"; COMMIT'
-        )
+        execute_sql(_swap_sql(schema, target, table_name))
     if modified:
         execute_sql(comment_sql(schema, table_name, modified))
     return True

@@ -25,7 +25,10 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["read_sas7bdat", "header_modified", "normalize_sas_chunk"]
+__all__ = [
+    "read_sas7bdat", "header_modified", "normalize_sas_chunk",
+    "infer_schema", "decode_file",
+]
 
 # the 32-byte sas7bdat magic (public binary spec: Shotwell/Hobbs
 # "SAS7BDAT Database Binary Format"; same constant pandas ships in
@@ -88,21 +91,80 @@ def normalize_sas_chunk(chunk):
     return chunk
 
 
-def _decode_files(chunksize: int, read_fn=None):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pandas as pd
+def _expand(path: str) -> list[str]:
+    """One file, a glob, or a directory of ``.sas7bdat`` files, sorted;
+    no match is a loud error."""
+    if os.path.isdir(path):
+        files = sorted(glob.glob(os.path.join(path, "*.sas7bdat")))
+    else:
+        files = sorted(glob.glob(path))
+    if not files:
+        raise FileNotFoundError(f"no sas7bdat files match {path!r}")
+    return files
 
-        read = read_fn or pd.read_sas
+
+def infer_schema(path: str):
+    """Spark schema of one file, sampled from its first chunk — the
+    PROC CONTENTS round-trip equivalent (wrds2pg/sas/metadata.py:8-48).
+
+    Char-vs-numeric comes from the RAW pandas dtypes: a char column
+    that is all-null in the sampled chunk collapses to float64 during
+    normalization (pandas re-infers under ``.map``), so inference after
+    normalization would type it double and later files with real
+    strings would fail the decode-side cast.  In a raw ``read_sas``
+    chunk, object dtype == SAS char."""
+    import pandas as pd
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    raw = next(iter(pd.read_sas(
+        path, format="sas7bdat", chunksize=1024, iterator=True)))
+    char_cols = {c.lower() for c in raw.columns if raw[c].dtype == object}
+    inferred = pa.Schema.from_pandas(
+        normalize_sas_chunk(raw), preserve_index=False)
+    return from_arrow_schema(pa.schema([
+        f.with_type(pa.string())
+        if (f.name in char_cols or pa.types.is_null(f.type)) else f
+        for f in inferred
+    ]))
+
+
+def decode_file(
+    path: str, chunksize: int, target: pa.Schema
+) -> Iterator[pa.RecordBatch]:
+    """Streaming per-file decode: ``pandas.read_sas`` chunks, normalized
+    and conformed to ``target`` — columns picked by name, cast to the
+    exact declared arrow types (pandas floats -> declared ints, an
+    all-null char chunk -> string)."""
+    import pandas as pd
+
+    for chunk in pd.read_sas(
+        path, format="sas7bdat", chunksize=chunksize, iterator=True
+    ):
+        batch = pa.RecordBatch.from_pandas(
+            normalize_sas_chunk(chunk), preserve_index=False)
+        cols = []
+        for f in target:
+            # get_field_index returns -1 for a missing name, and
+            # batch.column(-1) would SILENTLY serve the last column —
+            # fail loudly instead (the declared-vs-file mismatch a user
+            # hits first: SAS names are stored uppercase, this reader
+            # lower-cases them)
+            idx = batch.schema.get_field_index(f.name)
+            if idx < 0:
+                raise KeyError(
+                    f"sas7bdat: declared column {f.name!r} not in "
+                    f"{path!r} (file has {batch.schema.names}; note "
+                    f"names are lower-cased on read)")
+            cols.append(batch.column(idx).cast(f.type))
+        yield pa.RecordBatch.from_arrays(cols, schema=target)
+
+
+def _decode_files(chunksize: int, target: pa.Schema):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for path in batch.column("path").to_pylist():
-                reader = read(
-                    path, format="sas7bdat", chunksize=chunksize,
-                    iterator=True,
-                )
-                for chunk in reader:
-                    yield pa.RecordBatch.from_pandas(
-                        normalize_sas_chunk(chunk), preserve_index=False
-                    )
+                yield from decode_file(path, chunksize, target)
 
     return fn
 
@@ -113,36 +175,22 @@ def read_sas7bdat(
     *,
     chunksize: int = 262_144,
     schema=None,
-    read_fn=None,
 ) -> DataFrame:
     """Read one file, a glob, or a directory of ``.sas7bdat`` files.
 
     ``schema`` (StructType or DDL string) is required for multi-file
     reads to be planned without touching data; when omitted, the first
     file's first chunk is sampled driver-side to infer it (one small
-    read, mirroring the reference's PROC CONTENTS round-trip,
-    wrds2pg/sas/metadata.py:8-48).
-
-    ``read_fn`` substitutes the decoder (``pandas.read_sas``-shaped);
-    it is cloudpickled to executors — tests inject a fake, and a
-    faster public decoder could be slotted in the same way.
+    read, see ``infer_schema``).
     """
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.sas7bdat")))
-    else:
-        files = sorted(glob.glob(path))
-    if not files:
-        raise FileNotFoundError(f"no sas7bdat files match {path!r}")
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType, StructField, StructType
 
+    files = _expand(path)
     if schema is None:
-        import pandas as pd
-
-        read = read_fn or pd.read_sas
-        sample = next(
-            iter(read(files[0], format="sas7bdat",
-                      chunksize=1024, iterator=True))
-        )
-        schema = spark.createDataFrame(normalize_sas_chunk(sample)).schema
+        schema = infer_schema(files[0])
+    elif isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
 
     # Exactly one file per task, with NO exchange: parallelize with
     # numSlices=len(files) slices the path list 1-per-partition (the
@@ -153,11 +201,10 @@ def read_sas7bdat(
     # stays a streaming per-file pandas.read_sas(chunksize=...) so a
     # multi-GB SAS file never materializes in memory (the binaryFile
     # alternative holds whole files as rows; rejected).
-    from pyspark.sql.types import StringType, StructField, StructType
-
     paths_df = spark.createDataFrame(
         spark.sparkContext.parallelize([(f,) for f in files],
                                        len(files)),
         StructType([StructField("path", StringType())]),
     )
-    return paths_df.mapInArrow(_decode_files(chunksize, read_fn), schema)
+    return paths_df.mapInArrow(
+        _decode_files(chunksize, to_arrow_schema(schema)), schema)

@@ -40,31 +40,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+# the decode core is shared with the mapInArrow helper, imported, not
+# copied, so format("sas7bdat") and read_sas7bdat can never drift apart
+from wrds2pg_spark.sources.sas7bdat import _expand, decode_file, infer_schema
+
 __all__ = ["Sas7bdatDataSource", "register_sas7bdat"]
-
-
-def _expand(path: str) -> list[str]:
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.sas7bdat")))
-    else:
-        files = sorted(glob.glob(path))
-    if not files:
-        raise FileNotFoundError(f"no sas7bdat files match {path!r}")
-    return files
-
-
-def _decode_pandas(path: str, chunksize: int):
-    """Streaming per-file decode — the normalization contract is
-    sources/sas7bdat.py normalize_sas_chunk, imported, not copied, so
-    format("sas7bdat") and read_sas7bdat can never drift apart."""
-    import pandas as pd
-
-    from wrds2pg_spark.sources.sas7bdat import normalize_sas_chunk
-
-    for chunk in pd.read_sas(
-        path, format="sas7bdat", chunksize=chunksize, iterator=True
-    ):
-        yield normalize_sas_chunk(chunk)
 
 
 class _FilePartition(InputPartition):
@@ -84,31 +64,10 @@ class _Sas7bdatReader(DataSourceReader):
         return [_FilePartition(f) for f in _expand(self._path)]
 
     def read(self, partition) -> Iterator:
-        import pyarrow as pa
-
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        target = to_arrow_schema(self._schema)
-        for chunk in _decode_pandas(partition.path, self._chunksize):
-            batch = pa.RecordBatch.from_pandas(chunk, preserve_index=False)
-            # conform to the declared schema: column order by name,
-            # exact arrow types (pandas floats -> declared ints etc.).
-            # get_field_index returns -1 for a missing name, and
-            # batch.column(-1) would SILENTLY serve the last column —
-            # fail loudly instead (the declared-vs-file mismatch a
-            # user hits first: SAS names are stored uppercase, this
-            # reader lower-cases them).
-            cols = []
-            for f in target:
-                idx = batch.schema.get_field_index(f.name)
-                if idx < 0:
-                    raise KeyError(
-                        f"sas7bdat: declared column {f.name!r} not in "
-                        f"{partition.path!r} (file has "
-                        f"{batch.schema.names}; note names are "
-                        f"lower-cased on read)")
-                cols.append(batch.column(idx).cast(f.type))
-            yield pa.RecordBatch.from_arrays(cols, schema=target)
+        yield from decode_file(
+            partition.path, self._chunksize, to_arrow_schema(self._schema))
 
 
 class Sas7bdatDataSource(DataSource):
@@ -122,36 +81,10 @@ class Sas7bdatDataSource(DataSource):
         return "sas7bdat"
 
     def schema(self):
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        import pyarrow as pa
-
         path = self.options.get("path")
         if not path:
             raise ValueError("sas7bdat: .load(path) is required")
-        import pandas as pd
-
-        from wrds2pg_spark.sources.sas7bdat import normalize_sas_chunk
-
-        first = _expand(path)[0]
-        raw = next(iter(pd.read_sas(
-            first, format="sas7bdat", chunksize=1024, iterator=True)))
-        # Char-vs-numeric must come from the RAW pandas dtypes: a char
-        # column that is all-null in the sampled chunk collapses to
-        # float64 during normalization (pandas re-infers under .map),
-        # so post-normalization inference would type it double and
-        # later files with real strings would fail the read()-side
-        # cast.  In a raw read_sas chunk object dtype == SAS char.
-        char_cols = {c.lower() for c in raw.columns
-                     if raw[c].dtype == object}
-        sample = normalize_sas_chunk(raw)
-        inferred = pa.Schema.from_pandas(sample, preserve_index=False)
-        fields = [
-            f.with_type(pa.string())
-            if (f.name in char_cols or pa.types.is_null(f.type)) else f
-            for f in inferred
-        ]
-        return from_arrow_schema(pa.schema(fields))
+        return infer_schema(_expand(path)[0])
 
     def reader(self, schema) -> DataSourceReader:
         return _Sas7bdatReader(schema, self.options)

@@ -137,14 +137,10 @@ def resolve_encoding(
 
 def read_source(
     spark: SparkSession, source_path: str, encoding: str | None = None,
-    read_fn=None,
 ) -> DataFrame:
     """Pick a reader from the file extension.  ``encoding`` applies to
     CSV sources (the reference's ``encoding``/``sas_encoding``,
-    wrds2pg/api.py:48; parquet carries its own encoding).  ``read_fn``
-    substitutes the sas7bdat decoder (``pandas.read_sas``-shaped) —
-    the seam a faster public decoder slots into, and what lets tests
-    drive the update pipeline end-to-end without a SAS writer."""
+    wrds2pg/api.py:48; parquet carries its own encoding)."""
     p = source_path.lower()
     if p.endswith((".parquet", ".pq")) or os.path.isdir(source_path):
         return spark.read.parquet(source_path)
@@ -153,7 +149,7 @@ def read_source(
         # sas_encoding sets the remote SAS session; no session here)
         from wrds2pg_spark.sources.sas7bdat import read_sas7bdat
 
-        return read_sas7bdat(spark, source_path, read_fn=read_fn)
+        return read_sas7bdat(spark, source_path)
     if p.endswith((".csv", ".csv.gz")):
         reader = spark.read.option("header", "true")
         if encoding:
@@ -192,7 +188,6 @@ def wrds_update_pq(
     encoding: str | None = None,
     sas_schema: str | None = None,
     sas_encoding: str | None = None,
-    read_fn=None,
     **ingest_kwargs,
 ) -> bool:
     """Source file -> ingest options -> parquet lake table, gated on
@@ -213,7 +208,7 @@ def wrds_update_pq(
     if _up_to_date(modified, get_modified_pq(pq_path), force, pq_path):
         return False
     df = apply_options(
-        read_source(spark, source_path, encoding, read_fn=read_fn),
+        read_source(spark, source_path, encoding),
         IngestOptions(**ingest_kwargs),
     )
     return update_parquet(df, pq_path, modified, force=force)
@@ -234,7 +229,6 @@ def wrds_update_csv(
     sas_schema: str | None = None,
     sas_encoding: str | None = None,
     copy_encoding: str | None = None,
-    read_fn=None,
     **ingest_kwargs,
 ) -> bool:
     """Source file -> ingest options -> gzip CSV, stamp in mtime
@@ -251,7 +245,7 @@ def wrds_update_csv(
     if _up_to_date(modified, get_modified_csv(csv_path), force, csv_path):
         return False
     df = apply_options(
-        read_source(spark, source_path, encoding, read_fn=read_fn),
+        read_source(spark, source_path, encoding),
         IngestOptions(**ingest_kwargs),
     )
     return update_csv(
@@ -280,7 +274,6 @@ def wrds_update(
     encoding: str | None = None,
     sas_encoding: str | None = None,
     tz: str = "UTC",
-    read_fn=None,
     transport: str = "jdbc",
     copy_csv=None,
     **ingest_kwargs,
@@ -320,7 +313,7 @@ def wrds_update(
     if _up_to_date(modified, sink_modified, force, f"{schema}.{table}"):
         return False
     df = apply_options(
-        read_source(spark, source_path, encoding, read_fn=read_fn),
+        read_source(spark, source_path, encoding),
         IngestOptions(**ingest_kwargs),
     )
     if transport == "copy":
