@@ -684,6 +684,46 @@ def test_wrds_update_pq_sas7bdat_lake_all_missing_char_in_first_file(
         (1.0, None), (2.0, None), (3.0, "x")]
 
 
+def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(spark, tmp_path):
+    """A glob lake stamps as the newest header stamp of its files: a
+    second run over the unchanged lake skips without a Spark job, and
+    a file SAS rewrote with a newer header stamp reloads the lake."""
+    from datetime import datetime
+
+    import pandas as pd
+
+    from wrds2pg_spark.paths import get_pq_path
+    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
+
+    def write_sas(path, modified_dt, ids):
+        secs = (modified_dt - datetime(1960, 1, 1)).total_seconds()
+        write_sas7bdat(pd.DataFrame({"ID": ids}), str(path),
+                       modified_secs=secs)
+
+    src = tmp_path / "src"
+    src.mkdir()
+    write_sas(src / "a.sas7bdat", datetime(2022, 5, 1, 10, 0, 0), [1.0])
+    write_sas(src / "b.sas7bdat", datetime(2022, 5, 2, 10, 0, 0), [2.0])
+    lake, data_dir = str(src / "*.sas7bdat"), str(tmp_path / "lake")
+    assert wrds_update_pq(spark, lake, "t", "s", data_dir=data_dir) is True
+
+    sc = spark.sparkContext
+    group = "glob_lake_up_to_date"
+    sc.setJobGroup(group, "stamp check only")
+    try:
+        assert wrds_update_pq(
+            spark, lake, "t", "s", data_dir=data_dir) is False
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    write_sas(src / "a.sas7bdat", datetime(2022, 6, 1, 10, 0, 0), [3.0])
+    assert wrds_update_pq(spark, lake, "t", "s", data_dir=data_dir) is True
+    back = spark.read.parquet(get_pq_path("t", "s", data_dir))
+    assert sorted(r["id"] for r in back.collect()) == [2.0, 3.0]
+
+
 # --- small-file compaction (round 8) ---------------------------------------
 
 def test_compact_small_files_collapses_and_preserves(spark, tmp_path):

@@ -1636,16 +1636,12 @@ def _rag_emb_terms_sql(hx: str) -> list[str]:
 
 
 def _rag_oracle() -> str:
-    from wrds2pg_spark.operators.similarity import (
-        anchored_probe_cells, ivf_anchors,
+    from wrds2pg_spark.operators.similarity import anchored_probe_cells
+    from wrds2pg_spark.queries import (
+        _QVEC, _QVEC_SQL, _anchor_cell_sql, _emb_cos_sql,
     )
-    from wrds2pg_spark.queries import _EMB_DOT, _QVEC, _QVEC_SQL, _emb_cos_sql
 
-    anchors = ivf_anchors(_RAG_NLIST, _RAG_DIM)
-    dots = ", ".join(
-        _EMB_DOT.format(a="emb",
-                        b="[" + ", ".join(repr(x) for x in anc) + "]")
-        for anc in anchors)
+    ds, cell = _anchor_cell_sql("emb", _RAG_NLIST, _RAG_DIM)
     probes = ", ".join(
         str(c) for c in anchored_probe_cells(_QVEC, _RAG_NLIST, _RAG_NPROBE))
     emb_list = "[" + ", ".join(_rag_emb_terms_sql("hx")) + "]"
@@ -1676,8 +1672,8 @@ def _rag_oracle() -> str:
     e AS MATERIALIZED (SELECT doc_id, chunk_idx, {emb_list} AS emb FROM h),
     c AS MATERIALIZED (
         SELECT doc_id, chunk_idx, emb,
-               CAST(list_position(ds, list_max(ds)) - 1 AS INTEGER) AS cell
-        FROM (SELECT *, [{dots}] AS ds FROM e))
+               {cell}
+        FROM (SELECT *, {ds} FROM e))
     SELECT doc_id, chunk_idx,
            {_emb_cos_sql('emb', _QVEC_SQL)} AS cos_sim
     FROM c
@@ -1717,8 +1713,7 @@ def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     is O(corpus * nprobe / nlist) with zero shuffles regardless of
     corpus size."""
     from wrds2pg_spark.operators.similarity import (
-        anchored_cell_expr, anchored_probe_cells, cosine_similarity,
-        ivf_anchors,
+        _exact_topk, anchored_cell_expr, anchored_probe_cells, ivf_anchors,
     )
     from wrds2pg_spark.queries import _QVEC
     from wrds2pg_spark.sources.testdata import ensure_dir_fixture, fixture_tag
@@ -1746,18 +1741,9 @@ def pipeline_rag_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = ensure_dir_fixture(
         f"/tmp/wrds2pg_spark_fixtures/rag_ivf_{tag}", build)
     probe = anchored_probe_cells(_QVEC, _RAG_NLIST, _RAG_NPROBE)
-    q = F.array(*[F.lit(float(x)) for x in _QVEC])
-    return (
-        spark.read.parquet(index)
-        .filter(F.col("cell").isin(probe))
-        .select(
-            "doc_id", "chunk_idx",
-            F.round(cosine_similarity(F.col("embedding"), q), 6)
-            .alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), "doc_id", "chunk_idx")
-        .limit(_RAG_K)
-    )
+    cands = spark.read.parquet(index).filter(F.col("cell").isin(probe))
+    return _exact_topk(
+        cands, _QVEC, _RAG_K, "embedding", ["doc_id", "chunk_idx"])
 
 
 # ---------------------------------------------------------------------------

@@ -1490,23 +1490,11 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _semantic_cells_oracle(nlist: int = 16, dim: int = 64,
                            tau: float = 0.40) -> str:
-    from wrds2pg_spark.operators.similarity import ivf_anchors
-    from wrds2pg_spark.queries import _EMB_DOT, _emb_cos_sql
+    from wrds2pg_spark.queries import _anchor_cells_cte, _emb_cos_sql
 
-    anchors = ivf_anchors(nlist, dim)
-    dots = ", ".join(
-        _EMB_DOT.format(
-            a="embedding",
-            b="[" + ", ".join(repr(x) for x in anc) + "]",
-        )
-        for anc in anchors
-    )
     cos = _emb_cos_sql("a.embedding", "b.embedding", rounded=False)
     return f"""
-    WITH cells AS (
-      SELECT vec_id, embedding,
-             CAST(list_position(ds, list_max(ds)) - 1 AS INTEGER) AS cell
-      FROM (SELECT vec_id, embedding, [{dots}] AS ds FROM embeddings)),
+    WITH {_anchor_cells_cte(nlist, dim)},
     hits AS (
       SELECT b.vec_id AS vec_id,
              CAST(count(*) AS BIGINT) AS n_earlier_dups,

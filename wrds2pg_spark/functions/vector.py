@@ -5,29 +5,15 @@ DuckDB oracle compute on identical IEEE doubles (float->double casts
 are exact).  Final similarity values are O(1) magnitude, so a 6-decimal
 round makes cross-engine summation-order differences vanish.
 
-Two forms, same values:
-
-- ``dim=None`` (fallback): zip_with/aggregate higher-order functions.
-  CORRECT but SLOW on hot paths — HOF lambdas are evaluated
-  INTERPRETED per element and break whole-stage codegen (measured
-  ~18x slower than the unrolled form on a 20k x 64-dim scan at sf1).
-- ``dim=<n>`` (hot path): the dot/norm unrolled into a flat
-  ``getItem(i) * getItem(i)`` expression sum that stays inside
-  codegen.  The left-to-right addition order is identical to the HOF
-  fold (and to DuckDB's list_dot_product at 6-dp rounding), so
-  results are bit-compatible — every similarity operator passes the
-  same oracle check in either form.
-
-WHEN to pass ``dim`` — measured trade-off: an unrolled 100+-term
-tree pays a PER-QUERY-EXECUTION Janino compile (~0.3-1 s; the
-generated source embeds fresh expression ids, so the codegen cache
-misses across executions).  That is profitable when a pass does more
-data work than that — similarity_maxsim (512 terms over every row,
-38.9 s -> 2.2 s at sf1) and any production-scale scan — and a LOSS on
-the 2k-row sf0.1 bench corpus, where unrolling the ann_lsh probe
-regressed 0.17 s -> 1.33 s.  The registered bench keys therefore use
-the HOF form; pass ``dim`` when the corpus is big enough that compile
-time is noise.
+The dot and norm are zip_with/aggregate higher-order functions.  HOF
+lambdas evaluate INTERPRETED per element, but a dim-unrolled
+``getItem(i) * getItem(i)`` sum pays a PER-QUERY-EXECUTION Janino
+compile (~0.3-1 s; the generated source embeds fresh expression ids,
+so the codegen cache misses across executions): a loss on the 2k-row
+sf0.1 bench corpus (unrolling the ann_lsh probe regressed 0.17 s ->
+1.33 s), a win only when a pass does far more data work than that.
+The one such key, similarity_maxsim (512 terms over every row, 38.9 s
+-> 2.2 s at sf1), renders its own unrolled SQL.
 """
 
 from __future__ import annotations
@@ -42,28 +28,15 @@ def _as_double(arr: Column) -> Column:
     return F.transform(arr, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        acc = None
-        for i in range(dim):
-            t = a.getItem(i).cast("double") * b.getItem(i).cast("double")
-            acc = t if acc is None else acc + t
-        return acc
+def dot(a: Column, b: Column) -> Column:
     prods = F.zip_with(_as_double(a), _as_double(b), lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def l2_norm(a: Column, dim: int | None = None) -> Column:
-    if dim is not None:
-        acc = None
-        for i in range(dim):
-            x = a.getItem(i).cast("double")
-            acc = x * x if acc is None else acc + x * x
-        return F.sqrt(acc)
-    ad = _as_double(a)
-    sq = F.aggregate(ad, F.lit(0.0), lambda acc, x: acc + x * x)
+def l2_norm(a: Column) -> Column:
+    sq = F.aggregate(_as_double(a), F.lit(0.0), lambda acc, x: acc + x * x)
     return F.sqrt(sq)
 
 
-def cosine_similarity(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (l2_norm(a, dim) * l2_norm(b, dim))
+def cosine_similarity(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2_norm(a) * l2_norm(b))

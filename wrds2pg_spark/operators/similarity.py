@@ -1,24 +1,32 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>): candidate
+generators plus one exact re-rank.
 
-- brute_force_topk: exact cosine top-k against a query vector —
-  a single narrow map + TakeOrdered; the correctness baseline.
-- lsh_topk: random-hyperplane LSH bucketing — the scale path: the
-  query probes only its own bucket (and optionally neighbors), so the
-  scan prunes to ~N/2^nbits candidates.  Hyperplanes come from a
-  deterministic integer formula so results are reproducible anywhere.
-- blocked_pairs: exact all-pairs cosine within a blocking key (label)
-  — the embedding near-dup primitive.
+Every cosine top-k here is two stages (the split REPOSE and
+continuously adaptive similarity search build on):
+
+1. a candidate generator decides which rows are scored —
+   - the full scan (``brute_force_topk``, the correctness baseline);
+   - a hyperplane-LSH bucket set (``lsh_topk``, ``lsh_topk_indexed``);
+   - an IVF cell set, fitted KMeans (``ivf_topk``,
+     ``ivf_topk_indexed``) or the deterministic anchors
+     (``ivf_anchored_topk``);
+2. ``_exact_topk`` ranks the candidates: exact cosine against the
+   query, rounded to 6 dp, then TakeOrderedAndProject on
+   (cos desc, ids) — no full sort, no corpus shuffle.
+
+PQ (``pq_adc_topk``, ``ivfpq_topk_indexed``) ranks by its approximate
+ADC distance instead, from one shared query lookup table.  Planes,
+anchors and codebooks are integer formulas, so every stage is
+reproducible in any engine and oracle-checkable; only the fitted KMeans
+cells are engine-specific.
 
 Scan-side dots against a literal query vector run through
-F.zip_with/F.aggregate (or the dim-unrolled form — functions/vector.py
-keeps both; HOF lambdas evaluate interpreted, so the choice is
-measured per shape).  PAIR generation is different: per-block
-pairwise cosines run as vectorized Arrow kernels with sequential
-accumulation, which is bitwise-identical to the SQL fold and 4-100x
-faster than per-pair interpreted lambdas.  At real scale the
-brute-force path is what you broadcast-join against a handful of
-query vectors; LSH/IVF/PQ prune or compress when the query set or
-corpus is large.
+F.zip_with/F.aggregate (functions/vector.py).  PAIR generation
+(``blocked_pairs``, ``lsh_blocked_pairs``, ``lsh_incremental_pairs``)
+is different: per-block pairwise cosines run in one vectorized Arrow
+kernel (``_pair_cos``) with sequential accumulation, which is
+bitwise-identical to the SQL fold and 4-100x faster than per-pair
+interpreted lambdas.
 """
 
 from __future__ import annotations
@@ -30,7 +38,7 @@ from pyspark.sql import functions as F
 
 from wrds2pg_spark.session import lineage_cut
 
-from wrds2pg_spark.functions.vector import cosine_similarity, dot, l2_norm
+from wrds2pg_spark.functions.vector import cosine_similarity, dot
 
 __all__ = [
     "brute_force_topk", "lsh_topk", "ivf_topk", "blocked_pairs",
@@ -51,6 +59,20 @@ def _query_col(query_vec: list[float]):
     return F.lit([float(x) for x in query_vec])
 
 
+def _exact_topk(cands: DataFrame, query_vec: list[float], k: int,
+                vec, id_cols: list[str]) -> DataFrame:
+    """The one exact re-rank every cosine top-k ends in: narrow
+    projection of ``round(cosine(vec, query), 6)`` over the candidate
+    rows + TakeOrderedAndProject on (cos_sim desc, ids).  ``vec`` is a
+    column name or a derived Column (a prefix slice, say)."""
+    cos = F.round(cosine_similarity(vec, _query_col(query_vec)), 6)
+    return (
+        cands.select(*id_cols, cos.alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), *id_cols)
+        .limit(k)
+    )
+
+
 def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -58,21 +80,18 @@ def brute_force_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact cosine top-k: narrow projection + TakeOrderedAndProject
-    (no full sort, no shuffle of the corpus)."""
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
-    return (
-        df.select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    """Exact cosine top-k: every row is a candidate."""
+    return _exact_topk(df, query_vec, k, vec_col, [id_col])
 
 
 def hyperplane(plane_idx: int, dim: int) -> list[float]:
     """Deterministic pseudo-random hyperplane — pure integer formula,
     reproducible in any engine/language (no RNG state)."""
     return [(((i * 31 + plane_idx * 17 + 7) % 13) - 6) / 6.0 for i in range(dim)]
+
+
+def _planes(nbits: int, dim: int) -> list[list[float]]:
+    return [hyperplane(j, dim) for j in range(nbits)]
 
 
 def _bucket_expr(vec, planes: list[list[float]]):
@@ -136,7 +155,7 @@ def probe_buckets(query_vec: list[float], nbits: int, radius: int = 1) -> list[s
     probing adjacent buckets recovers most of the recall a single
     bucket loses, without touching more than (1 + nbits) / 2^nbits of
     the corpus at radius 1."""
-    planes = [hyperplane(j, len(query_vec)) for j in range(nbits)]
+    planes = _planes(nbits, len(query_vec))
     qbits = "".join(
         "1" if sum(a * b for a, b in zip(planes[j], query_vec)) >= 0 else "0"
         for j in range(nbits)
@@ -169,21 +188,34 @@ def lsh_topk(
     falls in the query's multi-probe bucket set.  Recall trades off
     with nbits/radius; the candidate scan is ~(1+nbits)/2^nbits of the
     corpus at radius 1 (vs a full scan for brute force)."""
-    dim = len(query_vec)
-    planes = [hyperplane(j, dim) for j in range(nbits)]
+    planes = _planes(nbits, len(query_vec))
     probes = probe_buckets(query_vec, nbits, radius)
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
     # signature via the Arrow kernel (bitwise == _bucket_expr); only
     # the ~(1+nbits)/2^nbits survivors pay the JVM cosine.
-    return (
+    cands = (
         df.withColumn(
             "__bucket", _bucket_sig_udf(planes)(F.col(vec_col)))
         .filter(F.col("__bucket").isin(probes))
-        .select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
     )
+    return _exact_topk(cands, query_vec, k, vec_col, [id_col])
+
+
+def _pair_cos(A: "np.ndarray", B: "np.ndarray") -> "np.ndarray":
+    """len(A) x len(B) cosines of two float64 row sets.  The dots and
+    both norms accumulate in ONE sequential per-dimension loop (acc
+    starts at 0 and adds left-to-right), which is bitwise equal to the
+    SQL fold ``aggregate(zip_with(..), 0.0, acc + x)``, so a threshold
+    on the RAW cosine agrees with the oracle's."""
+    import numpy as np
+
+    G = np.zeros((len(A), len(B)))
+    na = np.zeros(len(A))
+    nb = np.zeros(len(B))
+    for j in range(A.shape[1]):
+        G += A[:, j:j + 1] * B[:, j]
+        na += A[:, j] * A[:, j]
+        nb += B[:, j] * B[:, j]
+    return G / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
 
 
 def _block_pairs_kernel(block_name: str, id_col: str, threshold: float,
@@ -208,13 +240,7 @@ def _block_pairs_kernel(block_name: str, id_col: str, threshold: float,
                 "raw_cos": pd.Series(dtype="float64"),
             })
         V = np.vstack(pdf["__v"].to_numpy()).astype(np.float64)
-        G = np.zeros((n, n))
-        nrm = np.zeros(n)
-        for j in range(V.shape[1]):               # sequential: == the
-            G += V[:, j:j + 1] * V[:, j]          # SQL fold, bitwise
-            nrm += V[:, j] * V[:, j]
-        nrm = np.sqrt(nrm)
-        cos = G / (nrm[:, None] * nrm[None, :])
+        cos = _pair_cos(V, V)
         ia, ib = np.triu_indices(n, 1)            # sorted ids => a < b
         keep = cos[ia, ib] >= threshold
         ids = pdf[id_col].to_numpy()
@@ -308,7 +334,7 @@ def build_lsh_index(
     the first row would put a driver-side action inside a builder
     (the no-collect discipline, tests/test_plans.py)."""
     (
-        _lsh_index_rows(df, nbits, dim, vec_col, id_col)
+        df.select(id_col, vec_col, _bucket_col(vec_col, nbits, dim))
         .write.mode("overwrite").partitionBy("bucket").parquet(path)
     )
 
@@ -334,33 +360,37 @@ def upsert_lsh_index(
     different nbits would silently shard arrivals into a foreign
     bucket namespace.  The listing check below catches an nbits
     mismatch against the existing partition names."""
-    _check_partition_values(
-        path, "bucket",
-        lambda v: len(v) == nbits + 1,
-        f"existing bucket signatures are not {nbits} bits — "
-        "upsert nbits differs from the build-time value")
+    _check_nbits(path, nbits, "upsert")
     (
-        _lsh_index_rows(arrivals, nbits, dim, vec_col, id_col)
+        arrivals.select(id_col, vec_col, _bucket_col(vec_col, nbits, dim))
         .write.mode("append").partitionBy("bucket").parquet(path)
     )
 
 
-def _lsh_index_rows(df: DataFrame, nbits: int, dim: int,
-                    vec_col: str, id_col: str) -> DataFrame:
-    """The index row projection shared by build_lsh_index and
-    upsert_lsh_index — ONE definition of the bucket encoding, so an
-    encoding change (e.g. the v1→v2 'b'-prefix bump) can never apply
-    to build but not upsert.  The 'b' prefix keeps the partition
-    value unambiguously a STRING: an all-digit bit-string like
-    '01100001' would be read back as IntegerType by partition-type
-    inference (leading zeros stripped), leaving isin(string probes)
-    to work only through implicit coercion."""
-    planes = [hyperplane(j, dim) for j in range(nbits)]
-    return df.select(
-        F.col(id_col), F.col(vec_col),
-        F.concat(F.lit("b"),
-                 _bucket_sig_udf(planes)(F.col(vec_col))).alias("bucket"),
-    )
+def _bucket_col(vec_col: str, nbits: int, dim: int):
+    """The LSH index's partition value, 'b' + the hyperplane signature
+    — ONE definition for build, upsert and the incremental probe, so
+    an encoding change (e.g. the v1→v2 'b'-prefix bump) can never
+    apply to one but not the others.  The 'b' prefix keeps the
+    partition value unambiguously a STRING: an all-digit bit-string
+    like '01100001' would be read back as IntegerType by
+    partition-type inference (leading zeros stripped), leaving
+    isin(string probes) to work only through implicit coercion."""
+    return F.concat(
+        F.lit("b"), _bucket_sig_udf(_planes(nbits, dim))(F.col(vec_col))
+    ).alias("bucket")
+
+
+def _check_nbits(path: str, nbits: int, caller: str) -> None:
+    """A different nbits than the build's would compute signatures in
+    a foreign bucket namespace: arrivals land in buckets no probe
+    reads, and probes return zero pairs.  The partition names carry
+    the build-time width, so the listing catches it."""
+    _check_partition_values(
+        path, "bucket",
+        lambda v: len(v) == nbits + 1,
+        f"existing bucket signatures are not {nbits} bits — "
+        f"{caller} nbits differs from the index's build-time value")
 
 
 def lsh_incremental_pairs(
@@ -404,18 +434,9 @@ def lsh_incremental_pairs(
     compare RAW doubles, display rounds once."""
     import numpy as np
 
-    # same guard as upsert_lsh_index: a probe nbits that differs from
-    # the build-time value would compute signatures in a foreign
-    # bucket namespace and silently return zero pairs
-    _check_partition_values(
-        index_path, "bucket",
-        lambda v: len(v) == nbits + 1,
-        f"existing bucket signatures are not {nbits} bits — "
-        "probe nbits differs from the index's build-time value")
-    planes = [hyperplane(j, dim) for j in range(nbits)]
+    _check_nbits(index_path, nbits, "probe")
     ar = arrivals.select(
-        F.concat(F.lit("b"),
-                 _bucket_sig_udf(planes)(F.col(vec_col))).alias("bucket"),
+        _bucket_col(vec_col, nbits, dim),
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         F.lit(1).alias("__side"),
@@ -438,16 +459,9 @@ def lsh_incremental_pairs(
         b = pdf[pdf["__side"] == 1]
         if not len(a) or not len(b):
             return empty
-        A = np.vstack(a["__v"].to_numpy()).astype(np.float64)
-        B = np.vstack(b["__v"].to_numpy()).astype(np.float64)
-        G = np.zeros((len(A), len(B)))
-        na = np.zeros(len(A))
-        nb = np.zeros(len(B))
-        for j in range(A.shape[1]):               # sequential: == the
-            G += A[:, j:j + 1] * B[:, j]          # SQL fold, bitwise
-            na += A[:, j] * A[:, j]
-            nb += B[:, j] * B[:, j]
-        cos = G / (np.sqrt(na)[:, None] * np.sqrt(nb)[None, :])
+        cos = _pair_cos(
+            np.vstack(a["__v"].to_numpy()).astype(np.float64),
+            np.vstack(b["__v"].to_numpy()).astype(np.float64))
         ia, ib = np.nonzero(cos >= threshold)
         if not len(ia):
             return empty
@@ -485,15 +499,9 @@ def lsh_topk_indexed(
     partition column prunes to those directories at file-listing time
     — the scan never opens the other 2^nbits - (1+nbits) buckets."""
     probes = ["b" + p for p in probe_buckets(query_vec, nbits, radius)]
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
-    return (
-        spark.read.parquet(index_path)
-        .filter(F.col("bucket").isin(probes))
-        .select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    cands = spark.read.parquet(index_path).filter(
+        F.col("bucket").isin(probes))
+    return _exact_topk(cands, query_vec, k, vec_col, [id_col])
 
 
 def build_ivf_index(
@@ -513,25 +521,13 @@ def build_ivf_index(
     import json
     import os
 
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
-    model = KMeans(
-        k=nlist, seed=seed, featuresCol="__feat", predictionCol="__cell"
-    ).fit(fit_on)
+    cells, centers = _kmeans_cells(
+        df, nlist, seed, vec_col, id_col, fit_fraction)
     (
-        model.transform(feat)
+        cells
         .select(F.col(id_col), F.col(vec_col), F.col("__cell").alias("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
     )
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
     with open(os.path.join(path, "_ivf_centroids.json"), "w") as f:
         json.dump(centers, f)
     return centers
@@ -554,20 +550,43 @@ def ivf_topk_indexed(
 
     with open(os.path.join(index_path, "_ivf_centroids.json")) as f:
         centers = json.load(f)
+    cands = spark.read.parquet(index_path).filter(
+        F.col("cell").isin(_nearest_cells(centers, query_vec, nprobe)))
+    return _exact_topk(cands, query_vec, k, vec_col, [id_col])
+
+
+def _kmeans_cells(df: DataFrame, nlist: int, seed: int, vec_col: str,
+                  id_col: str, fit_fraction: float | None = None):
+    """Seeded KMeans over ``vec_col`` (fit on a ``fit_fraction`` sample
+    when given; the assignment still covers every row): returns the
+    (id, vec, __feat, __cell) rows and the centroids as floats."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = df.select(
+        F.col(id_col), F.col(vec_col),
+        array_to_vector(
+            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        ).alias("__feat"),
+    )
+    fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
+    model = KMeans(
+        k=nlist, seed=seed, featuresCol="__feat", predictionCol="__cell"
+    ).fit(fit_on)
+    centers = [[float(x) for x in c] for c in model.clusterCenters()]
+    return model.transform(feat), centers
+
+
+def _nearest_cells(centers: list[list[float]], query_vec: list[float],
+                   nprobe: int) -> list[int]:
+    """The ``nprobe`` centroids nearest the query by squared L2, ranked
+    driver-side (nlist entries — trivially small); ties keep the lower
+    cell id."""
     d2 = [
         (i, sum((c - q) ** 2 for c, q in zip(center, query_vec)))
         for i, center in enumerate(centers)
     ]
-    probe = [i for i, _ in sorted(d2, key=lambda t: t[1])[:nprobe]]
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
-    return (
-        spark.read.parquet(index_path)
-        .filter(F.col("cell").isin(probe))
-        .select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return [i for i, _ in sorted(d2, key=lambda t: t[1])[:nprobe]]
 
 
 def ivf_anchors(nlist: int, dim: int) -> list[list[float]]:
@@ -637,17 +656,10 @@ def ivf_anchored_topk(
     prunes to rows whose argmax-dot cell is in the query's nprobe
     probe set — the same inverted-file shape as the fitted path, with
     every stage reproducible cross-engine."""
-    dim = len(query_vec)
-    anchors = ivf_anchors(nlist, dim)
+    anchors = ivf_anchors(nlist, len(query_vec))
     probe = anchored_probe_cells(query_vec, nlist, nprobe)
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
-    return (
-        df.filter(anchored_cell_expr(vec_col, anchors).isin(probe))
-        .select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    cands = df.filter(anchored_cell_expr(vec_col, anchors).isin(probe))
+    return _exact_topk(cands, query_vec, k, vec_col, [id_col])
 
 
 # ---------------------------------------------------------------------------
@@ -677,6 +689,25 @@ def pq_codebook(sub_idx: int, ksub: int, subdim: int) -> list[list[float]]:
         ]
         for k in range(ksub)
     ]
+
+
+def _pq_luts(query_vec: list[float], m: int, ksub: int) -> list[list[float]]:
+    """The query's m x ksub ADC lookup table: exact squared distance
+    from each query subvector to each codebook entry, accumulated
+    left to right (driver-side, m*ksub*subdim float ops).  The oracle
+    twins render these same floats as literals."""
+    subdim = len(query_vec) // m
+    luts = []
+    for i in range(m):
+        sub = query_vec[i * subdim:(i + 1) * subdim]
+        lut = []
+        for c in pq_codebook(i, ksub, subdim):
+            acc = 0.0
+            for x, y in zip(sub, c):
+                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
+            lut.append(acc)
+        luts.append(lut)
+    return luts
 
 
 def _pq_codes_mins(V: "np.ndarray", m: int, ksub: int):
@@ -782,16 +813,7 @@ def pq_adc_topk(
     import pandas as pd
     from collections.abc import Iterator
 
-    dim = len(query_vec)
-    subdim = dim // m
-    luts = np.empty((m, ksub), dtype=np.float64)
-    for i in range(m):
-        sub = query_vec[i * subdim:(i + 1) * subdim]
-        for kk, c in enumerate(pq_codebook(i, ksub, subdim)):
-            acc = 0.0
-            for x, y in zip(sub, c):
-                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-            luts[i, kk] = acc
+    luts = np.array(_pq_luts(query_vec, m, ksub), dtype=np.float64)
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -951,18 +973,9 @@ def ivfpq_topk_indexed(
     prunes the scan to nprobe directories, and the per-row score is m
     integer unpack-and-lookup expressions over one BIGINT column —
     pure codegen, no arrays, no floats read from storage."""
-    dim = len(query_vec)
-    subdim = dim // m
     probe = anchored_probe_cells(query_vec, nlist, nprobe)
     score = None
-    for i in range(m):
-        sub = query_vec[i * subdim:(i + 1) * subdim]
-        lut = []
-        for c in pq_codebook(i, ksub, subdim):
-            acc = 0.0
-            for x, y in zip(sub, c):
-                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-            lut.append(acc)
+    for i, lut in enumerate(_pq_luts(query_vec, m, ksub)):
         code = F.expr(f"pq_code div {ksub ** i}") % ksub
         term = F.element_at(
             F.array(*[F.lit(x) for x in lut]), (code + 1).cast("int"))
@@ -1005,10 +1018,9 @@ def lsh_blocked_pairs(
     hub bucket would not fit one task.  Thresholding uses RAW
     doubles (both engines compute bitwise-equal cosines); the
     reported cos_sim rounds once, JVM-side."""
-    planes = [hyperplane(j, dim) for j in range(nbits)]
     prepped = df.select(
         F.col(id_col),
-        _bucket_sig_udf(planes)(F.col(vec_col)).alias("bucket"),
+        _bucket_sig_udf(_planes(nbits, dim))(F.col(vec_col)).alias("bucket"),
         F.col(vec_col).alias("__v"),
     )
     if max_block_size is not None:
@@ -1058,32 +1070,7 @@ def ivf_topk(
     sample and the cell assignment is materialized once as an index
     column (partition the lake by cell for real deployments); here it
     rides the query for self-containment."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    model = KMeans(
-        k=nlist, seed=seed, featuresCol="__feat", predictionCol="__cell"
-    ).fit(feat)
-
-    centers = model.clusterCenters()
-    d2 = [
-        (i, sum((c - q) ** 2 for c, q in zip(center, query_vec)))
-        for i, center in enumerate(centers)
-    ]
-    probe = [i for i, _ in sorted(d2, key=lambda t: t[1])[:nprobe]]
-
-    q = _query_col(query_vec)
-    cos = F.round(cosine_similarity(F.col(vec_col), q), 6).alias("cos_sim")
-    return (
-        model.transform(feat)
-        .filter(F.col("__cell").isin(probe))
-        .select(F.col(id_col), cos)
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    cells, centers = _kmeans_cells(df, nlist, seed, vec_col, id_col)
+    cands = cells.filter(
+        F.col("__cell").isin(_nearest_cells(centers, query_vec, nprobe)))
+    return _exact_topk(cands, query_vec, k, vec_col, [id_col])

@@ -1906,27 +1906,46 @@ def _lsh_oracle() -> str:
     """
 
 
+def _recall_at_k(exact: DataFrame, approx: DataFrame, k: int) -> DataFrame:
+    """recall@k of an approximate top-k against the exact one: their
+    vec_id overlap as one (k, n_overlap, recall_at_k) row."""
+    n = F.count(F.lit(1))
+    return exact.select("vec_id").join(approx.select("vec_id"), "vec_id").agg(
+        F.lit(k).cast("long").alias("k"),
+        n.cast("long").alias("n_overlap"),
+        (n.cast("double") / k).alias("recall_at_k"),
+    )
+
+
+def _recall_at_k_sql(approx: str, k: int = 20, ctes: str = "") -> str:
+    """DuckDB twin of _recall_at_k against the exact cosine top-k of
+    _QVEC: ``approx`` is the approximate side's ``SELECT vec_id ...
+    LIMIT k`` and ``ctes`` any CTEs it reads."""
+    head = f"{ctes},\n    " if ctes else ""
+    return f"""
+    WITH {head}exact AS (
+      SELECT vec_id FROM embeddings
+      ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
+      LIMIT {k}),
+    approx AS ({approx})
+    SELECT CAST({k} AS BIGINT) AS k,
+           CAST(count(*) AS BIGINT) AS n_overlap,
+           CAST(count(*) AS DOUBLE) / {k} AS recall_at_k
+    FROM exact JOIN approx USING (vec_id)
+    """
+
+
 def _recall_oracle() -> str:
     from wrds2pg_spark.operators.similarity import probe_buckets
 
     nbits, k = 8, 20
     bucket = _bucket_bits_sql(nbits)
     probes = ", ".join(f"'{b}'" for b in probe_buckets(_QVEC, nbits, radius=1))
-    return f"""
-    WITH exact AS (
-      SELECT vec_id FROM embeddings
-      ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT {k}),
-    approx AS (
+    return _recall_at_k_sql(f"""
       SELECT vec_id FROM embeddings
       WHERE ({bucket}) IN ({probes})
       ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT {k})
-    SELECT CAST({k} AS BIGINT) AS k,
-           CAST(count(*) AS BIGINT) AS n_overlap,
-           CAST(count(*) AS DOUBLE) / {k} AS recall_at_k
-    FROM exact JOIN approx USING (vec_id)
-    """
+      LIMIT {k}""", k)
 
 
 @register("similarity_recall_at_k", oracle=_recall_oracle())
@@ -1942,13 +1961,9 @@ def similarity_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     k = 20
-    exact = brute_force_topk(emb, _QVEC, k=k).select("vec_id")
-    approx = lsh_topk(emb, _QVEC, k=k, nbits=8, radius=1).select("vec_id")
-    return exact.join(approx, "vec_id").agg(
-        F.lit(k).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_overlap"),
-        (F.count(F.lit(1)).cast("double") / k).alias("recall_at_k"),
-    )
+    return _recall_at_k(
+        brute_force_topk(emb, _QVEC, k=k),
+        lsh_topk(emb, _QVEC, k=k, nbits=8, radius=1), k)
 
 
 _MRL_DIM = 16  # serving prefix width for the matryoshka audit
@@ -1956,21 +1971,11 @@ _MRL_DIM = 16  # serving prefix width for the matryoshka audit
 
 @register(
     "similarity_matryoshka_recall",
-    oracle=f"""
-    WITH exact AS (
-      SELECT vec_id FROM embeddings
-      ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT 20),
-    approx AS (
+    oracle=_recall_at_k_sql(f"""
       SELECT vec_id FROM embeddings
       ORDER BY {_emb_cos_sql(f'embedding[1:{_MRL_DIM}]',
                              f'({_QVEC_SQL})[1:{_MRL_DIM}]')} DESC, vec_id
-      LIMIT 20)
-    SELECT CAST(20 AS BIGINT) AS k,
-           CAST(count(*) AS BIGINT) AS n_overlap,
-           CAST(count(*) AS DOUBLE) / 20 AS recall_at_k
-    FROM exact JOIN approx USING (vec_id)
-    """,
+      LIMIT 20"""),
 )
 def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka / prefix-dimension serving audit: recall@20 of
@@ -1986,63 +1991,53 @@ def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     query vector keeps even the approximation's quality
     oracle-checkable."""
     from wrds2pg_spark.operators.similarity import (
-        brute_force_topk, cosine_similarity,
+        _exact_topk, brute_force_topk,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     k = 20
-    exact = brute_force_topk(emb, _QVEC, k=k).select("vec_id")
-    qpre = F.array(*[F.lit(x) for x in _QVEC[:_MRL_DIM]])
-    pre_cos = F.round(
-        cosine_similarity(F.slice(F.col("embedding"), 1, _MRL_DIM), qpre), 6)
-    approx = (
-        emb.select("vec_id", pre_cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
-        .select("vec_id")
-    )
-    return exact.join(approx, "vec_id").agg(
-        F.lit(k).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_overlap"),
-        (F.count(F.lit(1)).cast("double") / k).alias("recall_at_k"),
-    )
+    prefix = F.slice(F.col("embedding"), 1, _MRL_DIM)
+    return _recall_at_k(
+        brute_force_topk(emb, _QVEC, k=k),
+        _exact_topk(emb, _QVEC[:_MRL_DIM], k, prefix, ["vec_id"]), k)
+
+
+def _anchor_cell_sql(col: str, nlist: int, dim: int,
+                     ds: str = "ds") -> tuple[str, str]:
+    """The anchored IVF cell (operators/similarity.py
+    anchored_cell_expr) as DuckDB SQL.  Two parts, because the argmax
+    reads the anchor-dot list twice and a subquery binds it ONCE as
+    ``ds``: (``[dots] AS ds``, ``<argmax of ds> AS cell``)."""
+    from wrds2pg_spark.operators.similarity import ivf_anchors
+
+    dots = ", ".join(
+        _EMB_DOT.format(a=col, b="[" + ", ".join(repr(x) for x in anc) + "]")
+        for anc in ivf_anchors(nlist, dim))
+    return (f"[{dots}] AS {ds}",
+            f"CAST(list_position({ds}, list_max({ds})) - 1 AS INTEGER)"
+            " AS cell")
+
+
+def _anchor_cells_cte(nlist: int, dim: int = 64) -> str:
+    """``cells``: every embeddings row with its anchored cell."""
+    ds, cell = _anchor_cell_sql("embedding", nlist, dim)
+    return f"""cells AS (
+      SELECT vec_id, embedding,
+             {cell}
+      FROM (SELECT vec_id, embedding, {ds} FROM embeddings))"""
 
 
 def _ivf_recall_oracle(nlist: int = 16, nprobe: int = 2, k: int = 20) -> str:
-    from wrds2pg_spark.operators.similarity import (
-        anchored_probe_cells, ivf_anchors,
-    )
+    from wrds2pg_spark.operators.similarity import anchored_probe_cells
 
-    anchors = ivf_anchors(nlist, 64)
-    dots = ", ".join(
-        _EMB_DOT.format(
-            a="embedding",
-            b="[" + ", ".join(repr(x) for x in anc) + "]",
-        )
-        for anc in anchors
-    )
     probes = ", ".join(
         str(c) for c in anchored_probe_cells(_QVEC, nlist, nprobe)
     )
-    return f"""
-    WITH cells AS (
-      SELECT vec_id, embedding,
-             CAST(list_position(ds, list_max(ds)) - 1 AS INTEGER) AS cell
-      FROM (SELECT vec_id, embedding, [{dots}] AS ds FROM embeddings)),
-    exact AS (
-      SELECT vec_id FROM embeddings
-      ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT {k}),
-    approx AS (
+    return _recall_at_k_sql(f"""
       SELECT vec_id FROM cells
       WHERE cell IN ({probes})
       ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT {k})
-    SELECT CAST({k} AS BIGINT) AS k,
-           CAST(count(*) AS BIGINT) AS n_overlap,
-           CAST(count(*) AS DOUBLE) / {k} AS recall_at_k
-    FROM exact JOIN approx USING (vec_id)
-    """
+      LIMIT {k}""", k, ctes=_anchor_cells_cte(nlist))
 
 
 @register("similarity_ivf_recall_at_k", oracle=_ivf_recall_oracle())
@@ -2061,15 +2056,9 @@ def similarity_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     k = 20
-    exact = brute_force_topk(emb, _QVEC, k=k).select("vec_id")
-    approx = ivf_anchored_topk(
-        emb, _QVEC, k=k, nlist=16, nprobe=2
-    ).select("vec_id")
-    return exact.join(approx, "vec_id").agg(
-        F.lit(k).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_overlap"),
-        (F.count(F.lit(1)).cast("double") / k).alias("recall_at_k"),
-    )
+    return _recall_at_k(
+        brute_force_topk(emb, _QVEC, k=k),
+        ivf_anchored_topk(emb, _QVEC, k=k, nlist=16, nprobe=2), k)
 
 
 def _pq_dists_sql(vec_sql: str, sub_idx: int, m: int = 8, ksub: int = 16,
@@ -2090,10 +2079,30 @@ def _pq_dists_sql(vec_sql: str, sub_idx: int, m: int = 8, ksub: int = 16,
     return "[" + ", ".join(entries) + "]"
 
 
-def _pq_codes_oracle(m: int = 8, ksub: int = 16, dim: int = 64) -> str:
-    ds_cols = ", ".join(
+def _pq_ds_cols(m: int = 8) -> str:
+    """``ds0 .. ds{m-1}``: each row's codebook distance lists."""
+    return ", ".join(
         f"{_pq_dists_sql('embedding', i)} AS ds{i}" for i in range(m)
     )
+
+
+def _pq_adc_sql(m: int = 8, ksub: int = 16) -> str:
+    """_QVEC's ADC distance over the _pq_ds_cols columns: per subspace,
+    the lookup-table entry (operators/similarity.py _pq_luts) at the
+    row's argmin code."""
+    from wrds2pg_spark.operators.similarity import _pq_luts
+
+    terms = []
+    for i, lut in enumerate(_pq_luts(_QVEC, m, ksub)):
+        # explicit DOUBLE casts: bare float literals parse as DECIMAL
+        # in DuckDB and the sum would come back as a Decimal string
+        lut_sql = "[" + ", ".join(
+            f"CAST({x!r} AS DOUBLE)" for x in lut) + "]"
+        terms.append(f"{lut_sql}[list_position(ds{i}, list_min(ds{i}))]")
+    return " + ".join(terms)
+
+
+def _pq_codes_oracle(m: int = 8, ksub: int = 16, dim: int = 64) -> str:
     packed = " + ".join(
         f"CAST(list_position(ds{i}, list_min(ds{i})) - 1 AS BIGINT)"
         f" * CAST({ksub ** i} AS BIGINT)"
@@ -2101,7 +2110,7 @@ def _pq_codes_oracle(m: int = 8, ksub: int = 16, dim: int = 64) -> str:
     )
     mse = " + ".join(f"list_min(ds{i})" for i in range(m))
     return f"""
-    WITH d AS (SELECT vec_id, {ds_cols} FROM embeddings)
+    WITH d AS (SELECT vec_id, {_pq_ds_cols(m)} FROM embeddings)
     SELECT vec_id,
            CAST({packed} AS BIGINT) AS pq_code,
            ROUND(({mse}) / {float(dim)!r}, 6) AS quant_mse
@@ -2124,31 +2133,10 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_encode(emb, m=8, ksub=16, dim=64)
 
 
-def _pq_adc_oracle(m: int = 8, ksub: int = 16, dim: int = 64,
-                   k: int = 20) -> str:
-    from wrds2pg_spark.operators.similarity import pq_codebook
-
-    subdim = dim // m
-    ds_cols = ", ".join(
-        f"{_pq_dists_sql('embedding', i)} AS ds{i}" for i in range(m)
-    )
-    terms = []
-    for i in range(m):
-        sub = _QVEC[i * subdim:(i + 1) * subdim]
-        lut = []
-        for c in pq_codebook(i, ksub, subdim):
-            acc = 0.0
-            for x, y in zip(sub, c):
-                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-            lut.append(acc)
-        # explicit DOUBLE casts: bare float literals parse as DECIMAL
-        # in DuckDB and the sum would come back as a Decimal string
-        lut_sql = "[" + ", ".join(
-            f"CAST({x!r} AS DOUBLE)" for x in lut) + "]"
-        terms.append(f"{lut_sql}[list_position(ds{i}, list_min(ds{i}))]")
+def _pq_adc_oracle(m: int = 8, ksub: int = 16, k: int = 20) -> str:
     return f"""
-    WITH d AS (SELECT vec_id, {ds_cols} FROM embeddings)
-    SELECT vec_id, ROUND({' + '.join(terms)}, 6) AS adc_dist
+    WITH d AS (SELECT vec_id, {_pq_ds_cols(m)} FROM embeddings)
+    SELECT vec_id, ROUND({_pq_adc_sql(m, ksub)}, 6) AS adc_dist
     FROM d
     ORDER BY adc_dist ASC, vec_id
     LIMIT {k}
@@ -2157,44 +2145,18 @@ def _pq_adc_oracle(m: int = 8, ksub: int = 16, dim: int = 64,
 
 def _ivfpq_oracle(nlist: int = 16, nprobe: int = 2, m: int = 8,
                   ksub: int = 16, dim: int = 64, k: int = 20) -> str:
-    from wrds2pg_spark.operators.similarity import (
-        anchored_probe_cells, ivf_anchors, pq_codebook,
-    )
+    from wrds2pg_spark.operators.similarity import anchored_probe_cells
 
-    anchors = ivf_anchors(nlist, dim)
-    dots = ", ".join(
-        _EMB_DOT.format(
-            a="embedding",
-            b="[" + ", ".join(repr(x) for x in anc) + "]",
-        )
-        for anc in anchors
-    )
+    ads, cell = _anchor_cell_sql("embedding", nlist, dim, ds="ads")
     probes = ", ".join(
         str(c) for c in anchored_probe_cells(_QVEC, nlist, nprobe))
-    ds_cols = ", ".join(
-        f"{_pq_dists_sql('embedding', i)} AS ds{i}" for i in range(m)
-    )
-    subdim = dim // m
-    terms = []
-    for i in range(m):
-        sub = _QVEC[i * subdim:(i + 1) * subdim]
-        lut = []
-        for c in pq_codebook(i, ksub, subdim):
-            acc = 0.0
-            for x, y in zip(sub, c):
-                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-            lut.append(acc)
-        lut_sql = "[" + ", ".join(
-            f"CAST({x!r} AS DOUBLE)" for x in lut) + "]"
-        terms.append(f"{lut_sql}[list_position(ds{i}, list_min(ds{i}))]")
     return f"""
     WITH d AS (
       SELECT vec_id,
-             CAST(list_position(ads, list_max(ads)) - 1 AS INTEGER)
-                 AS cell,
-             {ds_cols}
-      FROM (SELECT vec_id, embedding, [{dots}] AS ads FROM embeddings))
-    SELECT vec_id, ROUND({' + '.join(terms)}, 6) AS adc_dist
+             {cell},
+             {_pq_ds_cols(m)}
+      FROM (SELECT vec_id, embedding, {ads} FROM embeddings))
+    SELECT vec_id, ROUND({_pq_adc_sql(m, ksub)}, 6) AS adc_dist
     FROM d
     WHERE cell IN ({probes})
     ORDER BY adc_dist ASC, vec_id
@@ -2280,41 +2242,12 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pq_adc_topk(emb, _QVEC, k=20, m=8, ksub=16)
 
 
-def _pq_recall_oracle(m: int = 8, ksub: int = 16, dim: int = 64,
-                      k: int = 20) -> str:
-    from wrds2pg_spark.operators.similarity import pq_codebook
-
-    subdim = dim // m
-    ds_cols = ", ".join(
-        f"{_pq_dists_sql('embedding', i)} AS ds{i}" for i in range(m)
-    )
-    terms = []
-    for i in range(m):
-        sub = _QVEC[i * subdim:(i + 1) * subdim]
-        lut = []
-        for c in pq_codebook(i, ksub, subdim):
-            acc = 0.0
-            for x, y in zip(sub, c):
-                acc = acc + (float(x) - float(y)) * (float(x) - float(y))
-            lut.append(acc)
-        lut_sql = "[" + ", ".join(
-            f"CAST({x!r} AS DOUBLE)" for x in lut) + "]"
-        terms.append(f"{lut_sql}[list_position(ds{i}, list_min(ds{i}))]")
-    return f"""
-    WITH d AS (SELECT vec_id, {ds_cols} FROM embeddings),
-    exact AS (
-      SELECT vec_id FROM embeddings
-      ORDER BY {_emb_cos_sql('embedding', _QVEC_SQL)} DESC, vec_id
-      LIMIT {k}),
-    approx AS (
+def _pq_recall_oracle(m: int = 8, ksub: int = 16, k: int = 20) -> str:
+    return _recall_at_k_sql(f"""
       SELECT vec_id FROM d
-      ORDER BY ROUND({' + '.join(terms)}, 6) ASC, vec_id
-      LIMIT {k})
-    SELECT CAST({k} AS BIGINT) AS k,
-           CAST(count(*) AS BIGINT) AS n_overlap,
-           CAST(count(*) AS DOUBLE) / {k} AS recall_at_k
-    FROM exact JOIN approx USING (vec_id)
-    """
+      ORDER BY ROUND({_pq_adc_sql(m, ksub)}, 6) ASC, vec_id
+      LIMIT {k}""", k,
+        ctes=f"d AS (SELECT vec_id, {_pq_ds_cols(m)} FROM embeddings)")
 
 
 @register("similarity_pq_recall_at_k", oracle=_pq_recall_oracle())
@@ -2331,13 +2264,9 @@ def similarity_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     k = 20
-    exact = brute_force_topk(emb, _QVEC, k=k).select("vec_id")
-    approx = pq_adc_topk(emb, _QVEC, k=k, m=8, ksub=16).select("vec_id")
-    return exact.join(approx, "vec_id").agg(
-        F.lit(k).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n_overlap"),
-        (F.count(F.lit(1)).cast("double") / k).alias("recall_at_k"),
-    )
+    return _recall_at_k(
+        brute_force_topk(emb, _QVEC, k=k),
+        pq_adc_topk(emb, _QVEC, k=k, m=8, ksub=16), k)
 
 
 @register("similarity_ann_lsh", oracle=_lsh_oracle())
@@ -2354,17 +2283,7 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lsh_blocked_oracle(nbits: int = 6, threshold: float = 0.3) -> str:
-    from wrds2pg_spark.operators.similarity import hyperplane
-
-    bits = []
-    for j in range(nbits):
-        p = hyperplane(j, 64)
-        plit = "[" + ", ".join(repr(x) for x in p) + "]"
-        bits.append(
-            f"(CASE WHEN {_EMB_DOT.format(a='embedding', b=plit)} >= 0 "
-            f"THEN '1' ELSE '0' END)"
-        )
-    bucket = " || ".join(bits)
+    bucket = _bucket_bits_sql(nbits)
     # threshold on RAW cosines (bitwise-identical across engines —
     # what lets the Spark side run a vectorized Arrow kernel); the
     # reported cos_sim rounds once for display on both sides
@@ -2408,14 +2327,11 @@ def similarity_ann_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN story (index paid at ingest, queries scan ~(1+nbits)/2^nbits).
     Deterministic planes keep even this variant value-hash checked:
     it must return exactly what the unindexed LSH query returns."""
-    import hashlib
-    import os
-
     from wrds2pg_spark.operators.similarity import (
         build_lsh_index, lsh_topk_indexed,
     )
-
     from wrds2pg_spark.sources.testdata import ensure_dir_fixture, fixture_tag
+
     tag = fixture_tag(sf_dir, "embeddings")
     # v2: partition values are 'b'-prefixed strings (see
     # build_lsh_index); the path bump keeps any v1 index from a prior
@@ -2512,11 +2428,7 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions scanned — the 100-TB serving path (index cost paid at
     ingest, queries prune at file-listing time).  Cell boundaries
     depend on the clustering implementation, so the driver records
-    the rows-only check; tests assert recall against brute force and
-    the fit-per-query demo form (ivf_topk) stays available for
-    ad-hoc use."""
-    import os
-
+    the rows-only check; tests assert recall against brute force."""
     from wrds2pg_spark.operators.similarity import (
         build_ivf_index, ivf_topk_indexed,
     )

@@ -93,25 +93,40 @@ def source_modified(source_path: str) -> str:
     content didn't change does not trigger a reload (round 6; the
     header wall time renders directly, matching how the reference
     stores the scraped listing string).  Everything else, and any
-    unparseable sas7bdat, falls back to fs mtime."""
+    unparseable sas7bdat, falls back to fs mtime.  A glob of sas7bdat
+    files (a multi-file lake) stamps as the newest of its files'
+    stamps, so an unchanged lake skips and any rewritten file reloads
+    it.  '' (always update) when nothing matches."""
+    if source_path.lower().endswith(".sas7bdat"):
+        from wrds2pg_spark.sources.sas7bdat import _expand
+
+        try:
+            files = ([source_path] if os.path.isfile(source_path)
+                     else _expand(source_path))
+        except FileNotFoundError:
+            return ""
+        return modified_decode(max(_sas_stamp(f) for f in files))
     if not os.path.exists(source_path):
         return ""
-    if source_path.lower().endswith(".sas7bdat"):
-        from wrds2pg_spark.catalog import _FMT, _PREFIX, modified_encode
-        from wrds2pg_spark.sources.sas7bdat import header_modified
-
-        dt = header_modified(source_path)
-        if dt is not None:
-            # Normalize through the encode/decode pair: identity for
-            # valid Chicago wall times, and a FIXED POINT for wall
-            # times inside the DST spring-forward gap (possible when
-            # the SAS server sits in another zone) — without this, a
-            # gap time would re-decode one hour later from the CSV
-            # sink's mtime store and needs_update would reload
-            # forever (round-6 review finding).
-            return modified_decode(
-                modified_encode(dt.strftime(_PREFIX + _FMT)))
     return modified_decode(os.path.getmtime(source_path))
+
+
+def _sas_stamp(path: str) -> float:
+    """One sas7bdat file's stamp as epoch seconds: its header
+    timestamp, or the fs mtime when the header does not parse."""
+    from wrds2pg_spark.catalog import _FMT, _PREFIX, modified_encode
+    from wrds2pg_spark.sources.sas7bdat import header_modified
+
+    dt = header_modified(path)
+    if dt is None:
+        return os.path.getmtime(path)
+    # Normalize through the encode/decode pair: identity for valid
+    # Chicago wall times, and a FIXED POINT for wall times inside the
+    # DST spring-forward gap (possible when the SAS server sits in
+    # another zone) — without this, a gap time would re-decode one
+    # hour later from the CSV sink's mtime store and needs_update
+    # would reload forever (round-6 review finding).
+    return modified_encode(dt.strftime(_PREFIX + _FMT))
 
 
 def resolve_encoding(
