@@ -9,6 +9,7 @@ import gzip
 import logging
 import os
 import shutil
+from datetime import datetime
 
 import pytest
 
@@ -684,31 +685,44 @@ def test_wrds_update_pq_sas7bdat_lake_all_missing_char_in_first_file(
         (1.0, None), (2.0, None), (3.0, "x")]
 
 
-def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(spark, tmp_path):
-    """A glob lake stamps as the newest header stamp of its files: a
-    second run over the unchanged lake skips without a Spark job, and
-    a file SAS rewrote with a newer header stamp reloads the lake."""
-    from datetime import datetime
-
+def _write_sas(path, modified_dt, ids):
     import pandas as pd
 
-    from wrds2pg_spark.paths import get_pq_path
     from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
 
-    def write_sas(path, modified_dt, ids):
-        secs = (modified_dt - datetime(1960, 1, 1)).total_seconds()
-        write_sas7bdat(pd.DataFrame({"ID": ids}), str(path),
-                       modified_secs=secs)
+    secs = (modified_dt - datetime(1960, 1, 1)).total_seconds()
+    write_sas7bdat(pd.DataFrame({"ID": ids}), str(path), modified_secs=secs)
+
+
+@pytest.mark.parametrize("change, ids", [
+    ("rewrite_newer", [2.0, 3.0]),
+    ("add_older", [1.0, 2.0, 9.0]),
+    ("remove_older", [2.0]),
+])
+def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(
+    spark, tmp_path, change, ids
+):
+    """A second run over an unchanged glob lake skips without a Spark
+    job, and each change to the lake reloads it: SAS rewriting a file
+    with a newer header stamp, and — where the newest header stamp
+    does not move — adding a file with an older stamp or removing one
+    that is not the newest."""
+    from wrds2pg_spark.paths import get_pq_path
 
     src = tmp_path / "src"
     src.mkdir()
-    write_sas(src / "a.sas7bdat", datetime(2022, 5, 1, 10, 0, 0), [1.0])
-    write_sas(src / "b.sas7bdat", datetime(2022, 5, 2, 10, 0, 0), [2.0])
+    _write_sas(src / "a.sas7bdat", datetime(2022, 5, 1, 10), [1.0])
+    _write_sas(src / "c.sas7bdat", datetime(2022, 5, 3, 10), [2.0])
+    # One fixed past fs time, so the change below moves the lake's fs
+    # times by more than the stamp's one-second resolution.
+    past = datetime(2023, 1, 1).timestamp()
+    for p in [*src.iterdir(), src]:
+        os.utime(p, (past, past))
     lake, data_dir = str(src / "*.sas7bdat"), str(tmp_path / "lake")
     assert wrds_update_pq(spark, lake, "t", "s", data_dir=data_dir) is True
 
     sc = spark.sparkContext
-    group = "glob_lake_up_to_date"
+    group = f"glob_lake_up_to_date_{change}"
     sc.setJobGroup(group, "stamp check only")
     try:
         assert wrds_update_pq(
@@ -718,10 +732,15 @@ def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
-    write_sas(src / "a.sas7bdat", datetime(2022, 6, 1, 10, 0, 0), [3.0])
+    if change == "rewrite_newer":
+        _write_sas(src / "a.sas7bdat", datetime(2022, 6, 1, 10), [3.0])
+    elif change == "add_older":
+        _write_sas(src / "b.sas7bdat", datetime(2022, 5, 2, 10), [9.0])
+    else:
+        (src / "a.sas7bdat").unlink()
     assert wrds_update_pq(spark, lake, "t", "s", data_dir=data_dir) is True
     back = spark.read.parquet(get_pq_path("t", "s", data_dir))
-    assert sorted(r["id"] for r in back.collect()) == [2.0, 3.0]
+    assert sorted(r["id"] for r in back.collect()) == ids
 
 
 # --- small-file compaction (round 8) ---------------------------------------

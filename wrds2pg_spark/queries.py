@@ -2002,8 +2002,7 @@ def similarity_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _exact_topk(emb, _QVEC[:_MRL_DIM], k, prefix, ["vec_id"]), k)
 
 
-def _anchor_cell_sql(col: str, nlist: int, dim: int,
-                     ds: str = "ds") -> tuple[str, str]:
+def _anchor_cell_sql(col: str, nlist: int, dim: int) -> tuple[str, str]:
     """The anchored IVF cell (operators/similarity.py
     anchored_cell_expr) as DuckDB SQL.  Two parts, because the argmax
     reads the anchor-dot list twice and a subquery binds it ONCE as
@@ -2013,9 +2012,8 @@ def _anchor_cell_sql(col: str, nlist: int, dim: int,
     dots = ", ".join(
         _EMB_DOT.format(a=col, b="[" + ", ".join(repr(x) for x in anc) + "]")
         for anc in ivf_anchors(nlist, dim))
-    return (f"[{dots}] AS {ds}",
-            f"CAST(list_position({ds}, list_max({ds})) - 1 AS INTEGER)"
-            " AS cell")
+    return (f"[{dots}] AS ds",
+            "CAST(list_position(ds, list_max(ds)) - 1 AS INTEGER) AS cell")
 
 
 def _anchor_cells_cte(nlist: int, dim: int = 64) -> str:
@@ -2147,7 +2145,7 @@ def _ivfpq_oracle(nlist: int = 16, nprobe: int = 2, m: int = 8,
                   ksub: int = 16, dim: int = 64, k: int = 20) -> str:
     from wrds2pg_spark.operators.similarity import anchored_probe_cells
 
-    ads, cell = _anchor_cell_sql("embedding", nlist, dim, ds="ads")
+    ds, cell = _anchor_cell_sql("embedding", nlist, dim)
     probes = ", ".join(
         str(c) for c in anchored_probe_cells(_QVEC, nlist, nprobe))
     return f"""
@@ -2155,7 +2153,7 @@ def _ivfpq_oracle(nlist: int = 16, nprobe: int = 2, m: int = 8,
       SELECT vec_id,
              {cell},
              {_pq_ds_cols(m)}
-      FROM (SELECT vec_id, embedding, {ads} FROM embeddings))
+      FROM (SELECT vec_id, embedding, {ds} FROM embeddings))
     SELECT vec_id, ROUND({_pq_adc_sql(m, ksub)}, 6) AS adc_dist
     FROM d
     WHERE cell IN ({probes})

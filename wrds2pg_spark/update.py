@@ -94,18 +94,25 @@ def source_modified(source_path: str) -> str:
     header wall time renders directly, matching how the reference
     stores the scraped listing string).  Everything else, and any
     unparseable sas7bdat, falls back to fs mtime.  A glob of sas7bdat
-    files (a multi-file lake) stamps as the newest of its files'
-    stamps, so an unchanged lake skips and any rewritten file reloads
-    it.  '' (always update) when nothing matches."""
+    files (a multi-file lake) stamps as the newest of its files' own
+    stamps, their fs mtimes and their directories' mtimes: the header
+    stamps alone would miss a file added with an older stamp, a
+    removed file or a file copied over in place, so any add, remove
+    or rewrite reloads the lake and an unchanged lake skips.  ''
+    (always update) when nothing matches."""
     if source_path.lower().endswith(".sas7bdat"):
+        if os.path.isfile(source_path):
+            return modified_decode(_sas_stamp(source_path))
         from wrds2pg_spark.sources.sas7bdat import _expand
 
         try:
-            files = ([source_path] if os.path.isfile(source_path)
-                     else _expand(source_path))
+            files = _expand(source_path)
         except FileNotFoundError:
             return ""
-        return modified_decode(max(_sas_stamp(f) for f in files))
+        dirs = {os.path.dirname(os.path.abspath(f)) for f in files}
+        return modified_decode(max(
+            *(_sas_stamp(f) for f in files),
+            *(os.path.getmtime(p) for p in (*files, *dirs))))
     if not os.path.exists(source_path):
         return ""
     return modified_decode(os.path.getmtime(source_path))
