@@ -609,6 +609,20 @@ def test_lineage_cut_without_spark_context_is_local_and_errors_are_loud():
         lineage_cut()(Frame(RuntimeError("gateway gone")))
 
 
+@pytest.mark.parametrize("value,expected", [
+    ("64MB", 64 << 20),
+    ("128m", 128 << 20),
+    ("1.5g", 7),
+    ("abc", 7),
+])
+def test_parse_bytes_units_and_default(value, expected):
+    """Byte strings parse as Spark's JavaUtils does; a fraction or a
+    string with no number falls back to the default."""
+    from wrds2pg_spark.session import _parse_bytes
+
+    assert _parse_bytes(value, default=7) == expected
+
+
 def test_hll_sketch_estimate_accuracy(spark):
     """agg_hll_sketch is rows-only at the driver; locally pin the
     estimate to within 5% of the exact distinct count per group."""

@@ -983,3 +983,25 @@ def test_curation_funnel_no_body_shuffle_and_broadcast_join(spark):
     for seg in plan.split("Exchange")[1:]:
         head = seg.split("+-", 1)[0]
         assert "text#" not in head, head
+
+
+def test_curation_second_pass_compiles_no_class(spark):
+    """Every generated class of a curation pass stays in Spark's codegen
+    cache (``session.CODEGEN_CACHE_ENTRIES``), so a second pass over the
+    same keys compiles nothing.  At Spark's default of 100 entries the
+    second pass recompiled 116 classes."""
+    keys = ("dedup_minhash_lsh", "dedup_simhash",
+            "multimodal_image_features", "udf_pandas_scalar",
+            "quality_ccnet_buckets")
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def compiled_in_pass() -> int:
+        before = compiles.getCount()
+        for name in keys:
+            (REGISTRY[name].fn(spark, SF)
+             .write.mode("overwrite").format("noop").save())
+        return compiles.getCount() - before
+
+    first = compiled_in_pass()
+    assert compiled_in_pass() == 0, f"first pass compiled {first}"

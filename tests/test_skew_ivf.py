@@ -276,6 +276,24 @@ def test_lsh_upsert_appends_only_and_matches_rebuild(spark, tmp_path):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
+def test_lsh_indexed_probe_with_no_bucket_on_disk_is_empty(spark, tmp_path):
+    """A query whose probe buckets hold no vectors reads no directory
+    and returns an empty top-k with the usual columns."""
+    from wrds2pg_spark.operators.similarity import (
+        build_lsh_index, lsh_topk_indexed,
+    )
+
+    v = [((5 * i + 1) % 11 - 5) / 5.0 for i in range(8)]
+    idx = str(tmp_path / "one")
+    build_lsh_index(spark.createDataFrame([(1, v)], "vec_id long, "
+                                          "embedding array<float>"),
+                    idx, nbits=4, dim=8)
+    out = lsh_topk_indexed(spark, idx, [-x for x in v], k=5, nbits=4,
+                           radius=0)
+    assert out.columns == ["vec_id", "cos_sim"]
+    assert out.collect() == []
+
+
 def test_index_upsert_rejects_parameter_mismatch(spark, tmp_path):
     """Round-6 review: upserting with a different nbits / smaller
     nlist than the build must fail loudly from the partition listing

@@ -6,14 +6,16 @@ are exact).  Final similarity values are O(1) magnitude, so a 6-decimal
 round makes cross-engine summation-order differences vanish.
 
 The dot and norm are zip_with/aggregate higher-order functions.  HOF
-lambdas evaluate INTERPRETED per element, but a dim-unrolled
-``getItem(i) * getItem(i)`` sum pays a PER-QUERY-EXECUTION Janino
-compile (~0.3-1 s; the generated source embeds fresh expression ids,
-so the codegen cache misses across executions): a loss on the 2k-row
-sf0.1 bench corpus (unrolling the ann_lsh probe regressed 0.17 s ->
-1.33 s), a win only when a pass does far more data work than that.
-The one such key, similarity_maxsim (512 terms over every row, 38.9 s
--> 2.2 s at sf1), renders its own unrolled SQL.
+lambdas evaluate INTERPRETED per element; a dim-unrolled
+``getItem(i) * getItem(i)`` sum is generated code instead, whose
+classes Janino compiles once per JVM (a 64-dim unrolled dot over the
+sf0.01 embeddings, fresh session: 4 classes on the first run, 0 on
+the next three).  The per-execution compile once measured when the
+ann_lsh probe was unrolled (0.17 s -> 1.33 s on the 2k-row sf0.1 bench
+corpus) was eviction from Spark's default 100-entry codegen cache,
+which ``session.get_spark`` now sizes to the engine's working set.
+The one key that renders unrolled SQL is similarity_maxsim (512 terms
+over every row, 38.9 s -> 2.2 s at sf1).
 """
 
 from __future__ import annotations

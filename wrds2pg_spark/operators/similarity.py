@@ -499,9 +499,38 @@ def lsh_topk_indexed(
     partition column prunes to those directories at file-listing time
     — the scan never opens the other 2^nbits - (1+nbits) buckets."""
     probes = ["b" + p for p in probe_buckets(query_vec, nbits, radius)]
-    cands = spark.read.parquet(index_path).filter(
+    cands = _read_partitions(spark, index_path, "bucket", probes).filter(
         F.col("bucket").isin(probes))
     return _exact_topk(cands, query_vec, k, vec_col, [id_col])
+
+
+def _read_partitions(spark, path: str, col: str, values: list[str]):
+    """The hive-partitioned parquet table at ``path`` read from only the
+    ``col=value`` directories that exist.  Reading the root lists every
+    partition (256 LSH buckets: over Spark's parallel-discovery
+    threshold, so the listing runs as a job) and infers the schema in
+    another job; here the driver lists the few probe directories and
+    the schema is the one Spark wrote into a data file's footer."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    dirs = [d for d in (os.path.join(path, f"{col}={v}") for v in values)
+            if os.path.isdir(d)]
+    sample = next(
+        glob.iglob(os.path.join(path, f"{col}=*", "*.parquet")), None)
+    if sample is None:  # no data file: let Spark fail loudly on the root
+        return spark.read.parquet(path)
+    meta = pq.read_schema(sample).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"]
+    schema = StructType.fromJson(json.loads(meta)).add(
+        StructField(col, StringType()))
+    if not dirs:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
 
 
 def build_ivf_index(

@@ -19,6 +19,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Entries in Spark's generated-class cache (static conf, default 100).
+# Measured working set: one pass over the 5 perfbench curation keys
+# compiles ~99 distinct classes, one pass over all 244 registry keys
+# 2,123.  At 100 Janino recompiled nearly every class on every pass.
+# The cache is a Guava LRU split into 4 segments that each evict at
+# about a quarter of the limit, so it can evict well before the limit
+# is reached: 4096 leaves each segment room for ~530 classes.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(
     app_name: str = "wrds2pg_spark",
@@ -76,6 +85,9 @@ def get_spark(
         # Before CPython 3.13 each Python task otherwise re-reads
         # pyspark.zip and the spark-core jar (~0.24 s CPU, pydaemon.py).
         "spark.python.daemon.module": "wrds2pg_spark.pydaemon",
+        # Static conf: it sizes the cache when the first class compiles,
+        # so only the builder can set it.
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
         "spark.driver.memory": driver_memory,
         # Long-lived sessions hold checkpointed-RDD / shuffle state
         # until the ContextCleaner's weak refs fire, which needs a JVM
@@ -164,7 +176,7 @@ def _parse_bytes(value, default: int = 128 * 1024 * 1024) -> int:
         if mult is None or i == 0:
             return default
         return int(s[:i]) * mult
-    except Exception:
+    except ValueError:
         return default
 
 
