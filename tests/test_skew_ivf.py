@@ -114,43 +114,25 @@ def test_pq_mse_matches_reconstruction(spark):
         assert abs(err - r["quant_mse"]) < 1e-6
 
 
-def test_ivf_recall_vs_brute_force(spark):
-    from wrds2pg_spark.operators.similarity import brute_force_topk, ivf_topk
+def test_ivf_recall_vs_brute_force(spark, tmp_path):
+    from wrds2pg_spark.operators.similarity import (
+        brute_force_topk, build_ivf_index, ivf_topk_indexed,
+    )
     from wrds2pg_spark.queries import _QVEC
     from wrds2pg_spark.sources.testdata import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.01", "embeddings")
     exact = [r["vec_id"] for r in brute_force_topk(emb, _QVEC, k=10).collect()]
+    idx = str(tmp_path / "ivf_idx")
+    build_ivf_index(emb, idx, nlist=8)
     approx = [
         r["vec_id"]
-        for r in ivf_topk(emb, _QVEC, k=10, nlist=8, nprobe=3).collect()
+        for r in ivf_topk_indexed(spark, idx, _QVEC, k=10, nprobe=3).collect()
     ]
     # nprobe=3 of 8 cells should recover most of the true top-10
     overlap = len(set(exact) & set(approx))
     assert overlap >= 5, f"IVF recall too low: {overlap}/10"
     assert len(approx) == 10
-
-
-def test_ivf_fit_per_query_matches_materialized_index(spark, tmp_path):
-    """similarity_ivf has no oracle, so this is the check that the
-    fit-per-query path (ivf_topk) and the materialized index
-    (build_ivf_index + ivf_topk_indexed) fit the same cells, probe the
-    same nprobe of them and rank the same rows."""
-    from conftest import SF_SMOKE
-
-    from wrds2pg_spark.operators.similarity import (
-        build_ivf_index, ivf_topk, ivf_topk_indexed,
-    )
-    from wrds2pg_spark.queries import _QVEC
-    from wrds2pg_spark.sources.testdata import load_table
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    idx = str(tmp_path / "ivf_idx")
-    build_ivf_index(emb, idx, nlist=8, seed=7)
-    fit = ivf_topk(emb, _QVEC, k=10, nlist=8, nprobe=3, seed=7).collect()
-    served = ivf_topk_indexed(spark, idx, _QVEC, k=10, nprobe=3).collect()
-    assert len(fit) == 10
-    assert [tuple(r) for r in fit] == [tuple(r) for r in served]
 
 
 def test_bucket_sig_kernel_matches_jvm_expr(spark):

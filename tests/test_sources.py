@@ -165,22 +165,29 @@ def test_sas7bdat_header_modified_from_real_file(tmp_path):
 
 
 def test_sas7bdat_distributed_sink_roundtrip(spark, tmp_path):
-    """write_sas7bdat_files writes one real sas7bdat per partition
-    executor-side (mapInPandas); reading the directory back through
-    read_sas7bdat recovers every row."""
+    """df.write.format("sas7bdat") writes one real sas7bdat per
+    partition executor-side; reading the directory back through the
+    read_sas7bdat helper recovers every row, one task per file, with
+    no RDD scan under the decode."""
+    import glob as _glob
+
     from pyspark.sql import functions as F
 
-    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat_files
     from wrds2pg_spark.sources.sas7bdat import read_sas7bdat
+    from wrds2pg_spark.sources.sas7bdat_datasource import register_sas7bdat
 
+    register_sas7bdat(spark)
     src = spark.range(100).select(
         F.col("id").cast("double").alias("permno"),
         F.concat(F.lit("tic"), F.col("id")).alias("ticker"),
-    ).repartition(4)
+    ).repartition(3)
     out = str(tmp_path / "lake")
-    manifest = write_sas7bdat_files(src, out).collect()
-    assert sum(r["rows"] for r in manifest) == 100
+    src.write.format("sas7bdat").mode("overwrite").save(out)
+    assert len(_glob.glob(f"{out}/*.sas7bdat")) == 3
     back = read_sas7bdat(spark, out, schema="permno double, ticker string")
+    assert back.rdd.getNumPartitions() == 3
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "Range" in plan, plan
     got = sorted((r["permno"], r["ticker"]) for r in back.collect())
     assert got == sorted(
         (float(i), f"tic{i}") for i in range(100))

@@ -346,7 +346,7 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the entire model — features, dot product, sigmoid,
     threshold — is ONE codegen projection fused with the corpus scan:
-    no Python (a real fastText binary would ride mapInPandas; the
+    no Python (a real fastText binary would ride mapInArrow; the
     linear head shows the gate plumbing with zero UDF cost), no
     broadcast (the weights are literals in the plan), and NO shuffle
     of any kind, so the gate pipelines ahead of dedup/tokenize at
@@ -838,7 +838,7 @@ def scan_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_sas7bdat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GENUINE sas7bdat ingest on the oracle-checked surface (round 7):
     a projected orders slice is written ONCE per sf as a real
-    multi-file sas7bdat lake (sinks/sas7bdat.py, one binary file per
+    multi-file sas7bdat lake (``_sas_orders_lake``, one binary file per
     partition, executor-side), read back through the distributed
     mapInArrow reader (sources/sas7bdat.py, un-mocked pandas.read_sas
     per file) and aggregated; the oracle computes the same aggregate
@@ -876,28 +876,28 @@ def _sas_orders_agg(df: DataFrame) -> DataFrame:
 
 def _sas_orders_lake(spark: SparkSession, sf_dir: str) -> str:
     """The shared per-sf sas7bdat fixture lake: a projected 10%
-    orderkey slice written ONCE as real multi-file binary
-    (sinks/sas7bdat.py, one file per partition, executor-side).  The
+    orderkey slice written ONCE as real multi-file binary through
+    ``df.write.format("sas7bdat")`` (sources/sas7bdat_datasource.py:
+    one file per partition, executor-side, two-phase commit).  The
     slice keeps round-trip coverage (multi-file fan-out, multi-page
     decode, float64 exactness, char trim) while pricing the decode at
     bench scale — the registered keys grade the BINARY PATH, not bulk
     pandas decode throughput."""
-    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat_files
+    from wrds2pg_spark.sources.sas7bdat_datasource import register_sas7bdat
     from wrds2pg_spark.sources.testdata import ensure_dir_fixture, fixture_tag
 
+    register_sas7bdat(spark)
     tag = fixture_tag(sf_dir, "orders")
     return ensure_dir_fixture(
         f"/tmp/wrds2pg_spark_fixtures/orders_sas_s10_{tag}",
-        lambda tmp: write_sas7bdat_files(
-            load_table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") % 10 == 0)
-            .select(
-                F.col("o_orderkey").cast("double").alias("o_orderkey"),
-                F.col("o_totalprice").cast("double").alias("o_totalprice"),
-                F.col("o_orderpriority"),
-            ).repartition(8),
-            tmp,
-        ).write.mode("overwrite").format("noop").save(),
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 10 == 0)
+        .select(
+            F.col("o_orderkey").cast("double").alias("o_orderkey"),
+            F.col("o_totalprice").cast("double").alias("o_totalprice"),
+            F.col("o_orderpriority"),
+        ).repartition(8)
+        .write.format("sas7bdat").mode("overwrite").save(tmp),
     )
 
 
@@ -2310,7 +2310,9 @@ def embedding_covariance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     second-moment statistics need; the same kernel shape yields Gram
     matrices and exact PCA inputs."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from wrds2pg_spark.functions.arrow import vectors
 
     dim, scale = _COV_DIM, _COV_SCALE
 
@@ -2318,19 +2320,20 @@ def embedding_covariance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         n = 0
         s = np.zeros(dim, np.int64)
         ss = np.zeros((dim, dim), np.int64)
-        for pdf in batches:
-            arr = np.stack(
-                [np.asarray(v, np.float64) for v in pdf["embedding"]]
-            ) if len(pdf) else np.zeros((0, dim))
-            y = arr * scale
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            y = vectors(batch, "embedding") * scale
             # round-half-away-from-zero, matching both engines' round()
             q = (np.sign(y) * np.floor(np.abs(y) + 0.5)).astype(np.int64)
             n += q.shape[0]
             s += q.sum(axis=0)
             ss += q.T @ q
-        yield pd.DataFrame({
-            "n": [n], "s": [s.tolist()], "ss": [ss.reshape(-1).tolist()],
-        })
+        yield pa.RecordBatch.from_pydict(
+            {"n": [n], "s": [s.tolist()], "ss": [ss.reshape(-1).tolist()]},
+            schema=pa.schema([("n", pa.int64()),
+                              ("s", pa.list_(pa.int64())),
+                              ("ss", pa.list_(pa.int64()))]))
 
     emb = fan_out(load_table(spark, sf_dir, "embeddings"))
     # three consumers (n_tot, s_tot, ss_tot) hang off `part`; without
@@ -2338,7 +2341,7 @@ def embedding_covariance_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed frame is partitions x (1 + D + D^2) longs — bytes
     # per partition, trivially safe to materialize (round 6:
     # 1.64 -> 1.25 s same-session at sf0.1)
-    part = emb.select("embedding").mapInPandas(
+    part = emb.select("embedding").mapInArrow(
         partials, schema="n long, s array<long>, ss array<long>"
     ).transform(lineage_cut())
     n_tot = part.agg(F.sum("n").cast("double").alias("n"))

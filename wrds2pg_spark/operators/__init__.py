@@ -23,7 +23,6 @@ from wrds2pg_spark.operators.rangejoin import band_join  # noqa: F401
 from wrds2pg_spark.operators.similarity import (  # noqa: F401
     blocked_pairs,
     brute_force_topk,
-    ivf_topk,
     lsh_topk,
 )
 from wrds2pg_spark.operators.skew import salted_agg, salted_join  # noqa: F401

@@ -1,6 +1,8 @@
 """Multimodal column handling: opaque ``binary`` payloads (image /
 audio / video bytes) with typed metadata, processed by Arrow-batched
-``mapInPandas`` pipelines.
+``mapInArrow`` kernels (``functions/arrow.map_batches``): a synthesizer
+builds one payload per id, a decoder maps one payload to one row (or,
+for the frame sampler, a list of rows).
 
 All decoders here are REAL codecs over formats that need no external
 libraries (BMP, PNG with zlib inflate + CRC-32, RIFF/WAV, a counted
@@ -15,12 +17,12 @@ Arrow batching, narrow partition-preserving maps) is unchanged.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from wrds2pg_spark.functions.arrow import map_batches
 
 __all__ = [
     "binary_stats",
@@ -60,6 +62,35 @@ def binary_stats(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     )
 
 
+def _synth(df: DataFrame, id_col: str, build) -> DataFrame:
+    """Binary-payload synthesizer: one real file ``build(id)`` per row,
+    deterministic in the id (Arrow-batched, partition-preserving map)."""
+
+    def fn(batch):
+        ids = batch.column(0).to_pylist()
+        return {"id": ids, "payload": [build(i) for i in ids]}
+
+    return map_batches(df.select(id_col), fn, "id long, payload binary")
+
+
+def _decode(df: DataFrame, bin_col: str, id_col: str, decode,
+            ddl: str) -> DataFrame:
+    """Per-payload decoder map: ``decode(payload)`` returns the columns
+    after ``id`` of one output row, or a list of such rows (a
+    row-expanding decode); ``ddl`` declares ``id`` plus those columns."""
+    names = [c.split()[0] for c in ddl.split(",")]
+
+    def fn(batch):
+        rows = []
+        for rid, payload in zip(batch.column(0).to_pylist(),
+                                batch.column(1).to_pylist()):
+            out = decode(payload)
+            rows += ([(rid, *r) for r in out] if isinstance(out, list)
+                     else [(rid, *out)])
+        return dict(zip(names, list(zip(*rows)) or [[]] * len(names)))
+
+    return map_batches(df.select(id_col, bin_col), fn, ddl)
+
 
 # ---------------------------------------------------------------------------
 # Real codecs: BMP (image), WAV/PCM16 (audio), FRMS (frame container).
@@ -79,15 +110,13 @@ def _bmp_dims(seed: int) -> tuple[int, int]:
     return 4 + seed % 13, 4 + seed % 11
 
 
-def _build_bmp(seed: int) -> bytes:
-    """Minimal but standard-compliant 24bpp bottom-up BMP whose BGR
-    pixel stream (row-major, top-down pixel index i = y*width + x) is
-    byte j = 3*i + channel of the LCG stream."""
-    width, height = _bmp_dims(seed)
-    row_raw = width * 3
+def _encode_bmp(px: np.ndarray) -> bytes:
+    """Minimal but standard-compliant 24bpp bottom-up BMP of ``px``,
+    the logical top-down pixel rows as a (height, width*3) BGR uint8
+    array; each stored row is zero-padded to a 4-byte stride."""
+    height, row_raw = px.shape
     pad = (4 - row_raw % 4) % 4
-    stride = row_raw + pad
-    img_size = stride * height
+    img_size = (row_raw + pad) * height
     off = 14 + 40
     header = (
         b"BM"
@@ -95,7 +124,7 @@ def _build_bmp(seed: int) -> bytes:
         + b"\x00\x00\x00\x00"
         + off.to_bytes(4, "little")
         + (40).to_bytes(4, "little")
-        + width.to_bytes(4, "little")
+        + (row_raw // 3).to_bytes(4, "little")
         + height.to_bytes(4, "little")
         + (1).to_bytes(2, "little")
         + (24).to_bytes(2, "little")
@@ -104,80 +133,65 @@ def _build_bmp(seed: int) -> bytes:
         + (2835).to_bytes(4, "little") * 2
         + (0).to_bytes(4, "little") * 2
     )
-    rows = []
-    for y in range(height - 1, -1, -1):  # bottom-up storage order
-        rows.append(_lcg_bytes(seed, y * row_raw, row_raw) + b"\x00" * pad)
-    return header + b"".join(rows)
+    return header + np.pad(px[::-1], ((0, 0), (0, pad))).tobytes()
+
+
+def _bmp_rows(b: bytes) -> np.ndarray:
+    """REAL BMP parse: validates the magic and the 24 bpp, reads the
+    little-endian header fields and returns the pixel rows top-down as
+    a (height, width*3) BGR uint8 view (row padding dropped)."""
+    if b[:2] != b"BM":
+        raise ValueError("not a BMP payload")
+    bpp = int.from_bytes(b[28:30], "little")
+    if bpp != 24:
+        raise ValueError(f"unsupported bpp {bpp}")
+    data_off = int.from_bytes(b[10:14], "little")
+    width = int.from_bytes(b[18:22], "little", signed=True)
+    height = abs(int.from_bytes(b[22:26], "little", signed=True))
+    stride = (width * 3 + 3) // 4 * 4
+    return np.frombuffer(
+        b, dtype=np.uint8, count=stride * height, offset=data_off
+    ).reshape(height, stride)[:, :width * 3][::-1]
+
+
+def _build_bmp(seed: int) -> bytes:
+    """BMP whose BGR pixel stream (row-major, top-down pixel index
+    i = y*width + x) is byte j = 3*i + channel of the LCG stream."""
+    width, height = _bmp_dims(seed)
+    return _encode_bmp(np.frombuffer(
+        _lcg_bytes(seed, 0, width * 3 * height), dtype=np.uint8
+    ).reshape(height, width * 3))
+
+
+def _bmp_features(b: bytes) -> tuple:
+    # one integer matmul with the BT.601 weights over every pixel
+    # (exact: sum < 2^40), divided once
+    px = _bmp_rows(b)
+    height, width = px.shape[0], px.shape[1] // 3
+    luma_sum = int(
+        (px.reshape(-1, 3).astype(np.int64)
+         @ np.array([114, 587, 299], np.int64)).sum())
+    return len(b), width, height, 24, luma_sum / (1000.0 * width * height)
 
 
 def decode_image_bmp(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
-    """REAL BMP parser over a binary column: validates the magic,
-    reads the little-endian header fields, walks the (padded,
-    bottom-up) pixel rows, and reduces to a mean BT.601 luma.
+    """REAL BMP parser over a binary column (``_bmp_rows``), reduced to
+    a mean BT.601 luma.
 
     The luma mean is computed as an exact integer sum of
     114*B + 587*G + 299*R divided ONCE by 1000*n — a single IEEE op
     on an exactly-represented integer, so the result is bit-identical
     to the oracle's identical division (functions/numeric.py doctrine:
     never round a float, make both engines run the same op sequence)."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("id", "n_bytes", "width", "height", "bpp", "mean_luma")}
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                if b[:2] != b"BM":
-                    raise ValueError("not a BMP payload")
-                data_off = int.from_bytes(b[10:14], "little")
-                width = int.from_bytes(b[18:22], "little", signed=True)
-                height = int.from_bytes(b[22:26], "little", signed=True)
-                bpp = int.from_bytes(b[28:30], "little")
-                if bpp != 24:
-                    raise ValueError(f"unsupported bpp {bpp}")
-                stride = (width * 3 + 3) // 4 * 4
-                h = abs(height)
-                # strided view drops the row padding; one integer
-                # matmul with the BT.601 weights replaces the
-                # per-pixel Python loop (exact: sum < 2^40)
-                px = np.frombuffer(
-                    b, dtype=np.uint8, count=stride * h, offset=data_off
-                ).reshape(h, stride)[:, :width * 3]
-                bgr = px.reshape(-1, 3).astype(np.int64)
-                luma_sum = int(
-                    (bgr @ np.array([114, 587, 299], np.int64)).sum()
-                )
-                n = width * h
-                out["id"].append(int(rid))
-                out["n_bytes"].append(len(b))
-                out["width"].append(width)
-                out["height"].append(abs(height))
-                out["bpp"].append(bpp)
-                out["mean_luma"].append(luma_sum / (1000.0 * n))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        decode_batches,
-        schema="id long, n_bytes long, width int, height int, bpp int, "
-               "mean_luma double",
-    )
+    return _decode(
+        df, bin_col, id_col, _bmp_features,
+        "id long, n_bytes long, width int, height int, bpp int, "
+        "mean_luma double")
 
 
 def synth_bmp(df: DataFrame, id_col: str) -> DataFrame:
-    """Binary-payload synthesizer: one real BMP per row, deterministic
-    in the id (Arrow-batched, partition-preserving map)."""
-
-    def build_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame({
-                "id": ids,
-                "payload": [_build_bmp(int(i)) for i in ids],
-            })
-
-    return df.select(id_col).mapInPandas(
-        build_batches, schema="id long, payload binary"
-    )
+    """One real BMP per row (``_synth``)."""
+    return _synth(df, id_col, _build_bmp)
 
 
 # ---------------------------------------------------------------------------
@@ -302,20 +316,53 @@ def _build_png(seed: int) -> bytes:
 
 
 def synth_png(df: DataFrame, id_col: str) -> DataFrame:
-    """Binary-payload synthesizer: one real PNG per row, deterministic
-    in the id (Arrow-batched, partition-preserving map)."""
+    """One real PNG per row (``_synth``)."""
+    return _synth(df, id_col, _build_png)
 
-    def build_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame({
-                "id": ids,
-                "payload": [_build_png(int(i)) for i in ids],
-            })
 
-    return df.select(id_col).mapInPandas(
-        build_batches, schema="id long, payload binary"
-    )
+def _png_features(b: bytes) -> tuple:
+    import zlib
+
+    if b[:8] != b"\x89PNG\r\n\x1a\n":
+        raise ValueError("not a PNG payload")
+    pos, ihdr, idat = 8, None, bytearray()
+    while pos < len(b):
+        clen = int.from_bytes(b[pos:pos + 4], "big")
+        ctype = b[pos + 4:pos + 8]
+        data = b[pos + 8:pos + 8 + clen]
+        crc = int.from_bytes(b[pos + 8 + clen:pos + 12 + clen], "big")
+        if (zlib.crc32(ctype + data) & 0xFFFFFFFF) != crc:
+            raise ValueError(f"CRC mismatch in {ctype!r}")
+        if ctype == b"IHDR":
+            ihdr = data
+        elif ctype == b"IDAT":
+            idat += data
+        elif ctype == b"IEND":
+            break
+        pos += 12 + clen
+    if ihdr is None:
+        raise ValueError("missing IHDR")
+    width = int.from_bytes(ihdr[0:4], "big")
+    height = int.from_bytes(ihdr[4:8], "big")
+    depth, ctype_id = ihdr[8], ihdr[9]
+    if (depth, ctype_id) != (8, 2):
+        raise ValueError("only 8-bit RGB supported")
+    stream = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
+    rowlen = width * 3
+    rows = stream.reshape(height, rowlen + 1)
+    prev = np.zeros(rowlen, dtype=np.int64)
+    luma_sum = 0
+    px_sum = 0
+    w = np.zeros(rowlen, dtype=np.int64)
+    w[0::3], w[1::3], w[2::3] = 299, 587, 114  # R,G,B order
+    for y in range(height):
+        raw = _png_unfilter_row(int(rows[y, 0]), rows[y, 1:], prev)
+        r64 = raw.astype(np.int64)
+        px_sum += int(r64.sum())
+        luma_sum += int((r64 * w).sum())
+        prev = r64
+    return (width, height, int(depth), int(ctype_id), px_sum,
+            luma_sum / (1000.0 * width * height))
 
 
 def decode_image_png(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
@@ -325,71 +372,10 @@ def decode_image_png(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     pixels to exact features (pixel-byte sum and a BT.601 luma mean
     computed in integer math, one final IEEE division — the
     cross-engine determinism doctrine of decode_image_bmp)."""
-    import zlib
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("id", "width", "height", "bit_depth", "color_type",
-                    "pixel_sum", "mean_luma")}
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                if b[:8] != b"\x89PNG\r\n\x1a\n":
-                    raise ValueError("not a PNG payload")
-                pos, ihdr, idat = 8, None, bytearray()
-                while pos < len(b):
-                    clen = int.from_bytes(b[pos:pos + 4], "big")
-                    ctype = b[pos + 4:pos + 8]
-                    data = b[pos + 8:pos + 8 + clen]
-                    crc = int.from_bytes(
-                        b[pos + 8 + clen:pos + 12 + clen], "big")
-                    if (zlib.crc32(ctype + data) & 0xFFFFFFFF) != crc:
-                        raise ValueError(f"CRC mismatch in {ctype!r}")
-                    if ctype == b"IHDR":
-                        ihdr = data
-                    elif ctype == b"IDAT":
-                        idat += data
-                    elif ctype == b"IEND":
-                        break
-                    pos += 12 + clen
-                if ihdr is None:
-                    raise ValueError("missing IHDR")
-                width = int.from_bytes(ihdr[0:4], "big")
-                height = int.from_bytes(ihdr[4:8], "big")
-                depth, ctype_id = ihdr[8], ihdr[9]
-                if (depth, ctype_id) != (8, 2):
-                    raise ValueError("only 8-bit RGB supported")
-                stream = np.frombuffer(
-                    zlib.decompress(bytes(idat)), dtype=np.uint8)
-                rowlen = width * 3
-                rows = stream.reshape(height, rowlen + 1)
-                prev = np.zeros(rowlen, dtype=np.int64)
-                luma_sum = 0
-                px_sum = 0
-                w = np.zeros(rowlen, dtype=np.int64)
-                w[0::3], w[1::3], w[2::3] = 299, 587, 114  # R,G,B order
-                for y in range(height):
-                    raw = _png_unfilter_row(int(rows[y, 0]),
-                                            rows[y, 1:], prev)
-                    r64 = raw.astype(np.int64)
-                    px_sum += int(r64.sum())
-                    luma_sum += int((r64 * w).sum())
-                    prev = r64
-                n = width * height
-                out["id"].append(int(rid))
-                out["width"].append(width)
-                out["height"].append(height)
-                out["bit_depth"].append(int(depth))
-                out["color_type"].append(int(ctype_id))
-                out["pixel_sum"].append(px_sum)
-                out["mean_luma"].append(luma_sum / (1000.0 * n))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        decode_batches,
-        schema="id long, width int, height int, bit_depth int, "
-               "color_type int, pixel_sum long, mean_luma double",
-    )
+    return _decode(
+        df, bin_col, id_col, _png_features,
+        "id long, width int, height int, bit_depth int, "
+        "color_type int, pixel_sum long, mean_luma double")
 
 
 _WAV_RATES = (8000, 16000, 22050, 44100, 48000)
@@ -424,17 +410,34 @@ def _build_wav(seed: int) -> bytes:
 
 
 def synth_wav(df: DataFrame, id_col: str) -> DataFrame:
-    def build_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame({
-                "id": ids,
-                "payload": [_build_wav(int(i)) for i in ids],
-            })
+    """One real WAV per row (``_synth``)."""
+    return _synth(df, id_col, _build_wav)
 
-    return df.select(id_col).mapInPandas(
-        build_batches, schema="id long, payload binary"
-    )
+
+def _wav_features(b: bytes) -> tuple:
+    if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        raise ValueError("not a WAV payload")
+    pos, rate, channels, data = 12, None, None, None
+    while pos + 8 <= len(b):
+        cid = b[pos:pos + 4]
+        size = int.from_bytes(b[pos + 4:pos + 8], "little")
+        body = b[pos + 8:pos + 8 + size]
+        if cid == b"fmt ":
+            channels = int.from_bytes(body[2:4], "little")
+            rate = int.from_bytes(body[4:8], "little")
+        elif cid == b"data":
+            data = body
+        pos += 8 + size + (size & 1)
+    if rate is None or data is None:
+        raise ValueError("missing fmt/data chunk")
+    n_samples = len(data) // 2
+    # int64 sum of int32 squares: exact (|s| <= 32768, so
+    # s*s*n_samples stays far below 2^63)
+    s = np.frombuffer(data, dtype="<i2", count=n_samples).astype(np.int64)
+    sq = int((s * s).sum())
+    n_frames = n_samples // channels
+    return (len(b), rate, channels, n_frames, n_frames / rate,
+            math.sqrt(sq / n_samples) if n_samples else 0.0)
 
 
 def decode_audio_wav(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
@@ -443,52 +446,10 @@ def decode_audio_wav(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
     reduces the PCM16 stream to frames/duration/RMS. The RMS uses an
     exact integer sum of squares, one IEEE divide, one IEEE sqrt —
     bit-identical to the oracle running the same three ops."""
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("id", "n_bytes", "sample_rate", "n_channels",
-                    "n_frames", "duration_s", "rms")}
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                if b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-                    raise ValueError("not a WAV payload")
-                pos, rate, channels, data = 12, None, None, None
-                while pos + 8 <= len(b):
-                    cid = b[pos:pos + 4]
-                    size = int.from_bytes(b[pos + 4:pos + 8], "little")
-                    body = b[pos + 8:pos + 8 + size]
-                    if cid == b"fmt ":
-                        channels = int.from_bytes(body[2:4], "little")
-                        rate = int.from_bytes(body[4:8], "little")
-                    elif cid == b"data":
-                        data = body
-                    pos += 8 + size + (size & 1)
-                if rate is None or data is None:
-                    raise ValueError("missing fmt/data chunk")
-                n_samples = len(data) // 2
-                # int64 sum of int32 squares: exact (|s| <= 32768,
-                # so s*s*n_samples stays far below 2^63)
-                s = np.frombuffer(
-                    data, dtype="<i2", count=n_samples
-                ).astype(np.int64)
-                sq = int((s * s).sum())
-                n_frames = n_samples // channels
-                out["id"].append(int(rid))
-                out["n_bytes"].append(len(b))
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(channels)
-                out["n_frames"].append(n_frames)
-                out["duration_s"].append(n_frames / rate)
-                out["rms"].append(
-                    math.sqrt(sq / n_samples) if n_samples else 0.0)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        decode_batches,
-        schema="id long, n_bytes long, sample_rate int, n_channels int, "
-               "n_frames long, duration_s double, rms double",
-    )
+    return _decode(
+        df, bin_col, id_col, _wav_features,
+        "id long, n_bytes long, sample_rate int, n_channels int, "
+        "n_frames long, duration_s double, rms double")
 
 
 FRAME_BYTES = 256
@@ -508,17 +469,21 @@ def _build_frame_container(seed: int) -> bytes:
 
 
 def synth_frame_container(df: DataFrame, id_col: str) -> DataFrame:
-    def build_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame({
-                "id": ids,
-                "payload": [_build_frame_container(int(i)) for i in ids],
-            })
+    """One real FRMS container per row (``_synth``)."""
+    return _synth(df, id_col, _build_frame_container)
 
-    return df.select(id_col).mapInPandas(
-        build_batches, schema="id long, payload binary"
-    )
+
+def _frame_samples(b: bytes, every: int, fps: float) -> list:
+    if b[:4] != b"FRMS":
+        raise ValueError("not a FRMS payload")
+    n = int.from_bytes(b[4:8], "little")
+    # frame matrix view + strided row-sum: one numpy reduction per
+    # document instead of a Python loop over every sampled byte
+    sums = np.frombuffer(
+        b, dtype=np.uint8, count=n * FRAME_BYTES, offset=8
+    ).reshape(n, FRAME_BYTES)[::every].sum(axis=1, dtype=np.int64)
+    return [(f, f / fps, s)
+            for f, s in zip(range(0, n, every), sums.tolist())]
 
 
 def sample_frames_real(
@@ -528,39 +493,24 @@ def sample_frames_real(
     """REAL frame sampler: parses the container header, slices every
     k-th fixed-size frame, and emits one row per sampled frame with
     an integer byte-sum checksum (oracle-predictable) — the
-    row-expanding mapInPandas shape an ffmpeg keyframe sampler uses."""
+    row-expanding map shape an ffmpeg keyframe sampler uses."""
+    return _decode(
+        df, bin_col, id_col, lambda b: _frame_samples(b, every, fps),
+        "id long, frame_idx int, ts_offset_s double, frame_sum long")
 
-    def sample_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, sums = [], [], []
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                if b[:4] != b"FRMS":
-                    raise ValueError("not a FRMS payload")
-                n = int.from_bytes(b[4:8], "little")
-                # frame matrix view + strided row-sum: one numpy
-                # reduction per document instead of a Python loop
-                # over every sampled byte
-                frames = np.frombuffer(
-                    b, dtype=np.uint8, count=n * FRAME_BYTES, offset=8
-                ).reshape(n, FRAME_BYTES)[::every]
-                fi = np.arange(0, n, every, dtype=np.int64)
-                ids.append(np.full(len(fi), int(rid), dtype=np.int64))
-                idxs.append(fi)
-                sums.append(frames.sum(axis=1, dtype=np.int64))
-            fid = np.concatenate(idxs) if idxs else np.array([], np.int64)
-            yield pd.DataFrame({
-                "id": np.concatenate(ids) if ids else np.array([], np.int64),
-                "frame_idx": fid.astype(np.int32),
-                "ts_offset_s": fid / fps,
-                "frame_sum": (np.concatenate(sums) if sums
-                              else np.array([], np.int64)),
-            })
 
-    return df.select(id_col, bin_col).mapInPandas(
-        sample_batches,
-        schema="id long, frame_idx int, ts_offset_s double, frame_sum long",
+def _bmp_resize(b: bytes) -> tuple:
+    px = _bmp_rows(b)
+    h, w = px.shape[0], px.shape[1] // 3
+    ow, oh = w // 2, h // 2
+    a3 = px.reshape(h, w, 3)[: 2 * oh, : 2 * ow, :].astype(np.int64)
+    totals = (
+        a3.reshape(oh, 2, 2 * ow, 3).sum(axis=1)
+        .reshape(oh, ow, 2, 3).sum(axis=2)
     )
+    resized = (totals // 4).astype(np.uint8)
+    return (w, h, ow, oh, int(resized.sum()),
+            _encode_bmp(resized.reshape(oh, ow * 3)))
 
 
 def resize_image_bmp(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
@@ -576,63 +526,7 @@ def resize_image_bmp(df: DataFrame, bin_col: str, id_col: str) -> DataFrame:
 
     Odd source dims drop the trailing row/column (floor semantics),
     matching the SQL oracle's closed form over the LCG stream."""
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("id", "in_width", "in_height", "out_width",
-                    "out_height", "out_sum", "resized")}
-            for rid, payload in zip(pdf[id_col], pdf[bin_col]):
-                b = bytes(payload)
-                if b[:2] != b"BM":
-                    raise ValueError("not a BMP payload")
-                data_off = int.from_bytes(b[10:14], "little")
-                w = int.from_bytes(b[18:22], "little", signed=True)
-                h = abs(int.from_bytes(b[22:26], "little", signed=True))
-                stride = (w * 3 + 3) // 4 * 4
-                # stored bottom-up -> flip to logical top-down rows
-                arr = np.frombuffer(
-                    b, dtype=np.uint8, count=stride * h, offset=data_off
-                ).reshape(h, stride)[:, :w * 3][::-1]
-                ow, oh = w // 2, h // 2
-                a3 = arr.reshape(h, w, 3)[: 2 * oh, : 2 * ow, :].astype(
-                    np.int64)
-                totals = (
-                    a3.reshape(oh, 2, 2 * ow, 3).sum(axis=1)
-                    .reshape(oh, ow, 2, 3).sum(axis=2)
-                )
-                resized = (totals // 4).astype(np.uint8)
-                # re-encode: bottom-up rows, 4-byte-aligned stride
-                row_raw = ow * 3
-                pad = (4 - row_raw % 4) % 4
-                img_size = (row_raw + pad) * oh
-                off = 14 + 40
-                header = (
-                    b"BM" + (off + img_size).to_bytes(4, "little")
-                    + b"\x00\x00\x00\x00" + off.to_bytes(4, "little")
-                    + (40).to_bytes(4, "little")
-                    + ow.to_bytes(4, "little") + oh.to_bytes(4, "little")
-                    + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-                    + (0).to_bytes(4, "little")
-                    + img_size.to_bytes(4, "little")
-                    + (2835).to_bytes(4, "little") * 2
-                    + (0).to_bytes(4, "little") * 2
-                )
-                flat = resized.reshape(oh, row_raw)[::-1]
-                body = b"".join(
-                    flat[y].tobytes() + b"\x00" * pad for y in range(oh)
-                )
-                out["id"].append(int(rid))
-                out["in_width"].append(w)
-                out["in_height"].append(h)
-                out["out_width"].append(ow)
-                out["out_height"].append(oh)
-                out["out_sum"].append(int(resized.sum()))
-                out["resized"].append(header + body)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, bin_col).mapInPandas(
-        resize_batches,
-        schema="id long, in_width int, in_height int, out_width int, "
-               "out_height int, out_sum long, resized binary",
-    )
+    return _decode(
+        df, bin_col, id_col, _bmp_resize,
+        "id long, in_width int, in_height int, out_width int, "
+        "out_height int, out_sum long, resized binary")

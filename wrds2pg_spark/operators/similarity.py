@@ -7,8 +7,8 @@ continuously adaptive similarity search build on):
 1. a candidate generator decides which rows are scored —
    - the full scan (``brute_force_topk``, the correctness baseline);
    - a hyperplane-LSH bucket set (``lsh_topk``, ``lsh_topk_indexed``);
-   - an IVF cell set, fitted KMeans (``ivf_topk``,
-     ``ivf_topk_indexed``) or the deterministic anchors
+   - an IVF cell set, from the fitted-KMeans index
+     (``ivf_topk_indexed``) or the deterministic anchors
      (``ivf_anchored_topk``);
 2. ``_exact_topk`` ranks the candidates: exact cosine against the
    query, rounded to 6 dp, then TakeOrderedAndProject on
@@ -38,10 +38,11 @@ from pyspark.sql import functions as F
 
 from wrds2pg_spark.session import lineage_cut
 
+from wrds2pg_spark.functions.arrow import map_batches, vectors
 from wrds2pg_spark.functions.vector import cosine_similarity, dot
 
 __all__ = [
-    "brute_force_topk", "lsh_topk", "ivf_topk", "blocked_pairs",
+    "brute_force_topk", "lsh_topk", "blocked_pairs",
     "lsh_blocked_pairs", "hyperplane", "probe_buckets",
     "ivf_anchors", "anchored_cell_expr", "anchored_probe_cells",
     "ivf_anchored_topk",
@@ -309,8 +310,8 @@ def blocked_pairs(
 # ---------------------------------------------------------------------------
 # Materialized ANN indexes: the 100-TB story made executable.
 #
-# Fitting/bucketing per query (lsh_topk / ivf_topk above) demos the
-# query SHAPE; at scale the cell assignment is paid ONCE at ingest and
+# Bucketing per query (lsh_topk above) demos the query SHAPE; at
+# scale the cell assignment is paid ONCE at ingest and
 # the corpus lands hive-partitioned by cell. A query then computes its
 # probe cells driver-side (tiny) and reads ONLY those directories —
 # partition pruning turns top-k into an O(corpus * nprobe/ncells) scan
@@ -499,24 +500,27 @@ def lsh_topk_indexed(
     partition column prunes to those directories at file-listing time
     — the scan never opens the other 2^nbits - (1+nbits) buckets."""
     probes = ["b" + p for p in probe_buckets(query_vec, nbits, radius)]
-    cands = _read_partitions(spark, index_path, "bucket", probes).filter(
-        F.col("bucket").isin(probes))
+    cands = _read_partitions(
+        spark, index_path, "bucket", "string", probes
+    ).filter(F.col("bucket").isin(probes))
     return _exact_topk(cands, query_vec, k, vec_col, [id_col])
 
 
-def _read_partitions(spark, path: str, col: str, values: list[str]):
+def _read_partitions(spark, path: str, col: str, dtype: str, values: list):
     """The hive-partitioned parquet table at ``path`` read from only the
-    ``col=value`` directories that exist.  Reading the root lists every
-    partition (256 LSH buckets: over Spark's parallel-discovery
-    threshold, so the listing runs as a job) and infers the schema in
-    another job; here the driver lists the few probe directories and
-    the schema is the one Spark wrote into a data file's footer."""
+    ``col=value`` directories that exist, with ``col`` typed ``dtype``
+    (a Spark type name: ``integer`` for IVF cells, ``string`` for LSH
+    buckets).  Reading the root lists every partition (256 LSH buckets:
+    over Spark's parallel-discovery threshold, so the listing runs as a
+    job) and infers the schema in another job; here the driver lists
+    the few probe directories and the schema is the one Spark wrote
+    into a data file's footer."""
     import glob
     import json
     import os
 
     import pyarrow.parquet as pq
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StructType
 
     dirs = [d for d in (os.path.join(path, f"{col}={v}") for v in values)
             if os.path.isdir(d)]
@@ -526,8 +530,7 @@ def _read_partitions(spark, path: str, col: str, values: list[str]):
         return spark.read.parquet(path)
     meta = pq.read_schema(sample).metadata[
         b"org.apache.spark.sql.parquet.row.metadata"]
-    schema = StructType.fromJson(json.loads(meta)).add(
-        StructField(col, StringType()))
+    schema = StructType.fromJson(json.loads(meta)).add(col, dtype)
     if not dirs:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).option("basePath", path).parquet(*dirs)
@@ -550,11 +553,23 @@ def build_ivf_index(
     import json
     import os
 
-    cells, centers = _kmeans_cells(
-        df, nlist, seed, vec_col, id_col, fit_fraction)
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feat = df.select(
+        F.col(id_col), F.col(vec_col),
+        array_to_vector(
+            F.transform(F.col(vec_col), lambda x: x.cast("double"))
+        ).alias("__feat"),
+    )
+    fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
+    model = KMeans(
+        k=nlist, seed=seed, featuresCol="__feat", predictionCol="cell"
+    ).fit(fit_on)
+    centers = [[float(x) for x in c] for c in model.clusterCenters()]
     (
-        cells
-        .select(F.col(id_col), F.col(vec_col), F.col("__cell").alias("cell"))
+        model.transform(feat)
+        .select(F.col(id_col), F.col(vec_col), F.col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(path)
     )
     with open(os.path.join(path, "_ivf_centroids.json"), "w") as f:
@@ -579,31 +594,11 @@ def ivf_topk_indexed(
 
     with open(os.path.join(index_path, "_ivf_centroids.json")) as f:
         centers = json.load(f)
-    cands = spark.read.parquet(index_path).filter(
-        F.col("cell").isin(_nearest_cells(centers, query_vec, nprobe)))
+    probe = _nearest_cells(centers, query_vec, nprobe)
+    cands = _read_partitions(
+        spark, index_path, "cell", "integer", probe
+    ).filter(F.col("cell").isin(probe))
     return _exact_topk(cands, query_vec, k, vec_col, [id_col])
-
-
-def _kmeans_cells(df: DataFrame, nlist: int, seed: int, vec_col: str,
-                  id_col: str, fit_fraction: float | None = None):
-    """Seeded KMeans over ``vec_col`` (fit on a ``fit_fraction`` sample
-    when given; the assignment still covers every row): returns the
-    (id, vec, __feat, __cell) rows and the centroids as floats."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feat = df.select(
-        F.col(id_col), F.col(vec_col),
-        array_to_vector(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("__feat"),
-    )
-    fit_on = feat.sample(fit_fraction, seed=seed) if fit_fraction else feat
-    model = KMeans(
-        k=nlist, seed=seed, featuresCol="__feat", predictionCol="__cell"
-    ).fit(fit_on)
-    centers = [[float(x) for x in c] for c in model.clusterCenters()]
-    return model.transform(feat), centers
 
 
 def _nearest_cells(centers: list[list[float]], query_vec: list[float],
@@ -789,31 +784,25 @@ def pq_encode(
     storing 8 bytes per vector next to the raw floats.  The final
     6-dp round stays JVM-side so it is the same op the oracle runs."""
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = np.array([ksub ** i for i in range(m)], dtype=np.int64)
-        for pdf in batches:
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if V.shape[1] != dim:
-                raise ValueError(
-                    f"embedding width {V.shape[1]} != declared dim {dim}; "
-                    "codes/MSE would silently drop trailing dimensions"
-                )
-            codes, mins = _pq_codes_mins(V, m, ksub)
-            mse = np.zeros(len(pdf))
-            for i in range(m):                      # left-to-right sum
-                mse += mins[:, i]
-            yield pd.DataFrame({
-                "id": pdf[id_col].astype("int64"),
-                "pq_code": codes @ weights,
-                "raw_mse": mse,
-            })
+    weights = np.array([ksub ** i for i in range(m)], dtype=np.int64)
 
-    out = df.select(id_col, vec_col).mapInPandas(
-        encode, schema="id long, pq_code long, raw_mse double"
-    )
+    def encode(batch):
+        V = vectors(batch, vec_col)
+        if V.shape[1] != dim:
+            raise ValueError(
+                f"embedding width {V.shape[1]} != declared dim {dim}; "
+                "codes/MSE would silently drop trailing dimensions"
+            )
+        codes, mins = _pq_codes_mins(V, m, ksub)
+        mse = np.zeros(len(V))
+        for i in range(m):                          # left-to-right sum
+            mse += mins[:, i]
+        return {"id": batch.column(0), "pq_code": codes @ weights,
+                "raw_mse": mse}
+
+    out = map_batches(df.select(id_col, vec_col), encode,
+                      "id long, pq_code long, raw_mse double")
     return out.select(
         F.col("id").alias(id_col),
         "pq_code",
@@ -839,26 +828,18 @@ def pq_adc_topk(
     pq_encode column and the scan reads 8 bytes/vector.  Same Arrow
     kernel as pq_encode; the top-k is TakeOrdered, no global sort."""
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
 
     luts = np.array(_pq_luts(query_vec, m, ksub), dtype=np.float64)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes, _ = _pq_codes_mins(V, m, ksub)
-            d = np.zeros(len(pdf))
-            for i in range(m):                      # left-to-right sum
-                d += luts[i][codes[:, i]]
-            yield pd.DataFrame({
-                "id": pdf[id_col].astype("int64"),
-                "raw_dist": d,
-            })
+    def score(batch):
+        codes, _ = _pq_codes_mins(vectors(batch, vec_col), m, ksub)
+        d = np.zeros(len(codes))
+        for i in range(m):                          # left-to-right sum
+            d += luts[i][codes[:, i]]
+        return {"id": batch.column(0), "raw_dist": d}
 
-    out = df.select(id_col, vec_col).mapInPandas(
-        score, schema="id long, raw_dist double"
-    )
+    out = map_batches(df.select(id_col, vec_col), score,
+                      "id long, raw_dist double")
     return (
         out.select(
             F.col("id").alias(id_col),
@@ -903,32 +884,22 @@ def _ivfpq_encode(
     by the full build and the incremental upsert so both paths encode
     with the SAME (frozen) anchors and codebooks by construction."""
     import numpy as np
-    import pandas as pd
-    from collections.abc import Iterator
 
     anchors = np.array(ivf_anchors(nlist, dim), dtype=np.float64)
+    weights = np.array([ksub ** i for i in range(m)], dtype=np.int64)
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = np.array([ksub ** i for i in range(m)], dtype=np.int64)
-        for pdf in batches:
-            V = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            n = V.shape[0]
-            acc = np.zeros((n, nlist))
-            for j in range(dim):                    # sequential dots:
-                acc += V[:, j:j + 1] * anchors[:, j]  # == the SQL fold
-            cell = np.argmax(acc, axis=1)           # first occurrence
-            codes, _ = _pq_codes_mins(V, m, ksub)
-            yield pd.DataFrame({
-                "id": pdf[id_col].astype("int64"),
-                "pq_code": codes @ weights,
-                "cell": cell.astype("int32"),
-            })
+    def encode(batch):
+        V = vectors(batch, vec_col)
+        acc = np.zeros((V.shape[0], nlist))
+        for j in range(dim):                        # sequential dots:
+            acc += V[:, j:j + 1] * anchors[:, j]    # == the SQL fold
+        codes, _ = _pq_codes_mins(V, m, ksub)
+        return {"id": batch.column(0), "pq_code": codes @ weights,
+                "cell": np.argmax(acc, axis=1)}     # first occurrence
 
-    return (
-        df.select(id_col, vec_col)
-        .mapInPandas(encode, schema="id long, pq_code long, cell int")
-        .withColumnRenamed("id", id_col)
-    )
+    return map_batches(
+        df.select(id_col, vec_col), encode, "id long, pq_code long, cell int"
+    ).withColumnRenamed("id", id_col)
 
 
 def upsert_ivfpq_index(
@@ -1010,7 +981,7 @@ def ivfpq_topk_indexed(
             F.array(*[F.lit(x) for x in lut]), (code + 1).cast("int"))
         score = term if score is None else score + term
     return (
-        spark.read.parquet(index_path)
+        _read_partitions(spark, index_path, "cell", "integer", probe)
         .filter(F.col("cell").isin(probe))
         .select(F.col(id_col), F.round(score, 6).alias("adc_dist"))
         .orderBy(F.col("adc_dist").asc(), F.col(id_col))
@@ -1076,30 +1047,3 @@ def lsh_blocked_pairs(
         "bucket", "id_a", "id_b",
         F.round(F.col("raw_cos"), 6).alias("cos_sim"),
     )
-
-
-def ivf_topk(
-    df: DataFrame,
-    query_vec: list[float],
-    k: int = 20,
-    nlist: int = 16,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means partitions the
-    corpus into ``nlist`` cells; a query scans only the ``nprobe``
-    cells whose centroids are nearest — the classic FAISS-style ANN
-    layout, scanning ~nprobe/nlist of the corpus.
-
-    Spark shape: KMeans fit (seeded -> deterministic) + a map-only
-    cell assignment; centroid-to-query distances are computed on the
-    tiny centroid list driver-side.  At 100 TB the fit runs on a
-    sample and the cell assignment is materialized once as an index
-    column (partition the lake by cell for real deployments); here it
-    rides the query for self-containment."""
-    cells, centers = _kmeans_cells(df, nlist, seed, vec_col, id_col)
-    cands = cells.filter(
-        F.col("__cell").isin(_nearest_cells(centers, query_vec, nprobe)))
-    return _exact_topk(cands, query_vec, k, vec_col, [id_col])

@@ -23,6 +23,7 @@ from dataclasses import dataclass
 
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 
+from pyspark.errors import PySparkAttributeError
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -3237,6 +3238,20 @@ def tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKETED_ENSURED: dict = {}
 
 
+def _drop_stopped(memo, session_of) -> None:
+    """Delete every ``memo`` entry whose session,
+    ``session_of(key, value)``, has stopped (its SparkContext lost its
+    JVM handle).  A Spark Connect session has no SparkContext and is
+    never memoized live, so it counts as stopped."""
+    for k, v in list(memo.items()):
+        try:
+            stopped = session_of(k, v).sparkContext._jsc is None
+        except PySparkAttributeError:  # Spark Connect: no SparkContext
+            stopped = True
+        if stopped:
+            del memo[k]
+
+
 def _bucketed_fact(
     spark: SparkSession, sf_dir: str, table: str, key: str,
     n_buckets: int = 32,
@@ -3271,13 +3286,7 @@ def _bucketed_fact(
     # LIVE sessions sharing a table name from thrashing a single slot;
     # the strong session ref in the value keeps the id from being
     # reused while the entry exists.
-    for k, (sess, _d) in list(_BUCKETED_ENSURED.items()):
-        try:
-            stale = sess.sparkContext._jsc is None
-        except Exception:
-            stale = True
-        if stale:
-            del _BUCKETED_ENSURED[k]
+    _drop_stopped(_BUCKETED_ENSURED, lambda _k, v: v[0])
     if not spark.catalog.tableExists(name):
         # the session catalog is in-memory (no persistent metastore in
         # this sandbox), so a prior process's managed-table files may
@@ -3594,7 +3603,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL frame sampling: synth_frame_container packs fixed-size
     frames behind a counted header, sample_frames_real parses it and
     expands every 2nd frame to its own row with an integer checksum —
-    the row-expanding mapInPandas shape of an ffmpeg keyframe sampler
+    the row-expanding mapInArrow shape of an ffmpeg keyframe sampler
     (operators/multimodal.py). Oracle predicts index set and checksums."""
     from wrds2pg_spark.operators.multimodal import (
         sample_frames_real, synth_frame_container,
@@ -3631,7 +3640,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid BMP, and emit dims + the exact resized-pixel checksum —
     which the oracle reproduces as a closed form over the LCG byte
     stream.  Pixels never leave the executor (narrow Arrow-batched
-    mapInPandas); only dims and checksums are compared.  The
+    mapInArrow); only dims and checksums are compared.  The
     re-encoded binary round-trips through the BMP decoder in
     tests/test_multimodal.py."""
     from wrds2pg_spark.operators.multimodal import (
@@ -3676,13 +3685,13 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-frame selection — the video-curation step that picks the
     scene-change frame a VLM training pipeline keeps: decode all
-    frames (mapInPandas container walk, every=1), score each frame by
+    frames (mapInArrow container walk, every=1), score each frame by
     the absolute checksum delta vs its predecessor (the cheap proxy
     for inter-frame difference an ffmpeg select=scenecut filter
     computes), take the top-1 per document with a deterministic
     tie-break.
 
-    Shape: the row-expanding decode is Arrow-batched mapInPandas
+    Shape: the row-expanding decode is Arrow-batched mapInArrow
     (frames >> docs, so the expansion happens executor-side), then
     ONE doc-partitioned window serves both the lag and the top-1
     rank — the same exchange, no self-join.  The LCG-synthesized
@@ -7121,13 +7130,7 @@ def _rcte_child_session(spark: SparkSession) -> "tuple[SparkSession, str]":
     every invocation (parent default for the edge build, the
     frontier clamp for the recursion), so no stale conf survives
     between calls with different sf_dirs."""
-    for sess in list(_RCTE_CHILD):
-        try:
-            stale = sess is not spark and sess.sparkContext._jsc is None
-        except Exception:
-            stale = True
-        if stale:
-            del _RCTE_CHILD[sess]
+    _drop_stopped(_RCTE_CHILD, lambda sess, _v: sess)
     hit = _RCTE_CHILD.get(spark)
     if hit is not None:
         child, serial = hit

@@ -159,7 +159,9 @@ def compact_small_files(
     # newSession() starts from context DEFAULTS, not the caller's
     # runtime conf — timestamp semantics (session timezone, parquet
     # datetime rebase modes) must carry over or a compaction of
-    # legacy-rebase data could rewrite values under different rules
+    # legacy-rebase data could rewrite values under different rules.
+    # All five exist in Spark 4.1, so a missing one fails loudly
+    # instead of compacting under the child's defaults.
     for k in (
         "spark.sql.session.timeZone",
         "spark.sql.parquet.datetimeRebaseModeInRead",
@@ -167,10 +169,7 @@ def compact_small_files(
         "spark.sql.parquet.int96RebaseModeInRead",
         "spark.sql.parquet.int96RebaseModeInWrite",
     ):
-        try:
-            child.conf.set(k, spark.conf.get(k))
-        except Exception:
-            pass  # conf absent in this Spark build — keep default
+        child.conf.set(k, spark.conf.get(k))
     child.conf.set("spark.sql.files.maxPartitionBytes", str(target_bytes))
     # default openCostInBytes (4 MB) pads every file to 4 MB for
     # packing purposes — correct for scheduling fairness, wrong for a

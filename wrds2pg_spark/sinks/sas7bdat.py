@@ -2,10 +2,11 @@
 
 The reference consumes SAS datasets but can never produce one (its SAS
 side is a rented server process, wrds2pg/sas/stream.py:29-88); this
-module writes real ``.sas7bdat`` files from pandas or Spark
-DataFrames, which closes the round-trip for our reader
-(sources/sas7bdat.py) and gives tests a GENUINE binary fixture instead
-of an injected decoder (round 7, VERDICT item 6).
+module writes real ``.sas7bdat`` files from pandas DataFrames (Spark
+DataFrames go through ``df.write.format("sas7bdat")``,
+sources/sas7bdat_datasource.py), which closes the round-trip for our
+reader (sources/sas7bdat.py) and gives tests a GENUINE binary fixture
+instead of an injected decoder (round 7, VERDICT item 6).
 
 Format scope (the public Shotwell/Hobbs binary layout, the same spec
 pandas' SAS7BDATReader implements): 32-bit little-endian,
@@ -37,10 +38,9 @@ pandas.io.sas.sas_constants, all public):
 
 from __future__ import annotations
 
-import os
 import struct
 
-__all__ = ["write_sas7bdat", "write_sas7bdat_files"]
+__all__ = ["write_sas7bdat"]
 
 _MAGIC = bytes.fromhex(
     "000000000000000000000000c2ea8160b31411cfbd92080009c7318c181f1011"
@@ -217,42 +217,3 @@ def write_sas7bdat(
             if n_rows == 0:
                 break
 
-
-def write_sas7bdat_files(df, out_dir: str, *, page_length: int = 4096):
-    """Distributed sas7bdat sink: one file per Spark partition via
-    ``mapInPandas`` (executor-side; the driver never materializes the
-    data), named ``part-{pid:05d}.sas7bdat``.  Returns the manifest
-    DataFrame (path, rows) — call an action on it to trigger the
-    write, mirroring Spark's own writer semantics.
-
-    Scale note: same contract as the CSV/parquet sinks' per-partition
-    files; a sas7bdat file is unsplittable on read, so choose the
-    partition count to match the downstream read parallelism."""
-    import pandas as pd  # noqa: F401
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def fn(it):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        chunks = [pdf for pdf in it if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        path = os.path.join(out_dir, f"part-{pid:05d}.sas7bdat")
-        # Stage-and-rename publish: a retried or speculative attempt of
-        # this partition could otherwise interleave writes on the final
-        # path and publish a torn binary.  Each attempt writes its own
-        # temp name (attemptNumber disambiguates) and os.replace()s it
-        # in — atomic on POSIX, so whichever attempt lands last leaves
-        # one complete file (both attempts carry identical bytes).
-        # Same doctrine as the parquet/PG sinks' atomic overwrite.
-        tmp = f"{path}.tmp.{ctx.attemptNumber()}"
-        write_sas7bdat(pdf, tmp, page_length=page_length)
-        os.replace(tmp, path)
-        yield pd.DataFrame({"path": [path], "rows": [len(pdf)]})
-
-    return df.mapInPandas(fn, "path string, rows long")

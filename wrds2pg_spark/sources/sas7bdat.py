@@ -160,15 +160,6 @@ def decode_file(
         yield pa.RecordBatch.from_arrays(cols, schema=target)
 
 
-def _decode_files(chunksize: int, target: pa.Schema):
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for path in batch.column("path").to_pylist():
-                yield from decode_file(path, chunksize, target)
-
-    return fn
-
-
 def read_sas7bdat(
     spark: SparkSession,
     path: str,
@@ -184,27 +175,30 @@ def read_sas7bdat(
     read, see ``infer_schema``).
     """
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StringType, StructField, StructType
+    from pyspark.sql.types import StructType
 
     files = _expand(path)
     if schema is None:
         schema = infer_schema(files[0])
     elif isinstance(schema, str):
         schema = StructType.fromDDL(schema)
+    target = to_arrow_schema(schema)
 
-    # Exactly one file per task, with NO exchange: parallelize with
-    # numSlices=len(files) slices the path list 1-per-partition (the
-    # r7 form hash-repartitioned a LocalRelation — measured 0.67 s vs
-    # 0.33 s for this shape at the bench's 8-file lake, and a hash
-    # collision could stack two files on one task while another sat
-    # idle).  This is partitioning-control plumbing only — the decode
-    # stays a streaming per-file pandas.read_sas(chunksize=...) so a
-    # multi-GB SAS file never materializes in memory (the binaryFile
-    # alternative holds whole files as rows; rejected).
-    paths_df = spark.createDataFrame(
-        spark.sparkContext.parallelize([(f,) for f in files],
-                                       len(files)),
-        StructType([StructField("path", StringType())]),
-    )
-    return paths_df.mapInArrow(
-        _decode_files(chunksize, to_arrow_schema(schema)), schema)
+    def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for i in batch.column("id").to_pylist():
+                yield from decode_file(files[i], chunksize, target)
+
+    # Exactly one file per task, with NO exchange and no RDD stage:
+    # spark.range with numPartitions=len(files) puts id i alone in
+    # partition i, and the decode finds its file in the path list the
+    # closure carries (pickled once with the function; a literal
+    # path-array column would copy the list into the plan instead).
+    # A hash-repartitioned LocalRelation could stack two files on one
+    # task, and a parallelized path list ran as a Python RDD stage
+    # under a second Python worker daemon.  The decode streams
+    # pandas.read_sas(chunksize) per file, so a multi-GB SAS file
+    # never materializes in memory (the binaryFile alternative holds
+    # whole files as rows; rejected).
+    return spark.range(len(files), numPartitions=len(files)).mapInArrow(
+        decode, schema)

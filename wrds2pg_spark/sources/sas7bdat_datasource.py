@@ -106,9 +106,8 @@ class _CommitMsg(WriterCommitMessage):
 
 class _Sas7bdatWriter(DataSourceWriter):
     """``df.write.format("sas7bdat")`` — one binary file per input
-    partition, the same contract as sinks/sas7bdat.py
-    write_sas7bdat_files (unsplittable on read, so write parallelism =
-    read parallelism).  Tasks stage to a process/attempt-unique temp
+    partition (per ``rows_per_file`` rows of it): a sas7bdat is
+    unsplittable on read, so write parallelism = read parallelism.  Tasks stage to a process/attempt-unique temp
     name and publish into the final directory only from ``commit()``'s
     manifest — Spark's standard two-phase output commit, so a failed
     or speculative attempt can never leave a half-written binary
