@@ -3,9 +3,9 @@
 Runs a registered Spark query and its oracle SQL on the same parquet
 fixtures, then compares row count, column names, and an
 order-insensitive value multiset (columns sorted by name, rows sorted,
-floats rounded to a comparison precision).  Stricter in spirit than
-the driver can be assumed to be, so passing here should imply passing
-there.
+floats rounded to a comparison precision, every value tagged with its
+type).  ``tools/driver_sim.py`` imports the same normalizer and view
+setup, so the two cannot disagree on what "match" means.
 """
 
 from __future__ import annotations
@@ -20,14 +20,20 @@ from wrds2pg_spark.sources.testdata import TABLES
 FLOAT_DECIMALS = 6
 
 
-def run_oracle(sf_dir: str, sql: str) -> list[tuple]:
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table."""
     con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def run_oracle(sf_dir: str, sql: str) -> tuple[list[str], list[tuple]]:
+    con = oracle_connection(sf_dir)
     try:
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')"
-            )
         cur = con.execute(sql)
         cols = [d[0] for d in cur.description]
         rows = cur.fetchall()
@@ -36,20 +42,26 @@ def run_oracle(sf_dir: str, sql: str) -> list[tuple]:
         con.close()
 
 
-def _norm_val(v: Any) -> Any:
+def norm(v: Any) -> str:
+    # Type-tag every value: the driver hashes an int 613 and a float
+    # 613.0 (DuckDB HUGEINT -> pandas float) differently, and True and
+    # 1 too, while Python's cross-type equality would hide both.
+    if isinstance(v, bool):
+        return f"b:{v}"
     if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, FLOAT_DECIMALS)
+        return "f:NaN" if math.isnan(v) else f"f:{round(v, FLOAT_DECIMALS)}"
+    if isinstance(v, int):
+        return f"i:{v}"
     if isinstance(v, bytes):
-        return v.hex()
-    return str(v) if not isinstance(v, (int, bool, type(None))) else v
+        return f"x:{v.hex()}"
+    if v is None:
+        return "n:"
+    return f"s:{v}"
 
 
-def _normalize(cols: list[str], rows: list[tuple]) -> list[tuple]:
+def normalize(cols: list[str], rows: list[tuple]) -> list[tuple]:
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(_norm_val(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
+    return sorted(tuple(norm(r[i]) for i in order) for r in rows)
 
 
 def compare_query(spark, sf_dir: str, name: str) -> None:
@@ -70,8 +82,8 @@ def compare_query(spark, sf_dir: str, name: str) -> None:
     assert len(s_rows) == len(o_rows), (
         f"{name}: row count spark={len(s_rows)} oracle={len(o_rows)}"
     )
-    sn = _normalize(s_cols, s_rows)
-    on = _normalize(o_cols, o_rows)
+    sn = normalize(s_cols, s_rows)
+    on = normalize(o_cols, o_rows)
     if sn != on:
         diffs = [(a, b) for a, b in zip(sn, on) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")

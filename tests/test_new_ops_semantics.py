@@ -180,6 +180,16 @@ def test_footer_rows_glob_metachars(tmp_path):
     assert _parquet_footer_rows(str(sf), "part") == 5
 
 
+def test_footer_rows_missing_or_garbage_takes_small_path(tmp_path):
+    """A missing file (FileNotFoundError) or a garbage footer
+    (ArrowInvalid, a ValueError) reads as 0 rows, the small-data plan."""
+    from wrds2pg_spark.queries import _parquet_footer_rows
+
+    assert _parquet_footer_rows(str(tmp_path), "part") == 0
+    (tmp_path / "part.parquet").write_bytes(b"not a parquet file")
+    assert _parquet_footer_rows(str(tmp_path), "part") == 0
+
+
 def test_variant_extract_null_on_malformed_json(spark, tmp_path):
     """json_variant_extract must treat a malformed props row as NULL
     (try_parse_json), matching get_json_object and the DuckDB oracle

@@ -467,10 +467,15 @@ def test_dedup_operators_handle_degenerate_docs(spark):
     must flow through every dedup operator without errors: empty
     shingle sets produce no buckets (so no pairs), never crashes."""
     from wrds2pg_spark.operators.dedup import (
+        containment_pairs_from_posting,
         dedup_exact,
         minhash_lsh_pairs,
+        minhash_lsh_pairs_portable,
+        ngram_containment_pairs,
         ngram_jaccard_pairs,
+        portable_bucket_keys,
         simhash_fingerprints,
+        simhash_fingerprints_portable,
     )
 
     rows = [
@@ -485,6 +490,11 @@ def test_dedup_operators_handle_degenerate_docs(spark):
     assert simhash_fingerprints(docs).count() == 5     # every doc fingerprinted
     assert dedup_exact(docs).count() == 5              # all texts distinct
     assert ngram_jaccard_pairs(docs, ["lang", "source"], 0.9).count() == 0
+    assert minhash_lsh_pairs_portable(docs, 0.5).count() == 0
+    assert simhash_fingerprints_portable(docs).count() == 5
+    assert ngram_containment_pairs(docs, ["lang", "source"], 0.9).count() == 0
+    posting = portable_bucket_keys(docs)
+    assert containment_pairs_from_posting(docs, posting, 0.6).count() == 0
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -621,6 +631,34 @@ def test_parse_bytes_units_and_default(value, expected):
     from wrds2pg_spark.session import _parse_bytes
 
     assert _parse_bytes(value, default=7) == expected
+
+
+def test_fan_out_streaming_frame_is_noop(spark):
+    """A streaming frame has no file listing (inputFiles raises
+    AnalysisException): fan_out leaves it as it is."""
+    from wrds2pg_spark.session import fan_out
+
+    stream = spark.readStream.format("rate").load()
+    assert fan_out(stream, min_partitions=4) is stream
+
+
+@pytest.mark.parametrize("min_bytes,noop", [(1, True), (0, False)])
+def test_fan_out_vanished_file(spark, tmp_path, min_bytes, noop):
+    """A file deleted after the frame was built fails the file-status
+    listing (Py4JJavaError): with a byte floor fan_out cannot prove
+    the input clears it and is a no-op; without one it repartitions."""
+    import shutil
+
+    from wrds2pg_spark.session import fan_out
+
+    path = tmp_path / "region.parquet"
+    shutil.copy("/root/testdata/sf0.001/region.parquet", path)
+    df = spark.read.parquet(str(path))
+    path.unlink()
+    out = fan_out(df, min_partitions=4, min_bytes=min_bytes)
+    assert (out is df) == noop
+    if not noop:
+        assert "Repartition" in out._jdf.queryExecution().logical().toString()
 
 
 def test_hll_sketch_estimate_accuracy(spark):

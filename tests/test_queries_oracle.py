@@ -11,7 +11,7 @@ import sys
 import pytest
 
 sys.path.insert(0, os.path.dirname(__file__))
-from oracle_harness import compare_query  # noqa: E402
+from oracle_harness import compare_query, normalize  # noqa: E402
 
 from wrds2pg_spark.queries import REGISTRY
 
@@ -20,6 +20,15 @@ SF_DRIVER = "/root/testdata/sf0.01"
 
 ORACLE_KEYS = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 ALL_KEYS = sorted(REGISTRY)
+
+
+def test_oracle_normalizer_is_type_strict():
+    """An int and an equal float, or a bool and an equal int, do not
+    match: the driver hashes them differently."""
+    cols = ["v"]
+    assert normalize(cols, [(613,)]) != normalize(cols, [(613.0,)])
+    assert normalize(cols, [(True,)]) != normalize(cols, [(1,)])
+    assert normalize(cols, [(0.1 + 0.2,)]) == normalize(cols, [(0.3,)])
 
 
 @pytest.mark.parametrize("name", ORACLE_KEYS)

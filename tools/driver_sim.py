@@ -5,49 +5,23 @@ Usage: python tools/driver_sim.py [sf_dir]
 Runs entry(spark) (smoke: rows>0, stable schema), then every
 queries() entry at the given sf_dir, comparing against oracle_sql()
 via DuckDB exactly in the spirit of CORRECTNESS_r{N}.json
-(row count + sorted-column schema + order-insensitive value multiset).
+(row count + sorted-column schema + order-insensitive value multiset,
+normalized by tests/oracle_harness.py, which the tier-1 oracle tests
+share).
 """
 
 from __future__ import annotations
 
-import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import duckdb  # noqa: E402
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [_REPO, os.path.join(_REPO, "tests")]
 
 import __spark_entry__ as entrymod  # noqa: E402
+from oracle_harness import normalize, oracle_connection  # noqa: E402
 from wrds2pg_spark.session import get_spark  # noqa: E402
-from wrds2pg_spark.sources.testdata import TABLES  # noqa: E402
-
-FLOAT_DECIMALS = 6
-
-
-def norm(v):
-    # Type-tag every value: the round-1 driver hashed an int 613 and a
-    # float 613.0 (DuckDB HUGEINT -> pandas float) DIFFERENTLY while the
-    # old norm() let Python's cross-type equality hide it.  Being
-    # type-strict here makes this harness at least as harsh as the
-    # driver.
-    if isinstance(v, bool):
-        return f"b:{v}"
-    if isinstance(v, float):
-        return "f:NaN" if math.isnan(v) else f"f:{round(v, FLOAT_DECIMALS)}"
-    if isinstance(v, int):
-        return f"i:{v}"
-    if isinstance(v, bytes):
-        return f"x:{v.hex()}"
-    if v is None:
-        return "n:"
-    return f"s:{v}"
-
-
-def normalize(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm(r[i]) for i in order) for r in rows]
-    return sorted(out, key=lambda t: tuple(str(x) for x in t))
 
 
 def main() -> int:
@@ -60,11 +34,7 @@ def main() -> int:
     print(f"entry(): rows={n} cols={edf.columns} ({time.time()-t0:.1f}s)")
     assert n > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     assert set(oracles) <= set(qs), "oracle keys must be subset of queries"

@@ -24,12 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from wrds2pg_spark.queries import REGISTRY  # noqa: E402
 from wrds2pg_spark.session import get_spark  # noqa: E402
+from wrds2pg_spark.sources.testdata import TABLES  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
 
 
 def main() -> None:

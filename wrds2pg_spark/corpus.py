@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from wrds2pg_spark.functions.numeric import (
     DAVG_SQL, DSUM_SQL, davg, dsum, with_broadcast_scalars)
-from wrds2pg_spark.queries import register
+from wrds2pg_spark.queries import _emb_cos_sql, register
 from wrds2pg_spark.session import FAN_OUT_2MB, fan_out, lineage_cut
 from wrds2pg_spark.sources.testdata import load_table
 
@@ -461,28 +461,12 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECONTAM_N = 8
 
-def _emb_dot_sql(a: str, b: str) -> str:
-    return (f"list_dot_product(list_transform({a}, x -> CAST(x AS DOUBLE)), "
-            f"list_transform({b}, x -> CAST(x AS DOUBLE)))")
-
-
-def _emb_cos_sql_(a: str, b: str) -> str:
-    dot = _emb_dot_sql(a, b)
-    na = "SQRT(" + _emb_dot_sql(a, a) + ")"
-    nb = "SQRT(" + _emb_dot_sql(b, b) + ")"
-    return f"ROUND({dot} / ({na} * {nb}), 6)"
-
-
-def _emb_cos_raw_sql_(a: str, b: str) -> str:
-    """Unrounded cosine: the per-pair doubles are bitwise identical
-    across engines (sequential dot + correctly-rounded sqrt/div), so
-    max/threshold operate on raw values and only the final reported
-    scalar is rounded — which is what lets the Arrow kernel replicate
-    the arithmetic without replicating an engine's ROUND."""
-    dot = _emb_dot_sql(a, b)
-    na = "SQRT(" + _emb_dot_sql(a, a) + ")"
-    nb = "SQRT(" + _emb_dot_sql(b, b) + ")"
-    return f"({dot} / ({na} * {nb}))"
+# Unrounded cosine: the per-pair doubles are bitwise identical across
+# engines (sequential dot + correctly-rounded sqrt/div), so max and the
+# threshold operate on raw values and only the reported scalar is
+# rounded, which lets the Arrow kernel replicate the arithmetic without
+# replicating an engine's ROUND.
+_DECONTAM_COS = _emb_cos_sql("t.embedding", "b.embedding", rounded=False)
 
 
 @register(
@@ -495,11 +479,9 @@ def _emb_cos_raw_sql_(a: str, b: str) -> str:
         WHERE vec_id % 29 <> 0),
     hits AS (
         SELECT t.vec_id, t.label,
-               MAX({_emb_cos_raw_sql_('t.embedding', 'b.embedding')})
-                   AS max_cos,
+               MAX({_DECONTAM_COS}) AS max_cos,
                COUNT(*) FILTER (
-                   WHERE {_emb_cos_raw_sql_('t.embedding', 'b.embedding')}
-                         >= 0.35) AS n_hits
+                   WHERE {_DECONTAM_COS} >= 0.35) AS n_hits
         FROM train t CROSS JOIN bench b
         GROUP BY t.vec_id, t.label)
     SELECT label,
@@ -1638,9 +1620,7 @@ def _rag_emb_terms_sql(hx: str) -> list[str]:
 
 def _rag_oracle() -> str:
     from wrds2pg_spark.operators.similarity import anchored_probe_cells
-    from wrds2pg_spark.queries import (
-        _QVEC, _QVEC_SQL, _anchor_cell_sql, _emb_cos_sql,
-    )
+    from wrds2pg_spark.queries import _QVEC, _QVEC_SQL, _anchor_cell_sql
 
     ds, cell = _anchor_cell_sql("emb", _RAG_NLIST, _RAG_DIM)
     probes = ", ".join(

@@ -1186,7 +1186,10 @@ def scan_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MINHASH_PAIR_CTES = """
+# The SQL model of operators/dedup.py portable_bucket_keys: shingle
+# sets (`sets`) and the md5-portable (doc_id, bkey) posting (`bands`),
+# shared by every MinHash oracle.
+_MINHASH_BAND_CTES = """
     toks AS (
         SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
         FROM documents),
@@ -1208,21 +1211,34 @@ _MINHASH_PAIR_CTES = """
         SELECT doc_id,
                md5(CAST(s // 3 AS VARCHAR) || '|' ||
                    string_agg(mh, '|' ORDER BY s)) AS bkey
-        FROM sig GROUP BY doc_id, s // 3),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bands a
-        JOIN bands b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-    ver AS (
-        SELECT c.id_a, c.id_b,
-               round(len(list_intersect(sa.gs, sb.gs))
+        FROM sig GROUP BY doc_id, s // 3)"""
+
+# Exact Jaccard of the candidate's two shingle sets `sa` and `sb`.
+_GS_JACCARD_SQL = """round(len(list_intersect(sa.gs, sb.gs))
                      / CAST(len(sa.gs) + len(sb.gs)
                             - len(list_intersect(sa.gs, sb.gs)) AS DOUBLE),
-                     6) AS jaccard
+                     6)"""
+
+
+def _minhash_verify_ctes(bands: str) -> str:
+    """`cand`: distinct id_a < id_b pairs sharing a bucket of the
+    posting `bands`; `ver`: their exact Jaccard — the SQL model of
+    operators/dedup.py pairs_from_posting."""
+    return f"""
+    cand AS (
+        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM {bands} a
+        JOIN {bands} b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    ver AS (
+        SELECT c.id_a, c.id_b,
+               {_GS_JACCARD_SQL} AS jaccard
         FROM cand c
         JOIN sets sa ON sa.doc_id = c.id_a
         JOIN sets sb ON sb.doc_id = c.id_b)
 """
+
+
+_MINHASH_PAIR_CTES = f"{_MINHASH_BAND_CTES},{_minhash_verify_ctes('bands')}"
 
 
 @register(
@@ -1282,28 +1298,7 @@ _MINHASH_CAP = 2  # small enough to BITE on the fixtures (max bucket
 @register(
     "dedup_minhash_capped",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-        FROM documents),
-    ng AS (
-        SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-        FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS gs(i)
-        WHERE len(t) >= 3),
-    sets AS (
-        SELECT doc_id, list_distinct(list(g)) AS gs FROM ng GROUP BY doc_id),
-    sh AS (
-        SELECT doc_id,
-               md5(g) || md5('a' || g) || md5('b' || g) AS d
-        FROM (SELECT doc_id, UNNEST(gs) AS g FROM sets)),
-    sig AS (
-        SELECT doc_id, s, min(substr(d, s * 8 + 1, 8)) AS mh
-        FROM sh, UNNEST(generate_series(0, 11)) AS ss(s)
-        GROUP BY doc_id, s),
-    bands AS (
-        SELECT doc_id,
-               md5(CAST(s // 3 AS VARCHAR) || '|' ||
-                   string_agg(mh, '|' ORDER BY s)) AS bkey
-        FROM sig GROUP BY doc_id, s // 3),
+    WITH {_MINHASH_BAND_CTES},
     -- the cap: only the first {_MINHASH_CAP} ids (sorted) per bucket
     -- feed pair generation — the SQL model of slice(sort_array(ids),
     -- 1, cap) on the Spark side
@@ -1313,20 +1308,7 @@ _MINHASH_CAP = 2  # small enough to BITE on the fixtures (max bucket
                    row_number() OVER (PARTITION BY bkey
                                       ORDER BY doc_id) AS rn
             FROM bands)
-        WHERE rn <= {_MINHASH_CAP}),
-    cand AS (
-        SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM bandc a
-        JOIN bandc b ON a.bkey = b.bkey AND a.doc_id < b.doc_id),
-    ver AS (
-        SELECT c.id_a, c.id_b,
-               round(len(list_intersect(sa.gs, sb.gs))
-                     / CAST(len(sa.gs) + len(sb.gs)
-                            - len(list_intersect(sa.gs, sb.gs)) AS DOUBLE),
-                     6) AS jaccard
-        FROM cand c
-        JOIN sets sa ON sa.doc_id = c.id_a
-        JOIN sets sb ON sb.doc_id = c.id_b)
+        WHERE rn <= {_MINHASH_CAP}),{_minhash_verify_ctes('bandc')}
     SELECT id_a, id_b, jaccard FROM ver WHERE jaccard >= 0.5
     """,
 )
@@ -1372,10 +1354,7 @@ def dedup_minhash_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(len(list_intersect(sa.gs, sb.gs))
                      / CAST(least(len(sa.gs), len(sb.gs)) AS DOUBLE),
                      6) AS containment,
-               round(len(list_intersect(sa.gs, sb.gs))
-                     / CAST(len(sa.gs) + len(sb.gs)
-                            - len(list_intersect(sa.gs, sb.gs)) AS DOUBLE),
-                     6) AS jaccard
+               {_GS_JACCARD_SQL} AS jaccard
         FROM cand c
         JOIN sets sa ON sa.doc_id = c.id_a
         JOIN sets sb ON sb.doc_id = c.id_b)
@@ -1413,29 +1392,8 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental_minhash",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
-        FROM documents),
-    ng AS (
-        SELECT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS g
-        FROM toks, UNNEST(generate_series(1, len(t) - 2)) AS gs(i)
-        WHERE len(t) >= 3),
-    sets AS (
-        SELECT doc_id, list_distinct(list(g)) AS gs FROM ng GROUP BY doc_id),
-    sh AS (
-        SELECT doc_id,
-               md5(g) || md5('a' || g) || md5('b' || g) AS d
-        FROM (SELECT doc_id, UNNEST(gs) AS g FROM sets)),
-    sig AS (
-        SELECT doc_id, s, min(substr(d, s * 8 + 1, 8)) AS mh
-        FROM sh, UNNEST(generate_series(0, 11)) AS ss(s)
-        GROUP BY doc_id, s),
-    bands AS (
-        SELECT doc_id,
-               md5(CAST(s // 3 AS VARCHAR) || '|' ||
-                   string_agg(mh, '|' ORDER BY s)) AS bkey
-        FROM sig GROUP BY doc_id, s // 3),
+    oracle=f"""
+    WITH {_MINHASH_BAND_CTES},
     cand AS (
         SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_old
         FROM bands a
@@ -1443,10 +1401,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE a.doc_id % 17 = 3 AND b.doc_id % 17 <> 3),
     ver AS (
         SELECT c.id_new, c.id_old,
-               round(len(list_intersect(sa.gs, sb.gs))
-                     / CAST(len(sa.gs) + len(sb.gs)
-                            - len(list_intersect(sa.gs, sb.gs)) AS DOUBLE),
-                     6) AS jaccard
+               {_GS_JACCARD_SQL} AS jaccard
         FROM cand c
         JOIN sets sa ON sa.doc_id = c.id_new
         JOIN sets sb ON sb.doc_id = c.id_old)
@@ -1464,9 +1419,6 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass that avoids re-shingling the whole corpus per batch at
     100 TB.  The md5-portable family keeps even the index probe
     value-hash checked."""
-    import hashlib
-    import os
-
     from wrds2pg_spark.operators.dedup import (
         build_minhash_bucket_index, dedup_incremental_portable,
     )

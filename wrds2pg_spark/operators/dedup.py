@@ -5,17 +5,19 @@
                    distributed, keeps deterministic representative
 - ngram_jaccard    exact word-set Jaccard within blocking keys:
                    equi-join on the block, array_intersect in codegen
-- minhash_lsh      MinHash signatures (zero-shuffle, per-row HOFs) +
-                   banded LSH bucketing (shuffle on band hash) +
+- minhash_lsh      signature generator -> (id, bucket) posting ->
+                   one shared back half: per-bucket pair generation +
                    exact-Jaccard verification of candidates only —
                    the classic near-linear near-dup pipeline
 - simhash          64-bit SimHash fingerprints per document (JVM
                    token hashing + Arrow-batched numpy bit-fold;
                    grouping exact-matching fingerprints)
 
-All hashing uses Spark's built-in xxhash64 (JVM, codegen); the only
-Python in a hot path is simhash's vectorized numpy bit-fold, which a
-pure-expression formulation cannot match (see its docstring).
+The fast and portable MinHash families differ only in the generator:
+xxhash64 folded by the ``band_keys_udf`` pandas UDF, or md5 digests
+folded JVM-side so a SQL oracle can recompute every key.  The Python
+in hot paths is ``band_keys_udf`` and the two SimHash bit-folds,
+vectorized numpy per document (see their docstrings).
 """
 
 from __future__ import annotations
@@ -38,6 +40,8 @@ __all__ = [
     "simhash_fingerprints_portable",
     "connected_components",
     "portable_bucket_keys", "build_minhash_bucket_index",
+    "pairs_from_posting", "candidates_from_posting",
+    "containment_pairs_from_posting",
     "dedup_incremental_portable",
 ]
 
@@ -75,6 +79,27 @@ def ngram_jaccard_pairs(
     linear in block count); the set intersection runs as
     ``array_intersect`` inside whole-stage codegen.  For unblocked
     corpora use :func:`minhash_lsh_pairs` instead."""
+    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
+    union = (
+        F.size("toks_a").cast("double") + F.size("toks_b").cast("double") - inter
+    )
+    jac = F.round(inter / union, 6)
+    return (
+        _blocked_token_pairs(df, block_cols, text_col, id_col)
+        .select(
+            *block_cols, "id_a", "id_b", jac.alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _blocked_token_pairs(
+    df: DataFrame, block_cols: list[str], text_col: str, id_col: str
+) -> DataFrame:
+    """(block..., id_a, toks_a, id_b, toks_b) for every pair with
+    id_a < id_b sharing a blocking key, toks the distinct word set —
+    the shared front of :func:`ngram_jaccard_pairs` and
+    :func:`ngram_containment_pairs`."""
     base = df.select(
         F.col(id_col),
         *[F.col(c) for c in block_cols],
@@ -88,19 +113,19 @@ def ngram_jaccard_pairs(
         *[F.col(c) for c in block_cols],
         F.col(id_col).alias("id_b"), F.col("__toks").alias("toks_b"),
     )
-    inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
-    union = (
-        F.size("toks_a").cast("double") + F.size("toks_b").cast("double") - inter
-    )
-    jac = F.round(inter / union, 6)
     return (
         a.join(b, on=block_cols, how="inner")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            *block_cols, "id_a", "id_b", jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )
+
+
+def _jaccard(a: str, b: str):
+    """round(|A n B| / |A u B|, 6) over two set-valued array columns —
+    the one exact-Jaccard spelling of the posting-list verifiers (an
+    empty pair scores 0.0, not NaN)."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(a).cast("double") + F.size(b).cast("double") - inter
+    return F.round(inter / F.greatest(union, F.lit(1.0)), 6)
 
 
 def band_keys_udf(num_hashes: int = 64, bands: int = 16):
@@ -192,59 +217,33 @@ def minhash_lsh_pairs(
     output — to audit dropped ids, re-run the bucket aggregation
     upstream and filter ``size(ids) > cap`` (one extra job over the
     same shuffle).  Off by default so the oracle-checked behavior is
-    exact."""
+    exact.  Stages 2-4 are :func:`pairs_from_posting`, shared with
+    the portable family."""
+    keyed = _fast_bucket_keys(df, num_hashes, bands, text_col, id_col)
+    return pairs_from_posting(
+        df, keyed, threshold=threshold, text_col=text_col,
+        id_col=id_col, max_bucket_size=max_bucket_size,
+    )
+
+
+def _fast_bucket_keys(
+    df: DataFrame, num_hashes: int, bands: int, text_col: str, id_col: str
+) -> DataFrame:
+    """The (id, LSH-bucket) posting list with the fast xxhash64 family
+    (:func:`band_keys_udf`) — the counterpart of
+    :func:`portable_bucket_keys`."""
     base = df.select(
         F.col(id_col),
         F.transform(shingles(F.col(text_col)), lambda s: F.xxhash64(s)).alias(
             "__shh"
         ),
     )
-    keyed = base.select(
+    return base.select(
         F.col(id_col),
         F.explode(
             band_keys_udf(num_hashes, bands)(F.col("__shh"))
         ).alias("bucket"),
     )
-    buckets = (
-        keyed.groupBy("bucket")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-    if max_bucket_size is not None:
-        buckets = buckets.select(
-            F.slice("ids", 1, max_bucket_size).alias("ids")
-        ).filter(F.size("ids") > 1)
-    # (ids[j], ids[i]) for j < i — ids is a materialized agg output, so
-    # element_at here is a cheap array access, not a recompute.
-    pair_structs = let_(
-        F.col("ids"),
-        lambda ids: F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.size(ids) - 1),
-                lambda i: F.transform(
-                    F.slice(ids, 1, i),
-                    lambda a: F.struct(
-                        a.alias("id_a"),
-                        F.element_at(ids, (i + 1).cast("int")).alias("id_b"),
-                    ),
-                ),
-            )
-        ),
-    )
-    cand = (
-        buckets.select(F.explode(pair_structs).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-        # materialized: THREE consumers branch off the candidate set
-        # (the id dim and both verification joins), and a shared
-        # subtree re-executes once per consumer under AQE (exchange-
-        # reuse failure, BASELINE.md r6) — un-checkpointed, the whole
-        # signature pipeline ran once per branch.  The candidate set
-        # is tiny relative to N^2 by LSH design, so the checkpoint is
-        # bytes, not a corpus copy.
-        .transform(lineage_cut(eager=False))
-    )
-    return _verify_pairs_exact(df, cand, threshold, text_col, id_col)
 
 
 def _verify_pairs_exact(
@@ -266,11 +265,8 @@ def _verify_pairs_exact(
     each shingle) costs a fraction of string-array intersects and
     yields identical set sizes."""
     j = _candidate_shingle_sets(df, cand, text_col, id_col)
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size("sh_a").cast("double") + F.size("sh_b").cast("double") - inter
-    jac = F.round(inter / F.greatest(union, F.lit(1.0)), 6)
     return (
-        j.select("id_a", "id_b", jac.alias("jaccard"))
+        j.select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -427,8 +423,9 @@ def pairs_from_posting(
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Verified near-dup pairs from an (id, bucket) posting list —
-    the back half of :func:`minhash_lsh_pairs_portable`, split out
-    (round 8) so it also serves a MATERIALIZED posting list
+    the back half of both :func:`minhash_lsh_pairs` and
+    :func:`minhash_lsh_pairs_portable`; it also serves a MATERIALIZED
+    posting list
     (:func:`build_minhash_bucket_index`): pay the signature pass once
     at ingest, and every pair/cluster consumer starts from the index
     scan instead of re-shingling the corpus.  Values are identical
@@ -464,6 +461,8 @@ def candidates_from_posting(
         buckets = buckets.select(
             F.slice("ids", 1, max_bucket_size).alias("ids")
         ).filter(F.size("ids") > 1)
+    # (ids[j], ids[i]) for j < i — ids is a materialized agg output, so
+    # element_at here is a cheap array access, not a recompute.
     pair_structs = let_(
         F.col("ids"),
         lambda ids: F.flatten(
@@ -483,8 +482,10 @@ def candidates_from_posting(
         buckets.select(F.explode(pair_structs).alias("p"))
         .select("p.id_a", "p.id_b")
         .dropDuplicates(["id_a", "id_b"])
-        # same rationale as the fast variant: three consumers, no
-        # exchange reuse under AQE, tiny-by-design candidate set
+        # materialized: three consumers (the id dim and both verify
+        # joins), no exchange reuse under AQE (BASELINE.md r6) — cut,
+        # the signature pipeline runs once, not once per branch; the
+        # candidate set is tiny by LSH design, so this is bytes
         .transform(lineage_cut(eager=False))
     )
 
@@ -523,13 +524,10 @@ def containment_pairs_from_posting(
     j = _candidate_shingle_sets(df, cand, text_col, id_col)
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     smaller = F.least(F.size("sh_a"), F.size("sh_b")).cast("double")
-    union = (F.size("sh_a").cast("double")
-             + F.size("sh_b").cast("double") - inter)
     cont = F.round(inter / F.greatest(smaller, F.lit(1.0)), 6)
-    jac = F.round(inter / F.greatest(union, F.lit(1.0)), 6)
     return (
         j.select("id_a", "id_b", cont.alias("containment"),
-                 jac.alias("jaccard"))
+                 _jaccard("sh_a", "sh_b").alias("jaccard"))
         .filter(F.col("containment") >= threshold)
     )
 
@@ -613,11 +611,8 @@ def dedup_incremental_portable(
         .select("id_new", "id_old", "sh_n",
                 hash_of(F.col("__to")).alias("sh_o"))
     )
-    inter = F.size(F.array_intersect("sh_n", "sh_o")).cast("double")
-    union = F.size("sh_n").cast("double") + F.size("sh_o").cast("double") - inter
-    jac = F.round(inter / F.greatest(union, F.lit(1.0)), 6)
     return (
-        j.select("id_new", "id_old", jac.alias("jaccard"))
+        j.select("id_new", "id_old", _jaccard("sh_n", "sh_o").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
 
@@ -632,7 +627,7 @@ def simhash_fingerprints(
 
     bit_i = sign of sum over tokens of (2*bit_i(xxhash64(token)) - 1);
     near-dups have small Hamming distance.  Also emits the count of
-    docs sharing the exact fingerprint (one groupBy-count shuffle).
+    docs sharing the exact fingerprint (one window-count shuffle).
 
     Tokenization + xxhash64 stay JVM-side (deterministic, codegen);
     only the 64-way bit-fold crosses to an Arrow-batched pandas UDF
@@ -654,14 +649,28 @@ def simhash_fingerprints(
                 out.append("0" * bits)
                 continue
             bm = ((h[:, None] >> shifts) & np.uint64(1)).astype(np.int64)
-            s = (2 * bm - 1).sum(axis=0)
-            out.append("".join("1" if v > 0 else "0" for v in s))
+            out.append(_sign_bits(bm))
         return pd.Series(out)
 
+    return _fingerprint_counts(
+        df, _fold, lambda t: F.xxhash64(t), text_col, id_col)
+
+
+def _sign_bits(bits) -> str:
+    """The SimHash vote: bit i is '1' iff column i of the (tokens x
+    bits) 0/1 matrix has more ones than zeros."""
+    s = (2 * bits - 1).sum(axis=0)
+    return "".join("1" if v > 0 else "0" for v in s)
+
+
+def _fingerprint_counts(df, fold, token_hash, text_col, id_col):
+    """(id, simhash, n_same): ``fold`` over the per-document array of
+    ``token_hash(distinct token)`` — the one SimHash frame shape of
+    the fast and portable families."""
     tok_hashes = F.transform(
-        F.array_distinct(tokens(F.col(text_col))), lambda t: F.xxhash64(t)
+        F.array_distinct(tokens(F.col(text_col))), token_hash
     )
-    out = df.select(F.col(id_col), _fold(tok_hashes).alias("simhash"))
+    out = df.select(F.col(id_col), fold(tok_hashes).alias("simhash"))
     # window count, NOT a groupBy+self-join: the join would re-execute
     # the fold for its second input; the window shares one evaluation
     # and one shuffle on the fingerprint
@@ -709,21 +718,11 @@ def simhash_fingerprints_portable(
             ).reshape(-1, bits)
             # hex nibble value: '0'-'9' -> c-48, 'a'-'f' -> c-87
             vals = np.where(a >= 97, a - 87, a - 48).astype(np.int64)
-            s = (2 * (vals & 1) - 1).sum(axis=0)
-            out.append("".join("1" if v > 0 else "0" for v in s))
+            out.append(_sign_bits(vals & 1))
         return pd.Series(out)
 
-    tok_hashes = F.transform(
-        F.array_distinct(tokens(F.col(text_col))),
-        lambda t: F.md5(F.encode(t, "UTF-8")),
-    )
-    out = df.select(F.col(id_col), _fold(tok_hashes).alias("simhash"))
-    # window count (not groupBy+self-join) for the same single-eval,
-    # single-shuffle reason as the fast twin
-    return out.select(
-        id_col, "simhash",
-        F.count(F.lit(1)).over(W.partitionBy("simhash")).alias("n_same"),
-    )
+    return _fingerprint_counts(
+        df, _fold, lambda t: F.md5(F.encode(t, "UTF-8")), text_col, id_col)
 
 
 def connected_components(
@@ -837,25 +836,11 @@ def ngram_containment_pairs(
     directed emit, and the consumer sees which side is the contained
     one.  Same blocking + codegen'd array_intersect scale shape as
     :func:`ngram_jaccard_pairs`."""
-    base = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in block_cols],
-        F.array_distinct(tokens(F.col(text_col))).alias("__toks"),
-    )
-    a = base.select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id_a"), F.col("__toks").alias("toks_a"),
-    )
-    b = base.select(
-        *[F.col(c) for c in block_cols],
-        F.col(id_col).alias("id_b"), F.col("__toks").alias("toks_b"),
-    )
     inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("double")
     c_ab = F.round(inter / F.size("toks_a").cast("double"), 6)
     c_ba = F.round(inter / F.size("toks_b").cast("double"), 6)
     return (
-        a.join(b, on=block_cols, how="inner")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _blocked_token_pairs(df, block_cols, text_col, id_col)
         .select(
             *block_cols, "id_a", "id_b",
             c_ab.alias("contain_a_in_b"),

@@ -85,8 +85,11 @@ def _parquet_footer_rows(sf_dir: str, table: str) -> int:
                 return 1 << 62  # unknown layout: assume big
             return sum(pq.read_metadata(f).num_rows for f in files)
         return pq.read_metadata(path).num_rows
-    except Exception:  # unreadable/corrupt footer: a plan SWITCH
-        return 0       # must never crash the query — take small path
+    except (OSError, ValueError):
+        # missing file: FileNotFoundError; garbage footer: ArrowInvalid
+        # (a ValueError).  A plan SWITCH must never crash the query —
+        # take the small path.
+        return 0
 
 
 # ---------------------------------------------------------------------------
@@ -1556,22 +1559,25 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_exact(norm)
 
 
-_JACCARD_SQL = """
-    WITH t AS (
+# The distinct word set per document and its blocked self-join: the
+# SQL model of operators/dedup.py _blocked_token_pairs.
+_TOKSET_CTE = """t AS (
       SELECT doc_id, lang, source,
              list_distinct(string_split_regex(lower(trim(text)), '\\s+')) AS toks
-      FROM documents)
-    SELECT a.lang, a.source, a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
+      FROM documents)"""
+_TOKSET_PAIRS = """FROM t a JOIN t b
+      ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id"""
+_TOKSET_JACCARD = """ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
                  (CAST(len(a.toks) AS DOUBLE) + CAST(len(b.toks) AS DOUBLE)
                   - CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)),
-                 6) AS jaccard
-    FROM t a JOIN t b
-      ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id
-    WHERE ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-                (CAST(len(a.toks) AS DOUBLE) + CAST(len(b.toks) AS DOUBLE)
-                 - CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)),
-                6) >= 0.7
+                 6)"""
+
+_JACCARD_SQL = f"""
+    WITH {_TOKSET_CTE}
+    SELECT a.lang, a.source, a.doc_id AS id_a, b.doc_id AS id_b,
+           {_TOKSET_JACCARD} AS jaccard
+    {_TOKSET_PAIRS}
+    WHERE {_TOKSET_JACCARD} >= 0.7
 """
 
 
@@ -1586,19 +1592,15 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, ["lang", "source"], threshold=0.7)
 
 
-_CONTAIN_SQL = """
-    WITH t AS (
-      SELECT doc_id, lang, source,
-             list_distinct(string_split_regex(lower(trim(text)), '\\s+')) AS toks
-      FROM documents),
+_CONTAIN_SQL = f"""
+    WITH {_TOKSET_CTE},
     p AS (
       SELECT a.lang, a.source, a.doc_id AS id_a, b.doc_id AS id_b,
              ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
                    / len(a.toks), 6) AS contain_a_in_b,
              ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
                    / len(b.toks), 6) AS contain_b_in_a
-      FROM t a JOIN t b
-        ON a.lang = b.lang AND a.source = b.source AND a.doc_id < b.doc_id)
+      {_TOKSET_PAIRS})
     SELECT * FROM p
     WHERE greatest(contain_a_in_b, contain_b_in_a) >= 0.9
 """

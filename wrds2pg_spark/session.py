@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import PySparkAttributeError
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException, PySparkAttributeError
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -212,7 +213,7 @@ def fan_out(df, min_partitions: int | None = None,
     target = min_partitions or spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:  # a streaming frame has no file listing
         files = []
     if not files:  # non-file source (in-memory, stream): leave as-is
         return df
@@ -237,14 +238,15 @@ def fan_out(df, min_partitions: int | None = None,
                 return df
         if total < min_bytes:
             return df
-    except Exception:
-        # File-status listing failed: the split estimate says "narrow",
-        # but a caller that set a byte floor did so precisely to avoid
-        # the small-input exchange — without sizes we cannot prove the
-        # input clears the floor, so the conservative move is a no-op,
-        # not a repartition (round-8 advice, the r7 code fell through
-        # to repartition() here and reintroduced the regression the
-        # floor exists to prevent).
+    except Py4JJavaError:
+        # File-status listing failed (a file deleted after the frame
+        # was built raises FileNotFoundException): the split estimate
+        # says "narrow", but a caller that set a byte floor did so
+        # precisely to avoid the small-input exchange — without sizes
+        # we cannot prove the input clears the floor, so the
+        # conservative move is a no-op, not a repartition (round-8
+        # advice, the r7 code fell through to repartition() here and
+        # reintroduced the regression the floor exists to prevent).
         if min_bytes > 0:
             return df
     return df.repartition(target)
