@@ -647,12 +647,12 @@ def test_fan_out_vanished_file(spark, tmp_path, min_bytes, noop):
     """A file deleted after the frame was built fails the file-status
     listing (Py4JJavaError): with a byte floor fan_out cannot prove
     the input clears it and is a no-op; without one it repartitions."""
-    import shutil
+    import pandas as pd
 
     from wrds2pg_spark.session import fan_out
 
-    path = tmp_path / "region.parquet"
-    shutil.copy("/root/testdata/sf0.001/region.parquet", path)
+    path = tmp_path / "one.parquet"
+    pd.DataFrame({"x": range(5)}).to_parquet(path)
     df = spark.read.parquet(str(path))
     path.unlink()
     out = fan_out(df, min_partitions=4, min_bytes=min_bytes)
