@@ -293,9 +293,7 @@ def test_cogrouped_asof_empty_sides(spark):
     """join_asof_cogrouped's merge must survive buckets where one
     side is empty: users with events but no orders keep LEFT-OUTER
     nulls; orders with no events contribute nothing."""
-    from wrds2pg_spark.queries import REGISTRY
-    import wrds2pg_spark.queries as q
-    from pyspark.sql import functions as F
+    from wrds2pg_spark.queries import _cogrouped_asof
 
     e = spark.createDataFrame(
         [(1, 100, "2020-01-05"), (2, 999, "2020-01-06")],
@@ -307,38 +305,11 @@ def test_cogrouped_asof_empty_sides(spark):
         "o_totalprice double",
     ).select("user_id", "o_orderkey",
              F.col("o_orderdate").cast("timestamp"), "o_totalprice")
-    # drive the same merge through the registered key's machinery by
-    # monkey-loading tables: reuse its merge via a minimal inline
-    # replica of the bucketed cogroup (bucket 64 keeps 999 and 100
-    # in different buckets; 999's bucket has no orders, 555's no
-    # events)
-    import pandas as _pd
-
-    def merge(left, right):
-        left = left.sort_values("ts", kind="mergesort")
-        right = right.sort_values(["o_orderdate", "o_orderkey"],
-                                  kind="mergesort")
-        out = _pd.merge_asof(
-            left.drop(columns=["__b"]), right.drop(columns=["__b"]),
-            left_on="ts", right_on="o_orderdate", by="user_id",
-            direction="backward", allow_exact_matches=True)
-        return _pd.DataFrame({
-            "event_id": out["event_id"],
-            "user_id": out["user_id"],
-            "ts": out["ts"],
-            "asof_o_orderkey": out["o_orderkey"].astype("Int64"),
-        })
-
-    eb = e.withColumn("__b", F.col("user_id") % 64)
-    ob = o.withColumn("__b", F.col("user_id") % 64)
+    # the key's 64 buckets keep 999 and 100 apart: 999's bucket has no
+    # orders, 555's no events
     got = {
         r["event_id"]: r["asof_o_orderkey"]
-        for r in eb.groupBy("__b").cogroup(ob.groupBy("__b"))
-        .applyInPandas(
-            merge,
-            "event_id long, user_id long, ts timestamp, "
-            "asof_o_orderkey long",
-        ).collect()
+        for r in _cogrouped_asof(e, o).collect()
     }
     assert got == {1: 7, 2: None}
 

@@ -43,6 +43,21 @@ def _write_time_split_chunks(events, src: str) -> None:
         lo = hi
 
 
+def _drain(sdf, mode: str, name: str):
+    """Run a streaming frame to completion into the memory table
+    ``name`` (still queryable after the stop); returns the stopped
+    query."""
+    q = (
+        sdf.writeStream.outputMode(mode)
+        .format("memory").queryName(name).start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return q
+
+
 def test_streaming_matches_batch(spark):
     events = load_table(spark, "/root/testdata/sf0.001", "events")
     with tempfile.TemporaryDirectory() as tmp:
@@ -55,19 +70,11 @@ def test_streaming_matches_batch(spark):
         sdf = streaming_tumbling_counts(
             spark, src, schema=events.schema, duration="1 hour"
         )
-        q = (
-            sdf.writeStream.outputMode("complete")
-            .format("memory").queryName("stream_out")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
-                for r in spark.sql("SELECT * FROM stream_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "complete", "stream_out")
+        got = {
+            (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
+            for r in spark.sql("SELECT * FROM stream_out").collect()
+        }
 
     want = {
         (str(r["window_start"]), r["event_type"]): (r["n"], r["sum_value"])
@@ -115,18 +122,11 @@ def test_streaming_session_windows_matches_batch_gaps(spark):
         sdf = streaming_session_windows(
             spark, src, schema=events.schema, gap="30 minutes"
         )
-        q = (
-            sdf.writeStream.outputMode("complete")
-            .format("memory").queryName("sess_out").start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (r["user_id"], str(r["session_start"])): r["n_events"]
-                for r in spark.sql("SELECT * FROM sess_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "complete", "sess_out")
+        got = {
+            (r["user_id"], str(r["session_start"])): r["n_events"]
+            for r in spark.sql("SELECT * FROM sess_out").collect()
+        }
 
     want = {
         (r["user_id"], str(r["session_start"])): r["n_events"]
@@ -145,17 +145,10 @@ def test_streaming_user_running_totals_state(spark):
         src = os.path.join(tmp, "events_pq")
         events.write.parquet(src)
         sdf = streaming_user_running_totals(spark, src, schema=events.schema)
-        q = (
-            sdf.writeStream.outputMode("update")
-            .format("memory").queryName("totals_out").start()
-        )
-        try:
-            q.processAllAvailable()
-            # update mode appends one row per (user, batch); the LAST
-            # row per user is the final running total
-            rows = spark.sql("SELECT * FROM totals_out").collect()
-        finally:
-            q.stop()
+        _drain(sdf, "update", "totals_out")
+        # update mode appends one row per (user, batch); the LAST
+        # row per user is the final running total
+        rows = spark.sql("SELECT * FROM totals_out").collect()
 
     final = {}
     for r in rows:  # memory sink preserves batch order
@@ -254,21 +247,13 @@ def test_streaming_dedup_key_set_matches_batch(spark):
         src = os.path.join(tmp, "events_pq")
         events.write.parquet(src)
         sdf = streaming_dedup(spark, src, schema=events.schema)
-        q = (
-            sdf.writeStream.outputMode("append")
-            .format("memory").queryName("dedup_out")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = [
-                (r["user_id"], r["event_type"])
-                for r in spark.sql(
-                    "SELECT user_id, event_type FROM dedup_out"
-                ).collect()
-            ]
-        finally:
-            q.stop()
+        _drain(sdf, "append", "dedup_out")
+        got = [
+            (r["user_id"], r["event_type"])
+            for r in spark.sql(
+                "SELECT user_id, event_type FROM dedup_out"
+            ).collect()
+        ]
 
     want = {
         (r["user_id"], r["event_type"])
@@ -294,18 +279,11 @@ def test_streaming_purchase_attribution_matches_batch(spark):
         sdf = streaming_purchase_attribution(
             spark, src, schema=events.schema, window_minutes=30
         )
-        q = (
-            sdf.writeStream.outputMode("append")
-            .format("memory").queryName("attrib_out").start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (r["purchase_id"], r["click_id"])
-                for r in spark.sql("SELECT * FROM attrib_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "append", "attrib_out")
+        got = {
+            (r["purchase_id"], r["click_id"])
+            for r in spark.sql("SELECT * FROM attrib_out").collect()
+        }
 
     want = {
         (r["purchase_id"], r["click_id"])
@@ -368,20 +346,12 @@ def test_streaming_enrich_static_matches_batch(spark):
         sdf = streaming_enrich_static(
             spark, src, schema=events.schema, customer=customer
         )
-        q = (
-            sdf.writeStream.outputMode("complete")
-            .format("memory").queryName("enrich_out")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (str(r["window_start"]), r["c_mktsegment"]):
-                    (r["n"], r["sum_value"])
-                for r in spark.sql("SELECT * FROM enrich_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "complete", "enrich_out")
+        got = {
+            (str(r["window_start"]), r["c_mktsegment"]):
+                (r["n"], r["sum_value"])
+            for r in spark.sql("SELECT * FROM enrich_out").collect()
+        }
 
     want = {
         (str(r["window_start"]), r["c_mktsegment"]): (r["n"], r["sum_value"])
@@ -485,29 +455,21 @@ def test_streaming_late_drop_matches_batch_twin(spark):
             os.utime(dst, (1000 * (i + 1), 1000 * (i + 1)))
 
         sdf = streaming_late_drop_counts(spark, src, schema=f0.schema)
-        q = (
-            sdf.writeStream.outputMode("append")
-            .format("memory").queryName("late_drop_out")
-            .start()
+        q = _drain(sdf, "append", "late_drop_out")
+        dropped = sum(
+            so.get("numRowsDroppedByWatermark", 0)
+            for p in q.recentProgress
+            for so in p["stateOperators"]
         )
-        try:
-            q.processAllAvailable()
-            dropped = sum(
-                so.get("numRowsDroppedByWatermark", 0)
-                for p in q.recentProgress
-                for so in p["stateOperators"]
-            )
-            got = {
-                (str(r["window_start"]), r["event_type"]):
-                    (r["n"], r["sum_value"])
-                for r in spark.sql(
-                    "SELECT window_start, event_type, SUM(n) AS n, "
-                    "round(SUM(sum_value), 2) AS sum_value "
-                    "FROM late_drop_out GROUP BY 1, 2"
-                ).collect()
-            }
-        finally:
-            q.stop()
+        got = {
+            (str(r["window_start"]), r["event_type"]):
+                (r["n"], r["sum_value"])
+            for r in spark.sql(
+                "SELECT window_start, event_type, SUM(n) AS n, "
+                "round(SUM(sum_value), 2) AS sum_value "
+                "FROM late_drop_out GROUP BY 1, 2"
+            ).collect()
+        }
 
     assert dropped == 1  # the 08:30 row, and only it
     events = f0.unionByName(f1).unionByName(f2).unionByName(f3)
@@ -596,18 +558,11 @@ def test_streaming_threshold_crossings_matches_batch(spark):
         _write_time_split_chunks(events, src)
 
         sdf = streaming_threshold_crossings(spark, src, schema=events.schema)
-        q = (
-            sdf.writeStream.outputMode("append")
-            .format("memory").queryName("crossings_out").start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (r["user_id"], r["event_id"]): r["prev_value"]
-                for r in spark.sql("SELECT * FROM crossings_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "append", "crossings_out")
+        got = {
+            (r["user_id"], r["event_id"]): r["prev_value"]
+            for r in spark.sql("SELECT * FROM crossings_out").collect()
+        }
 
     want = {
         (r["user_id"], r["event_id"]): r["prev_value"]
@@ -639,27 +594,8 @@ def test_threshold_crossings_crash_restart_exactly_once(spark):
         out = os.path.join(tmp, "out")
         ckpt = os.path.join(tmp, "ckpt")
         flag = os.path.join(tmp, "CRASH")
-        os.makedirs(src)
         os.makedirs(out)
-        bounds = list(events.selectExpr(
-            "percentile_approx(ts, array(0.25, 0.5, 0.75), 10000)"
-        ).collect()[0][0])
-        assert len(bounds) == 3  # -> 4 time-split micro-batches
-        lo = None
-        for i, hi in enumerate(bounds + [None]):
-            chunk = events
-            if lo is not None:
-                chunk = chunk.filter(F.col("ts") >= F.lit(lo))
-            if hi is not None:
-                chunk = chunk.filter(F.col("ts") < F.lit(hi))
-            d = os.path.join(src, f"c{i}.pq")
-            chunk.coalesce(1).write.parquet(d)
-            os.rename(
-                [os.path.join(d, f) for f in os.listdir(d)
-                 if f.endswith(".parquet")][0],
-                os.path.join(src, f"chunk_{i}.parquet"))
-            shutil.rmtree(d)
-            lo = hi
+        _write_time_split_chunks(events, src)  # 4 time-split micro-batches
 
         def sink(batch_df, batch_id):
             # idempotent per-epoch sink: a replayed batch id
@@ -731,19 +667,12 @@ def test_streaming_rolling_beta_matches_batch(spark):
         _write_time_split_chunks(events, src)
 
         sdf = streaming_rolling_beta(spark, src, schema=events.schema)
-        q = (
-            sdf.writeStream.outputMode("append")
-            .format("memory").queryName("rolling_beta_out").start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                (r["event_type"], r["event_id"]): r["beta"]
-                for r in spark.sql(
-                    "SELECT * FROM rolling_beta_out").collect()
-            }
-        finally:
-            q.stop()
+        _drain(sdf, "append", "rolling_beta_out")
+        got = {
+            (r["event_type"], r["event_id"]): r["beta"]
+            for r in spark.sql(
+                "SELECT * FROM rolling_beta_out").collect()
+        }
 
     want = {
         (r["event_type"], r["event_id"]): r["beta"]

@@ -51,6 +51,44 @@ def _time_delta(a, b, dtype) -> F.Column:
     return F.abs(a.cast("double") - b.cast("double"))
 
 
+def _spine(
+    left: DataFrame,
+    right: DataFrame,
+    left_on: str,
+    right_on: str,
+    left_by: str,
+    right_by: str,
+    carry: list[str],
+    tiebreak: str | None,
+    alias: str,
+) -> DataFrame:
+    """The tagged union both traversals run over: every row keyed by
+    ``__k`` at time ``__t``, left rows with ``__is_l`` = 1 and a null
+    ``__tb``, right rows with ``__is_l`` = 0 and ``tiebreak`` (else 0)
+    as ``__tb``; the left columns (null on right rows) and the right
+    ``carry`` columns as ``alias + c`` (null on left rows)."""
+    l_tagged = left.select(
+        F.col(left_by).alias("__k"),
+        F.col(left_on).alias("__t"),
+        F.lit(1).alias("__is_l"),
+        F.lit(None).cast("long").alias("__tb"),
+        *[F.col(c) for c in left.columns],
+        *[F.lit(None).cast(right.schema[c].dataType).alias(f"{alias}{c}")
+          for c in carry],
+    )
+    tb = (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long")
+    r_tagged = right.select(
+        F.col(right_by).alias("__k"),
+        F.col(right_on).alias("__t"),
+        F.lit(0).alias("__is_l"),
+        tb.alias("__tb"),
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
+          for c in left.columns],
+        *[F.col(c).alias(f"{alias}{c}") for c in carry],
+    )
+    return l_tagged.unionByName(r_tagged)
+
+
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -86,26 +124,8 @@ def asof_join(
     carry = list(right_cols)
     if tolerance is not None and right_on not in carry:
         carry = carry + [right_on]
-    l_tagged = left.select(
-        F.col(left_by).alias("__k"),
-        F.col(left_on).alias("__t"),
-        F.lit(1).alias("__is_l"),
-        F.lit(None).cast("long").alias("__tb"),
-        *[F.col(c) for c in left.columns],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"{prefix}{c}")
-          for c in carry],
-    )
-    tb = (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long")
-    r_tagged = right.select(
-        F.col(right_by).alias("__k"),
-        F.col(right_on).alias("__t"),
-        F.lit(0).alias("__is_l"),
-        tb.alias("__tb"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left.columns],
-        *[F.col(c).alias(f"{prefix}{c}") for c in carry],
-    )
-    u = l_tagged.unionByName(r_tagged)
+    u = _spine(left, right, left_on, right_on, left_by, right_by,
+               carry, tiebreak, prefix)
     t_order = F.col("__t").asc() if direction == "backward" else F.col("__t").desc()
     w = (
         W.partitionBy("__k")
@@ -151,26 +171,8 @@ def _asof_nearest(
     carry = list(right_cols)
     if right_on not in carry:
         carry = carry + [right_on]
-    l_tagged = left.select(
-        F.col(left_by).alias("__k"),
-        F.col(left_on).alias("__t"),
-        F.lit(1).alias("__is_l"),
-        F.lit(None).cast("long").alias("__tb"),
-        *[F.col(c) for c in left.columns],
-        *[F.lit(None).cast(right.schema[c].dataType).alias(f"__r_{c}")
-          for c in carry],
-    )
-    tb = (F.col(tiebreak) if tiebreak else F.lit(0)).cast("long")
-    r_tagged = right.select(
-        F.col(right_by).alias("__k"),
-        F.col(right_on).alias("__t"),
-        F.lit(0).alias("__is_l"),
-        tb.alias("__tb"),
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c)
-          for c in left.columns],
-        *[F.col(c).alias(f"__r_{c}") for c in carry],
-    )
-    u = l_tagged.unionByName(r_tagged)
+    u = _spine(left, right, left_on, right_on, left_by, right_by,
+               carry, tiebreak, "__r_")
     # ONE ascending sort serves both directions: backward is a struct
     # max over [unbounded preceding, current], forward a struct min
     # over [current, unbounded following].  min/max are frame-order-

@@ -672,21 +672,7 @@ def join_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "join_asof_cogrouped",
-    oracle="""
-    SELECT e.event_id, e.user_id, e.ts,
-           o.o_orderkey AS asof_o_orderkey,
-           o.o_orderdate AS asof_o_orderdate,
-           o.o_totalprice AS asof_o_totalprice
-    FROM events e LEFT JOIN LATERAL (
-        SELECT o_orderkey, o_orderdate, o_totalprice
-        FROM orders o
-        WHERE o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-        ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 1
-    ) o ON TRUE
-    """,
-)
+@register("join_asof_cogrouped", oracle=REGISTRY["join_asof"].oracle)
 def join_asof_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same backward as-of join as ``join_asof``, expressed
     through Spark's CoGroupedMap API (``groupBy...cogroup...
@@ -706,18 +692,26 @@ def join_asof_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM union+window form (join_asof) stays the scale default and
     this key exists to keep the Python-boundary path tested against
     the identical oracle."""
-    import pandas as _pd
-
-    n_buckets = 64
     e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts",
-        (F.col("user_id") % n_buckets).alias("__b"),
-    )
+        "event_id", "user_id", "ts")
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("user_id"),
         "o_orderkey", "o_orderdate", "o_totalprice",
-        (F.col("o_custkey") % n_buckets).alias("__b"),
     )
+    return _cogrouped_asof(e, o)
+
+
+def _cogrouped_asof(events: DataFrame, orders: DataFrame) -> DataFrame:
+    """Backward as-of of ``events`` (event_id, user_id, ts) against
+    ``orders`` (user_id, o_orderkey, o_orderdate, o_totalprice) through
+    a cogroup on 64 hash buckets of user_id and ``pandas.merge_asof``
+    (see :func:`join_asof_cogrouped`).  Users with events but no
+    orders keep left-outer nulls."""
+    import pandas as _pd
+
+    n_buckets = 64
+    e = events.select("*", (F.col("user_id") % n_buckets).alias("__b"))
+    o = orders.select("*", (F.col("user_id") % n_buckets).alias("__b"))
 
     def merge(left: _pd.DataFrame, right: _pd.DataFrame) -> _pd.DataFrame:
         left = left.sort_values("ts", kind="mergesort")
@@ -2758,14 +2752,15 @@ def udtf_word_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-@register(
-    "stream_tumbling_counts",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
+def _tumbling_sql(src: str) -> str:
+    """Hourly (window_start, event_type) counts of ``src`` — the SQL
+    form of streaming/events.py tumbling_counts."""
+    return f"""SELECT date_trunc('hour', ts) AS window_start, event_type,
            COUNT(*) AS n, {DSUM_SQL('value', 2)} AS sum_value
-    FROM events GROUP BY 1, 2
-    """,
-)
+    FROM {src} GROUP BY 1, 2"""
+
+
+@register("stream_tumbling_counts", oracle=_tumbling_sql("events"))
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling event-time windows (batch twin of the Structured
     Streaming pipeline in streaming/events.py)."""
@@ -2794,9 +2789,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
              FROM b JOIN wm ON b.bid = wm.bid
              WHERE wm.wmk IS NULL
                 OR date_trunc('hour', b.ts) + INTERVAL '1 hour' > wm.wmk)
-    SELECT date_trunc('hour', ts) AS window_start, event_type,
-           COUNT(*) AS n, {DSUM_SQL('value', 2)} AS sum_value
-    FROM kept GROUP BY 1, 2
+    {_tumbling_sql('kept')}
     """,
 )
 def stream_late_drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2821,9 +2814,7 @@ def stream_late_drop_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_topk_per_window",
     oracle=f"""
     WITH counts AS (
-        SELECT date_trunc('hour', ts) AS window_start, event_type,
-               COUNT(*) AS n, {DSUM_SQL('value', 2)} AS sum_value
-        FROM events GROUP BY 1, 2),
+        {_tumbling_sql('events')}),
     ranked AS (
         SELECT window_start, event_type, n, sum_value,
                CAST(row_number() OVER (

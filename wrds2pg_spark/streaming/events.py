@@ -1,14 +1,24 @@
 """Event-time windowing: tumbling / sliding / session windows.
 
-Each operator exists in a *batch* form (used by the oracle-checked
-query registry — deterministic, DuckDB-expressible) and the tumbling
-aggregation also in a *Structured Streaming* form (readStream +
-watermark + window), smoke-tested against its batch twin.  The
-reference has no streaming at all (its "streaming" is byte piping,
-wrds2pg/postgres/copy.py:152-153) — this is north-star surface.
+Each transform is written once, as a *batch* DataFrame function (used
+by the oracle-checked query registry — deterministic,
+DuckDB-expressible).  Its *Structured Streaming* form is the same
+function applied to one watermarked file source (:func:`_event_stream`)
+— the premise that one query runs unchanged over a static or an
+unbounded table — and is equivalence-tested against the batch form in
+tests/test_streaming.py.  A streaming form keeps a body of its own only
+where it needs an operator that exists only on streams:
+``session_window``, ``dropDuplicatesWithinWatermark`` and
+``applyInPandasWithState``.  The reference has no streaming at all
+(its "streaming" is byte piping, wrds2pg/postgres/copy.py:152-153) —
+this is north-star surface.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -26,9 +36,43 @@ __all__ = [
     "enrich_static", "streaming_enrich_static",
     "user_totals", "streaming_foreachbatch_upsert",
     "windowed_topk", "streaming_windowed_topk", "topk_from_serving",
+    "jittered_arrival_batch", "late_filtered", "late_drop_counts",
+    "streaming_late_drop_counts",
     "streaming_threshold_crossings",
     "streaming_rolling_beta",
 ]
+
+
+def _event_stream(
+    spark: SparkSession,
+    path: str,
+    schema,
+    *,
+    watermark: str | None = None,
+    max_files: int | None = None,
+) -> DataFrame:
+    """The event feed as a stream: parquet file source, ``ts`` as a
+    TIMESTAMP, optionally ``max_files`` files per micro-batch and a
+    ``watermark`` delay on ``ts``."""
+    reader = spark.readStream.schema(schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    # watermarks require session-tz TIMESTAMP (not NTZ); session tz
+    # is pinned UTC so the cast preserves wall-clock values
+    stream = reader.parquet(path).withColumn(
+        "ts", F.col("ts").cast("timestamp"))
+    if watermark is not None:
+        stream = stream.withWatermark("ts", watermark)
+    return stream
+
+
+def _with_segment(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Events keyed by user_id pick up the customer's market segment
+    through a broadcast hash probe of the customer dim."""
+    seg = customer.select(
+        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment")
+    )
+    return events.join(F.broadcast(seg), "user_id")
 
 
 def enrich_static(events: DataFrame, customer: DataFrame) -> DataFrame:
@@ -42,11 +86,8 @@ def enrich_static(events: DataFrame, customer: DataFrame) -> DataFrame:
     map with no shuffle of the stream and no join state store at all
     (unlike stream-stream joins).  At 100 TB/day of events the only
     wide op is the windowed aggregate."""
-    seg = customer.select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment")
-    )
     return (
-        events.join(F.broadcast(seg), "user_id")
+        _with_segment(events, customer)
         .groupBy(
             F.date_trunc("hour", F.col("ts")).alias("window_start"),
             F.col("c_mktsegment"),
@@ -70,17 +111,12 @@ def streaming_enrich_static(
     -> broadcast hash probe against the static dim -> watermarked
     tumbling aggregate.  Stream-static joins are stateless (the static
     side re-broadcasts per micro-batch if it changes), so the state
-    store holds only the open windows."""
-    seg = customer.select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment")
-    )
-    ev = (
-        spark.readStream.schema(schema).parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
+    store holds only the open windows.  Its aggregate stays its own:
+    the tumbling ``window()`` adds an ``isnotnull(ts)`` filter the
+    batch ``date_trunc`` form (and its oracle) does not have."""
+    ev = _event_stream(spark, parquet_path, schema, watermark=watermark)
     return (
-        ev.join(F.broadcast(seg), "user_id")
+        _with_segment(ev, customer)
         .groupBy(F.window("ts", duration), F.col("c_mktsegment"))
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -103,8 +139,8 @@ def purchase_attribution(
     purchases are small slices of the event stream), then equi-join on
     user_id with the time band as a join residual — one shuffle per
     leg, band checked post-match.  The streaming twin
-    (:func:`streaming_purchase_attribution`) runs the identical join
-    condition as a watermarked stream-stream join."""
+    (:func:`streaming_purchase_attribution`) is this function over a
+    watermarked stream: a stream-stream join."""
     p = events.filter(F.col("event_type") == "purchase").select(
         F.col("user_id"),
         F.col("event_id").alias("purchase_id"),
@@ -137,44 +173,22 @@ def streaming_purchase_attribution(
 ):
     """Stream-stream inner join with event-time bounds — the
     Structured Streaming feature none of the windowed aggregates
-    exercise.  Both legs carry a watermark and the join condition
-    bounds click_ts to a closed interval around purchase_ts, which is
-    exactly what lets the state store evict buffered rows once the
-    watermark passes the bound (unbounded stream-stream joins cannot
-    GC state).  Append output; equivalence vs the batch twin is
-    asserted in tests/test_streaming.py."""
-    def leg(event_type: str):
-        return (
-            spark.readStream.schema(schema).parquet(parquet_path)
-            .filter(F.col("event_type") == event_type)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .withWatermark("ts", watermark)
-        )
-
-    p = leg("purchase").select(
-        F.col("user_id"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
+    exercise: :func:`purchase_attribution` over one watermarked source.
+    Both legs carry its watermark and the join condition bounds
+    click_ts to a closed interval around purchase_ts, which is exactly
+    what lets the state store evict buffered rows once the watermark
+    passes the bound (unbounded stream-stream joins cannot GC state).
+    Append output; equivalence vs the batch twin is asserted in
+    tests/test_streaming.py."""
+    pairs = purchase_attribution(
+        _event_stream(spark, parquet_path, schema, watermark=watermark),
+        window_minutes,
     )
-    c = leg("click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    bound = F.expr(f"purchase_ts - INTERVAL {window_minutes} MINUTES")
-    return (
-        p.join(
-            c,
-            (p.user_id == c.c_user_id)
-            & (c.click_ts <= p.purchase_ts)
-            & (c.click_ts >= bound),
-        )
-        .select(
-            "user_id", "purchase_id",
-            F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
-            "click_id",
-            F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
-        )
+    return pairs.select(
+        "user_id", "purchase_id",
+        F.col("purchase_ts").cast("timestamp_ntz").alias("purchase_ts"),
+        "click_id",
+        F.col("click_ts").cast("timestamp_ntz").alias("click_ts"),
     )
 
 
@@ -279,11 +293,7 @@ def streaming_dedup(
     twin ``dedup_first`` resolves ties by event time instead), so
     equivalence tests compare the surviving KEY SET, not row
     identity."""
-    stream = (
-        spark.readStream.schema(schema).parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
+    stream = _event_stream(spark, parquet_path, schema, watermark=watermark)
     return stream.dropDuplicatesWithinWatermark(["user_id", "event_type"])
 
 
@@ -298,23 +308,9 @@ def streaming_tumbling_counts(
     watermark (bounds state for late data) -> windowed agg.  Returns
     the streaming DataFrame; callers start it with
     foreachBatch/memory sink (see tests/test_streaming.py)."""
-    stream = (
-        spark.readStream.schema(schema).parquet(parquet_path)
-        # watermarks require session-tz TIMESTAMP (not NTZ); session tz
-        # is pinned UTC so the cast preserves wall-clock values
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
-    return (
-        stream.groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type", "n", "sum_value",
-        )
+    return tumbling_counts(
+        _event_stream(spark, parquet_path, schema, watermark=watermark),
+        duration,
     )
 
 
@@ -331,11 +327,7 @@ def streaming_session_windows(
     evict closed sessions.  This is the Structured-Streaming twin of
     the batch ``sessionize`` (same gap semantics, engine-managed
     state instead of the lag/cumsum trick)."""
-    stream = (
-        spark.readStream.schema(schema).parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-    )
+    stream = _event_stream(spark, parquet_path, schema, watermark=watermark)
     return (
         stream.groupBy(F.session_window("ts", gap).alias("w"), "user_id")
         .agg(
@@ -389,10 +381,7 @@ def streaming_user_running_totals(
              "total_value": [round(total, 2)]}
         )
 
-    stream = (
-        spark.readStream.schema(schema).parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, parquet_path, schema)
     return stream.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType="user_id bigint, n_events bigint, total_value double",
@@ -412,6 +401,43 @@ def user_totals(events: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         dsum(F.col("value"), 2).alias("sum_value"),
     )
+
+
+def _keyed_swap(
+    table_path: str, merge: Callable[[DataFrame, DataFrame], DataFrame]
+) -> Callable[[DataFrame, int], None]:
+    """``foreachBatch`` body of a keyed upsert into the parquet table at
+    ``table_path``: ``merge(batch_df, old)`` folds the micro-batch into
+    the current table (the batch is written as-is while there is none),
+    the result is staged, then swapped in by two renames."""
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        stage = table_path + "__stage"
+        old_aside = table_path + "__old"
+        # Heal leftovers from a crash mid-swap: a stranded __old means
+        # the serving rename never completed — restore it; a stranded
+        # __stage is a dead write — drop it before re-staging.
+        if os.path.exists(old_aside) and not os.path.exists(table_path):
+            os.rename(old_aside, table_path)
+        for leftover in (stage, old_aside):
+            if os.path.exists(leftover):
+                shutil.rmtree(leftover)
+        if os.path.exists(os.path.join(table_path, "_SUCCESS")):
+            merged = merge(
+                batch_df, batch_df.sparkSession.read.parquet(table_path))
+        else:
+            merged = batch_df
+        merged.write.mode("overwrite").parquet(stage)
+        # Two renames instead of rmtree-then-rename: the serving path
+        # is missing only between the two renames (both metadata-only
+        # ops), never across a full directory delete; a crash in the
+        # window is healed by the __old restore above on next batch.
+        if os.path.exists(table_path):
+            os.rename(table_path, old_aside)
+        os.rename(stage, table_path)
+        shutil.rmtree(old_aside, ignore_errors=True)
+
+    return upsert
 
 
 def streaming_foreachbatch_upsert(
@@ -437,71 +463,34 @@ def streaming_foreachbatch_upsert(
     keeps one state row per user forever — bound it in production
     with windowing + watermark or state TTL.
     """
-    import os
-    import shutil
+    agg = user_totals(_event_stream(
+        spark, parquet_path, schema, max_files=max_files_per_trigger))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = stream.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        dsum(F.col("value"), 2).alias("sum_value"),
-    )
-
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        stage = table_path + "__stage"
-        old_aside = table_path + "__old"
-        # Heal leftovers from a crash mid-swap: a stranded __old means
-        # the serving rename never completed — restore it; a stranded
-        # __stage is a dead write — drop it before re-staging.
-        if os.path.exists(old_aside) and not os.path.exists(table_path):
-            os.rename(old_aside, table_path)
-        for leftover in (stage, old_aside):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
-        if os.path.exists(os.path.join(table_path, "_SUCCESS")):
-            old = sess.read.parquet(table_path).select(
-                F.col("user_id"),
-                F.col("n_events").alias("__old_n"),
-                F.col("sum_value").alias("__old_s"),
+    def merge(batch_df: DataFrame, old: DataFrame) -> DataFrame:
+        old = old.select(
+            F.col("user_id"),
+            F.col("n_events").alias("__old_n"),
+            F.col("sum_value").alias("__old_s"),
+        )
+        return (
+            batch_df.join(old, "user_id", "full_outer")
+            .select(
+                "user_id",
+                F.coalesce("n_events", "__old_n").alias("n_events"),
+                F.coalesce("sum_value", "__old_s").alias("sum_value"),
             )
-            merged = (
-                batch_df.join(old, "user_id", "full_outer")
-                .select(
-                    "user_id",
-                    F.coalesce("n_events", "__old_n").alias("n_events"),
-                    F.coalesce("sum_value", "__old_s").alias("sum_value"),
-                )
-            )
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        # Two renames instead of rmtree-then-rename: the serving path
-        # is missing only between the two renames (both metadata-only
-        # ops), never across a full directory delete; a crash in the
-        # window is healed by the __old restore above on next batch.
-        if os.path.exists(table_path):
-            os.rename(table_path, old_aside)
-        os.rename(stage, table_path)
-        shutil.rmtree(old_aside, ignore_errors=True)
+        )
 
     return (
-        agg.writeStream.outputMode("update").foreachBatch(upsert)
+        agg.writeStream.outputMode("update")
+        .foreachBatch(_keyed_swap(table_path, merge))
     )
 
 
-def windowed_topk(
-    events: DataFrame, duration: str = "1 hour", k: int = 3
-) -> DataFrame:
-    """Top-k event types per tumbling window — the leaderboard shape
-    (batch twin of :func:`streaming_windowed_topk`).  Rank ties break
-    on event_type so the result is deterministic.  One shuffle for the
-    window counts, one for the per-window rank."""
-    counts = tumbling_counts(events, duration)
+def _top_k(counts: DataFrame, k: int) -> DataFrame:
+    """The ``k`` highest (n, sum_value) event types per window_start
+    of a window-counts frame; rank ties break on event_type so the
+    result is deterministic."""
     w = W.partitionBy("window_start").orderBy(
         F.desc("n"), F.desc("sum_value"), "event_type")
     return (
@@ -511,6 +500,15 @@ def windowed_topk(
         )
         .filter(F.col("rk") <= k)
     )
+
+
+def windowed_topk(
+    events: DataFrame, duration: str = "1 hour", k: int = 3
+) -> DataFrame:
+    """Top-k event types per tumbling window — the leaderboard shape
+    (batch twin of :func:`streaming_windowed_topk`).  One shuffle for
+    the window counts, one for the per-window rank."""
+    return _top_k(tumbling_counts(events, duration), k)
 
 
 def streaming_windowed_topk(
@@ -531,60 +529,30 @@ def streaming_windowed_topk(
     closes it, and update mode re-emits growing counts per key — so
     the stream maintains the monotone state and the cheap rank runs
     on read, the standard serving split for streaming top-k."""
-    import os
-    import shutil
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+    stream = _event_stream(
+        spark, parquet_path, schema,
+        watermark=watermark, max_files=max_files_per_trigger,
     )
-    agg = (
-        stream.groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type", "n", "sum_value",
-        )
-    )
+    agg = tumbling_counts(stream, duration)
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        stage = table_path + "__stage"
-        old_aside = table_path + "__old"
-        if os.path.exists(old_aside) and not os.path.exists(table_path):
-            os.rename(old_aside, table_path)
-        for leftover in (stage, old_aside):
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
-        if os.path.exists(os.path.join(table_path, "_SUCCESS")):
-            old = sess.read.parquet(table_path)
-            # new-wins-per-key: update mode re-emits the full cumulative
-            # row for every touched key, so max(n) picks the newest
-            merged = (
-                batch_df.unionByName(old)
-                .groupBy("window_start", "event_type")
-                .agg(F.max(F.struct("n", "sum_value")).alias("s"))
-                .select(
-                    "window_start", "event_type",
-                    F.col("s.n").alias("n"),
-                    F.col("s.sum_value").alias("sum_value"),
-                )
+    def merge(batch_df: DataFrame, old: DataFrame) -> DataFrame:
+        # new-wins-per-key: update mode re-emits the full cumulative
+        # row for every touched key, so max(n) picks the newest
+        return (
+            batch_df.unionByName(old)
+            .groupBy("window_start", "event_type")
+            .agg(F.max(F.struct("n", "sum_value")).alias("s"))
+            .select(
+                "window_start", "event_type",
+                F.col("s.n").alias("n"),
+                F.col("s.sum_value").alias("sum_value"),
             )
-        else:
-            merged = batch_df
-        merged.write.mode("overwrite").parquet(stage)
-        if os.path.exists(table_path):
-            os.rename(table_path, old_aside)
-        os.rename(stage, table_path)
-        shutil.rmtree(old_aside, ignore_errors=True)
+        )
 
-    return agg.writeStream.outputMode("update").foreachBatch(upsert)
+    return (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(_keyed_swap(table_path, merge))
+    )
 
 
 def topk_from_serving(
@@ -593,16 +561,7 @@ def topk_from_serving(
     """Serving-read rank over the streaming-maintained window counts:
     the cheap half of the streaming top-k split (see
     :func:`streaming_windowed_topk`)."""
-    counts = spark.read.parquet(table_path)
-    w = W.partitionBy("window_start").orderBy(
-        F.desc("n"), F.desc("sum_value"), "event_type")
-    return (
-        counts.select(
-            "window_start", "event_type", "n", "sum_value",
-            F.row_number().over(w).cast("long").alias("rk"),
-        )
-        .filter(F.col("rk") <= k)
-    )
+    return _top_k(spark.read.parquet(table_path), k)
 
 
 def jittered_arrival_batch(delay_spread_minutes: int = 240) -> "F.Column":
@@ -713,23 +672,10 @@ def streaming_late_drop_counts(
     advance reproducible; the batch twin with matching chunking is
     :func:`late_drop_counts` (equivalence-tested in
     tests/test_streaming.py)."""
-    ev = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", delay)
-    )
-    return (
-        ev.groupBy(F.window("ts", duration).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            dsum(F.col("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("window_start"),
-            "event_type", "n", "sum_value",
-        )
+    return tumbling_counts(
+        _event_stream(
+            spark, parquet_path, schema, watermark=delay, max_files=1),
+        duration,
     )
 
 
@@ -786,12 +732,7 @@ def streaming_threshold_crossings(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, parquet_path, schema, max_files=1)
     return stream.groupBy("user_id").applyInPandasWithState(
         update,
         outputStructType=(
@@ -903,12 +844,7 @@ def streaming_rolling_beta(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(parquet_path)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
+    stream = _event_stream(spark, parquet_path, schema, max_files=1)
     return stream.groupBy("event_type").applyInPandasWithState(
         update,
         outputStructType="event_type string, event_id bigint, beta double",
