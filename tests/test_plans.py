@@ -6,6 +6,7 @@ driver-side collect) is a regression at 100 TB even when values match.
 
 from __future__ import annotations
 
+import inspect
 import re
 
 import pytest
@@ -471,19 +472,22 @@ def test_pagerank_outdeg_rides_edges_no_per_iteration_degree_join(spark):
     assert "Scan parquet" not in plan, "edge list re-derived from files"
 
 
-def _forced_broadcast_violations(module, banned_tables, allow):
-    """AST lint: find F.broadcast(x) where x derives from an
-    SF-scaling table without collapsing through a GLOBAL aggregate.
+def _forced_broadcast_violations(src, banned_tables, allow,
+                                 param_roots=False):
+    """AST lint over module source ``src``: find F.broadcast(x) where x
+    derives from an SF-scaling table without collapsing through a
+    GLOBAL aggregate.
 
     Taint roots: load_table(.., "<banned>"), _bucketed_fact(..,
-    "<banned>", ..), _lineitem_by_partkey(..).  Taint propagates
-    through assignments; an expression containing .agg( with no
-    .groupBy( collapses to O(1) rows and clears the taint.
+    "<banned>", ..), _lineitem_by_partkey(..), and with
+    ``param_roots`` every ``DataFrame``-annotated parameter (a shared
+    body that receives its fact frames from both twins).  Taint
+    propagates through assignments; an expression containing .agg(
+    with no .groupBy( collapses to O(1) rows and clears the taint.
     """
     import ast
-    import inspect
 
-    tree = ast.parse(inspect.getsource(module))
+    tree = ast.parse(src)
 
     def call_name(node):
         f = node.func
@@ -497,6 +501,13 @@ def _forced_broadcast_violations(module, banned_tables, allow):
     violations = []
     for fn in [n for n in tree.body if isinstance(n, ast.FunctionDef)]:
         tainted: set[str] = set()
+        if param_roots:
+            for a in fn.args.args + fn.args.kwonlyargs:
+                ann = a.annotation
+                if (isinstance(ann, ast.Name) and ann.id == "DataFrame") or (
+                        isinstance(ann, ast.Constant)
+                        and ann.value == "DataFrame"):
+                    tainted.add(a.arg)
 
         def roots(expr):
             out = set()
@@ -539,7 +550,9 @@ def test_no_forced_broadcast_of_scaling_tables():
     no stats or AQE can undo.  Scaling roots: customer / orders /
     lineitem / events / documents / embeddings.  part and supplier
     are classic star dims whose broadcasts the docstrings justify
-    individually; GLOBAL aggregates (1-row frames) are exempt."""
+    individually; GLOBAL aggregates (1-row frames) are exempt.
+    DataFrame parameters count as scaling roots here: the TPC-H twins
+    hand their fact frames to one shared body."""
     import wrds2pg_spark.queries as qmod
 
     banned = {"customer", "orders", "lineitem", "events",
@@ -553,8 +566,23 @@ def test_no_forced_broadcast_of_scaling_tables():
         # groupBy(c_nationkey): bounded by the 25-nation vocabulary
         ("subquery_correlated", "nat_avg"),
     }
-    v = _forced_broadcast_violations(qmod, banned, allow)
+    v = _forced_broadcast_violations(
+        inspect.getsource(qmod), banned, allow, param_roots=True)
     assert v == [], f"forced broadcast of SF-scaling frames: {v}"
+
+
+def test_forced_broadcast_lint_flags_dataframe_parameter():
+    """Negative control: a shared body that force-broadcasts the fact
+    frame it receives is flagged once parameters are roots (and slips
+    through without them, which is why the queries.py check sets it)."""
+    src = (
+        "def body(spark: SparkSession, li: DataFrame) -> DataFrame:\n"
+        "    return spark.range(1).join(F.broadcast(li), 'id')\n"
+    )
+    banned = {"lineitem"}
+    assert _forced_broadcast_violations(
+        src, banned, set(), param_roots=True) == [("body", ["li"])]
+    assert _forced_broadcast_violations(src, banned, set()) == []
 
 
 def test_no_forced_broadcast_in_curation_corpus_operators():
@@ -601,18 +629,20 @@ def test_no_forced_broadcast_in_curation_corpus_operators():
         ("text_zipf_slope", "offs"),
     }
     for mod in (cur, cor, fin, dd, mm, sim, sk, se):
-        v = _forced_broadcast_violations(mod, banned, allow)
+        v = _forced_broadcast_violations(
+            inspect.getsource(mod), banned, allow)
         assert v == [], f"{mod.__name__}: forced SF-scaling broadcast: {v}"
 
 
-def test_q11_threshold_fallback_branch(spark):
-    """tpch_q11_bucketed switches plans on the part-count bound
-    (round 6): default = empty-frame window (one exchange);
-    max_window_parts=0 forces the at-scale branch (localCheckpoint +
-    1-row broadcast threshold, no Window operator).  Both branches
-    must return identical rows — the switch is a plan choice, never
-    a semantics choice."""
-    fn = REGISTRY["tpch_q11_bucketed"].fn
+@pytest.mark.parametrize("key", ["tpch_q11_bucketed", "tpch_q11_shape"])
+def test_q11_threshold_fallback_branch(spark, key):
+    """Both q11 keys switch plans on the part-count bound (round 6):
+    default = empty-frame window (one exchange); max_window_parts=0
+    forces the at-scale branch (localCheckpoint + 1-row broadcast
+    threshold, no Window operator).  Both branches must return
+    identical rows — the switch is a plan choice, never a semantics
+    choice."""
+    fn = REGISTRY[key].fn
     dfw = fn(spark, SF)
     assert "Window" in dfw._jdf.queryExecution().executedPlan().toString()
     dfb = fn(spark, SF, max_window_parts=0)

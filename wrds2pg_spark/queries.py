@@ -24,7 +24,7 @@ from dataclasses import dataclass
 import pandas as pd  # module-level: pandas_udf type hints must resolve
 
 from pyspark.errors import PySparkAttributeError
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wrds2pg_spark.functions.numeric import DAVG_SQL, DSUM_SQL, davg, dsum
@@ -595,18 +595,30 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time lookup: each event joined to the user's most recent
     order (operators/asof.py union+window pattern — one shuffle)."""
+    return _events_orders_asof(
+        spark, sf_dir, ["o_orderkey", "o_orderdate", "o_totalprice"])
+
+
+def _events_orders_asof(
+    spark: SparkSession, sf_dir: str, right_cols: list[str],
+    direction: str = "backward", tolerance: float | None = None,
+) -> DataFrame:
+    """Each event as-of joined on ``ts`` to its user's orders by
+    o_orderdate (orderkey breaks ties), carrying ``right_cols`` — the
+    body of the join_asof* keys, which differ only in the columns,
+    ``direction`` and ``tolerance`` they pass to asof_join."""
     from wrds2pg_spark.operators.asof import asof_join
 
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"
-    )
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", *right_cols)
     return asof_join(
         e, o,
         left_on="ts", right_on="o_orderdate",
         left_by="user_id", right_by="o_custkey",
-        right_cols=["o_orderkey", "o_orderdate", "o_totalprice"],
+        right_cols=right_cols,
         tiebreak="o_orderkey",
+        direction=direction,
+        tolerance=tolerance,
     )
 
 
@@ -773,20 +785,9 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     The tolerance check is a row-local post-filter on the already-
     carried match, so the plan is identical to the untoleranced join:
     one union+window shuffle, no extra join."""
-    from wrds2pg_spark.operators.asof import asof_join
-
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    return asof_join(
-        e, o,
-        left_on="ts", right_on="o_orderdate",
-        left_by="user_id", right_by="o_custkey",
-        right_cols=["o_orderkey", "o_orderdate"],
-        tiebreak="o_orderkey",
-        tolerance=float(_ASOF_TOL_S),
-    )
+    return _events_orders_asof(
+        spark, sf_dir, ["o_orderkey", "o_orderdate"],
+        tolerance=float(_ASOF_TOL_S))
 
 
 @register(
@@ -813,20 +814,8 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (two sort-direction windows over the same partitioning); a
     row-local arbiter picks the closer side — no second pass, no
     theta join (operators/asof.py:_asof_nearest)."""
-    from wrds2pg_spark.operators.asof import asof_join
-
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    return asof_join(
-        e, o,
-        left_on="ts", right_on="o_orderdate",
-        left_by="user_id", right_by="o_custkey",
-        right_cols=["o_orderkey", "o_orderdate"],
-        tiebreak="o_orderkey",
-        direction="nearest",
-    )
+    return _events_orders_asof(
+        spark, sf_dir, ["o_orderkey", "o_orderdate"], direction="nearest")
 
 
 # ---------------------------------------------------------------------------
@@ -3107,11 +3096,18 @@ def tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    return _q3_top_orders(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
+    )
+
+
+def _q3_top_orders(joined: DataFrame) -> DataFrame:
+    """Q3's tail over either twin's customer-orders-lineitem join:
+    revenue per order, top 10."""
+    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    return (
+        joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(dsum(rev, 4).alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
@@ -3136,8 +3132,7 @@ def tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _bucketed_fact(spark, sf_dir, "orders", "o_orderkey").hint(
         "shuffle_hash")
     li = _bucketed_fact(spark, sf_dir, "lineitem", "l_orderkey")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
+    return _q3_top_orders(
         li.join(o, li.l_orderkey == o.o_orderkey)
         # NO forced broadcast: customer SCALES with the lake — AQE
         # broadcasts the segment-filtered probe while it fits (it does
@@ -3145,11 +3140,6 @@ def tpch_q3_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r5-verdict q5 doctrine; the repo's own lint caught the
         # forced hint here in round 7)
         .join(c, o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(dsum(rev, 4).alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
     )
 
 
@@ -3339,7 +3329,24 @@ def tpch_q5_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("tpch_q18_bucketed", oracle=None)  # = q18_shape's, set below it
+# one oracle for both q18 keys (the bucketed twin registers first):
+# bucketing must not change a value
+_Q18_SQL = f"""
+    SELECT c.c_custkey, o.o_orderkey, o.o_orderdate,
+           {DSUM_SQL('l.l_quantity', 2)} AS total_qty
+    FROM customer c
+    JOIN orders o   ON c.c_custkey = o.o_custkey
+    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+    WHERE o.o_orderkey IN (
+        SELECT l_orderkey FROM lineitem
+        GROUP BY l_orderkey
+        HAVING {DSUM_SQL('l_quantity', 2)} > 200
+    )
+    GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
+    """
+
+
+@register("tpch_q18_bucketed", oracle=_Q18_SQL)
 def tpch_q18_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 over PRE-BUCKETED facts — twin of tpch_q18_shape.  The
     bucketing pays off twice: the HAVING aggregate groups lineitem on
@@ -4047,20 +4054,8 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward as-of: each event joined to the user's NEXT order at or
     after the event (operators/asof.py, direction="forward" — the same
     single-shuffle union+window traversal run in reverse)."""
-    from wrds2pg_spark.operators.asof import asof_join
-
-    e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderkey", "o_orderdate"
-    )
-    return asof_join(
-        e, o,
-        left_on="ts", right_on="o_orderdate",
-        left_by="user_id", right_by="o_custkey",
-        right_cols=["o_orderkey", "o_orderdate"],
-        tiebreak="o_orderkey",
-        direction="forward",
-    )
+    return _events_orders_asof(
+        spark, sf_dir, ["o_orderkey", "o_orderdate"], direction="forward")
 
 
 @register(
@@ -4111,22 +4106,7 @@ def tpch_q10_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "tpch_q18_shape",
-    oracle=f"""
-    SELECT c.c_custkey, o.o_orderkey, o.o_orderdate,
-           {DSUM_SQL('l.l_quantity', 2)} AS total_qty
-    FROM customer c
-    JOIN orders o   ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE o.o_orderkey IN (
-        SELECT l_orderkey FROM lineitem
-        GROUP BY l_orderkey
-        HAVING {DSUM_SQL('l_quantity', 2)} > 200
-    )
-    GROUP BY c.c_custkey, o.o_orderkey, o.o_orderdate
-    """,
-)
+@register("tpch_q18_shape", oracle=_Q18_SQL)
 def tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: large-quantity orders — HAVING over an
     aggregate feeding an IN-subquery.  Spark shape since round 6: the
@@ -4162,11 +4142,6 @@ def tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey", "o_orderdate", "total_qty",
         )
     )
-
-
-# the bucketed twin (registered earlier, before this shape's
-# definition) shares this oracle: bucketing must not change a value
-REGISTRY["tpch_q18_bucketed"].oracle = REGISTRY["tpch_q18_shape"].oracle
 
 
 @register(
@@ -4232,8 +4207,14 @@ def tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on orderkey; the conditional aggregation is a map-side
     partial (two long sums), so the final exchange carries 3 rows per
     partition."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
+    return _q12(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+    )
+
+
+def _q12(li: DataFrame, o: DataFrame) -> DataFrame:
+    """Q12's body over either twin's lineitem and orders frames."""
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -4252,23 +4233,13 @@ def tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tpch_q12_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q12 over orderkey-bucketed facts (round 7): the fact-fact join
     with its theta residual runs as an exchange-free, sort-free
-    ShuffledHashJoin on the bucket layout; the 3-group conditional
-    aggregate is map-side combined, so the only shuffle carries 3
-    rows per partition."""
-    li = _bucketed_fact(spark, sf_dir, "lineitem", "l_orderkey")
-    o = _bucketed_fact(spark, sf_dir, "orders", "o_orderkey").hint(
-        "shuffle_hash")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .filter(F.col("l_shipdate") > F.col("o_orderdate"))
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("long")
-                .alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("long")
-                .alias("low_line_count"),
-        )
+    ShuffledHashJoin on the bucket layout (the hint builds the hash
+    side on orders); the 3-group conditional aggregate is map-side
+    combined, so the only shuffle carries 3 rows per partition."""
+    return _q12(
+        _bucketed_fact(spark, sf_dir, "lineitem", "l_orderkey"),
+        _bucketed_fact(spark, sf_dir, "orders", "o_orderkey").hint(
+            "shuffle_hash"),
     )
 
 
@@ -4459,11 +4430,11 @@ _PS_SQL = f"""
 """
 
 
-def _partsupp_surrogate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The partsupp stand-in (see section comment).  One shuffle on the
-    composite (partkey, suppkey) key; downstream joins on the same pair
+def _partsupp_surrogate(li: DataFrame) -> DataFrame:
+    """The partsupp stand-in (see section comment) over a lineitem
+    frame.  One shuffle on the composite (partkey, suppkey) key (none
+    over partkey-bucketed lineitem); downstream joins on the same pair
     reuse the partitioning exchange-free."""
-    li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy(
         F.col("l_partkey").alias("ps_partkey"),
         F.col("l_suppkey").alias("ps_suppkey"),
@@ -4758,7 +4729,11 @@ def tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrinking the exchange ~8x.  part / supplier / nation broadcast;
     profit expression written identically on both engines so the
     scaled-long rounding sees bit-identical doubles."""
-    li = load_table(spark, sf_dir, "lineitem")
+    return _q9(spark, sf_dir, load_table(spark, sf_dir, "lineitem"))
+
+
+def _q9(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
+    """Q9's body over either twin's lineitem frame."""
     p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     s = load_table(spark, sf_dir, "supplier")
     n = load_table(spark, sf_dir, "nation")
@@ -4804,8 +4779,8 @@ def tpch_q11_shape(
 
     Plan: pair-key agg -> partkey re-agg (both map-side combined),
     then the global threshold as an EMPTY-FRAME WINDOW over the
-    per-part values — the same form (and plan switch) as
-    tpch_q11_bucketed.  The round-4 crossJoin(broadcast(threshold))
+    per-part values — one body with tpch_q11_bucketed, plan switch
+    included.  The round-4 crossJoin(broadcast(threshold))
     formulation promised 'the fact never moves twice' but the
     EXECUTED plan broke the promise: under AQE the threshold
     subtree's exchange never matched for reuse (0 ReusedExchange),
@@ -4813,12 +4788,20 @@ def tpch_q11_shape(
     1.14 s at sf0.1.  The window form computes the mean over the
     one materialized val stream: one lineitem scan, ~half the
     stages.  Above ``max_window_parts`` (footer-read bound, no Spark
-    job) it switches to localCheckpoint + 1-row broadcast exactly
-    like the bucketed twin; both branches share its oracle
-    arithmetic."""
-    ps = _partsupp_surrogate(spark, sf_dir)
-    val = ps.groupBy("ps_partkey").agg(
+    job) it switches to localCheckpoint + 1-row broadcast (see the
+    bucketed twin); both branches share the oracle's arithmetic."""
+    return _q11(
+        sf_dir, load_table(spark, sf_dir, "lineitem"), max_window_parts)
+
+
+def _q11(sf_dir: str, li: DataFrame, max_window_parts: int) -> DataFrame:
+    """Q11's body over either twin's lineitem frame, with the
+    window/broadcast threshold switch on the part-count bound."""
+    val = _partsupp_surrogate(li).groupBy("ps_partkey").agg(
         dsum(F.col("ps_supplycost"), 2).alias("value"))
+    # dsum/davg arithmetic: exact scaled-long sum over all per-part
+    # values, one division, count, then *1.1 — the same op order as
+    # the oracle's DAVG_SQL(value)*1.1 in both branches.
     scaled_sum = F.sum(F.round(F.col("value") * 100.0, 0).cast("long"))
     if _parquet_footer_rows(sf_dir, "part") > max_window_parts:
         val = val.transform(lineage_cut(eager=True))
@@ -4866,26 +4849,7 @@ def tpch_q9_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange left in the whole query is the ~175-row final aggregate.
     sf1: 0.44 s vs 0.78 s shape / 1.36 s round-4 agg+join form
     (BASELINE.md r5 small-batch table)."""
-    li = _lineitem_by_partkey(spark, sf_dir)
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    li_f = li.join(
-        F.broadcast(p.select("p_partkey")), li.l_partkey == p.p_partkey
-    ).drop("p_partkey")
-    w = W.partitionBy("l_partkey", "l_suppkey")
-    li_w = li_f.withColumn("ps_supplycost", F.min("l_extendedprice").over(w))
-    sn = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey).select(
-        "s_suppkey", F.col("n_name").alias("nation"))
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.lit(0.01) * F.col("ps_supplycost") * F.col("l_quantity")
-    )
-    return (
-        li_w.join(F.broadcast(sn), li_w.l_suppkey == sn.s_suppkey)
-        .groupBy("nation", F.year("l_shipdate").cast("long").alias("yr"))
-        .agg(dsum(profit, 4).alias("sum_profit"))
-    )
+    return _q9(spark, sf_dir, _lineitem_by_partkey(spark, sf_dir))
 
 
 @register("tpch_q11_bucketed", oracle=REGISTRY["tpch_q11_shape"].oracle)
@@ -4912,39 +4876,7 @@ def tpch_q11_bucketed(
     part-count bound is read from part.parquet's footer metadata —
     file-listing cost, no Spark job; distinct l_partkey can't exceed
     |part|.  tests/test_plans.py covers both branches."""
-    li = _lineitem_by_partkey(spark, sf_dir)
-    ps = li.groupBy(
-        F.col("l_partkey").alias("ps_partkey"),
-        F.col("l_suppkey").alias("ps_suppkey"),
-    ).agg(F.min("l_extendedprice").alias("ps_supplycost"))
-    val = ps.groupBy("ps_partkey").agg(
-        dsum(F.col("ps_supplycost"), 2).alias("value"))
-    # dsum/davg arithmetic: exact scaled-long sum over all per-part
-    # values, one division, count, then *1.1 — the same op order as
-    # the oracle's DAVG_SQL(value)*1.1 in both branches.
-    scaled_sum = F.sum(F.round(F.col("value") * 100.0, 0).cast("long"))
-    if _parquet_footer_rows(sf_dir, "part") > max_window_parts:
-        val = val.transform(lineage_cut(eager=True))
-        thr_row = val.agg(
-            (
-                scaled_sum.cast("double") / 100.0
-                / F.count(F.col("value")).cast("double") * 1.1
-            ).alias("__thr"))
-        return (
-            val.join(F.broadcast(thr_row))
-            .filter(F.col("value") > F.col("__thr"))
-            .select("ps_partkey", "value")
-        )
-    w = W.partitionBy()
-    thr = (
-        scaled_sum.over(w).cast("double") / 100.0
-        / F.count(F.col("value")).over(w).cast("double")
-    ) * 1.1
-    return (
-        val.withColumn("__thr", thr)
-        .filter(F.col("value") > F.col("__thr"))
-        .select("ps_partkey", "value")
-    )
+    return _q11(sf_dir, _lineitem_by_partkey(spark, sf_dir), max_window_parts)
 
 
 @register(
@@ -5116,7 +5048,11 @@ def tpch_q17_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sort saving.  The residual vs the single-node oracle (~3x
     sf10) is the scan+exchange floor; the bucketed twin (1.5x sf10)
     is the scale path."""
-    li = load_table(spark, sf_dir, "lineitem")
+    return _q17(spark, sf_dir, load_table(spark, sf_dir, "lineitem"))
+
+
+def _q17(spark: SparkSession, sf_dir: str, li: DataFrame) -> DataFrame:
+    """Q17's body over either twin's lineitem frame."""
     tp = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#5") & (F.col("p_size") < 10)
     ).select("p_partkey")
@@ -5144,23 +5080,7 @@ def tpch_q17_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (l_partkey, l_suppkey) covers the window's required clustering,
     so the ONLY exchange in the whole query is the 1-row final
     aggregate.  Same window arithmetic and oracle as the shape."""
-    li = _lineitem_by_partkey(spark, sf_dir)
-    tp = load_table(spark, sf_dir, "part").filter(
-        (F.col("p_brand") == "Brand#5") & (F.col("p_size") < 10)
-    ).select("p_partkey")
-    target = li.join(F.broadcast(tp), li.l_partkey == F.col("p_partkey"))
-    w = W.partitionBy("l_partkey")
-    avg_qty = (
-        F.sum(F.round(F.col("l_quantity"), 0).cast("long")).over(w)
-        .cast("double")
-        / F.count(F.col("l_quantity")).over(w).cast("double")
-    )
-    return (
-        target.withColumn("avg_qty", avg_qty)
-        .filter(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
-        .agg((dsum(F.col("l_extendedprice"), 2) / F.lit(7.0))
-             .alias("avg_yearly"))
-    )
+    return _q17(spark, sf_dir, _lineitem_by_partkey(spark, sf_dir))
 
 
 @register(
@@ -5300,15 +5220,29 @@ def tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderstatus") == "F")
-    s = load_table(spark, sf_dir, "supplier")
-    lo = li.join(o, li.l_orderkey == o.o_orderkey).select(
+    return _q21_sole_late_suppliers(
+        spark, sf_dir, _q21_late_lines(li, o).repartition("l_orderkey"))
+
+
+def _q21_late_lines(li: DataFrame, o: DataFrame) -> DataFrame:
+    """Q21's (orderkey, suppkey, late) lines over either twin's
+    lineitem and F-status orders frames."""
+    return li.join(o, li.l_orderkey == o.o_orderkey).select(
         "l_orderkey", "l_suppkey",
         F.when(
             F.col("l_shipdate")
             > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
             1,
         ).otherwise(0).alias("late"),
-    ).repartition("l_orderkey")
+    )
+
+
+def _q21_sole_late_suppliers(
+    spark: SparkSession, sf_dir: str, lo: DataFrame,
+) -> DataFrame:
+    """Q21's tail over orderkey-partitioned late lines: the pair-grain
+    and per-order aggregates, then the sole late supplier's name."""
+    s = load_table(spark, sf_dir, "supplier")
     per_os = lo.groupBy("l_orderkey", "l_suppkey").agg(
         F.max("late").alias("supp_late"))
     per_o = per_os.groupBy("l_orderkey").agg(
@@ -5328,23 +5262,16 @@ def tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("tpch_q21_bucketed", oracle=REGISTRY["tpch_q21_shape"].oracle)
 def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q21 over orderkey-bucketed lineitem+orders (the same catalog
-    tables the q5/q18 twins read).  Round 7 (VERDICT item 2,
-    measured sf1 min-of-6 A/Bs):
-
-    - The per-order WINDOW is gone: a second per-order hash aggregate
-      computes (n_supp, n_late) AND extracts THE sole late supplier
-      as max(when(supp_late=1, suppkey)) — legal because the n_late=1
-      filter guarantees exactly one such suppkey per surviving order.
-      The window form paid an in-partition SORT of the agg output;
-      the agg-agg cascade rides the same bucket partitioning sortless
-      and emits one row per qualifying order instead of filtering
-      every supplier row (0.625 -> 0.487 s at sf1).
-    - The fact join takes a shuffle_hash hint: BOTH tables are
-      bucketed on the join key, so SHJ is exchange-free AND sort-free
-      — the default broadcast of ~730k F-status orders paid a
-      measured 0.165 s relation build per run (join-only probe 0.342
-      bcast vs 0.177 shj); at 1000 executors that build is also
-      per-executor memory the bucket layout makes unnecessary.
+    tables the q5/q18 twins read): the shape's agg-agg cascade rides
+    the bucket partitioning, so the shape's orderkey repartition goes
+    and the cascade runs sortless (round 7, VERDICT item 2, measured
+    sf1 min-of-6 A/Bs: 0.625 -> 0.487 s against the per-order window
+    form).  The fact join takes a shuffle_hash hint: BOTH tables are
+    bucketed on the join key, so SHJ is exchange-free AND sort-free
+    — the default broadcast of ~730k F-status orders paid a measured
+    0.165 s relation build per run (join-only probe 0.342 bcast vs
+    0.177 shj); at 1000 executors that build is also per-executor
+    memory the bucket layout makes unnecessary.
 
     Zero fact exchanges end-to-end; the only shuffles are the ~50-row
     per-supplier count.  sf1: 0.49 s vs 0.223 s DuckDB = 2.2x (was
@@ -5352,30 +5279,7 @@ def tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _bucketed_fact(spark, sf_dir, "lineitem", "l_orderkey")
     o = _bucketed_fact(spark, sf_dir, "orders", "o_orderkey").filter(
         F.col("o_orderstatus") == "F").hint("shuffle_hash")
-    s = load_table(spark, sf_dir, "supplier")
-    lo = li.join(o, li.l_orderkey == o.o_orderkey).select(
-        "l_orderkey", "l_suppkey",
-        F.when(
-            F.col("l_shipdate")
-            > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),
-            1,
-        ).otherwise(0).alias("late"),
-    )
-    per_os = lo.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("late").alias("supp_late"))
-    per_o = per_os.groupBy("l_orderkey").agg(
-        F.count(F.lit(1)).alias("n_supp"),
-        F.sum("supp_late").alias("n_late"),
-        F.max(F.when(F.col("supp_late") == 1, F.col("l_suppkey")))
-        .alias("late_supp"),
-    )
-    return (
-        per_o.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(F.broadcast(s), F.col("late_supp") == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
+    return _q21_sole_late_suppliers(spark, sf_dir, _q21_late_lines(li, o))
 
 
 @register(
@@ -5510,6 +5414,24 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill arithmetic all row-local.  daily is lazily checkpointed:
     bounds + the window branch off it (AQE exchange-reuse failure,
     BASELINE.md r6)."""
+    return _daily_grid(
+        spark, sf_dir,
+        F.lit(None).cast("double").alias("filled_value"),
+        F.col("day_value").alias("filled_value"),
+    )
+
+
+def _daily_grid(
+    spark: SparkSession, sf_dir: str, head_fill: Column, fill: Column,
+    leads: dict[str, str] | None = None,
+) -> DataFrame:
+    """The dense per-user daily grid of the two gap-fill keys,
+    generated from the (user, day) aggregate (see ts_resample_ffill):
+    (user_id, day, day_value, fill).  ``head_fill`` fills a user's
+    days before its first known day (over that day's row); ``fill``
+    fills each known day and its gap days, over kday (the known day),
+    day_value (its value), next_day and the ``leads`` columns — each
+    the lead() of the daily column it names."""
     ev = load_table(spark, sf_dir, "events")
     day1 = F.expr("INTERVAL 1 DAY")
     daily = ev.groupBy(
@@ -5521,14 +5443,17 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("day").alias("d1"),
     )
     w = W.partitionBy("user_id").orderBy("day")
+    leads = leads or {}
+    d2 = daily.withColumn("next_day", F.lead("day").over(w))
+    for name, col in leads.items():
+        d2 = d2.withColumn(name, F.lead(col).over(w))
     # d2 feeds BOTH union branches (head + main): without the cut the
     # lead/row_number window subtree runs once per branch (4 Window
     # nodes in the round-10 before plan, 2 per branch).  Day-grain
     # rows, so the materialization is output-domain-sized; 0.83 ->
     # 0.77 s min-of-5 interleaved at sf0.1.
     d2 = (
-        daily
-        .withColumn("next_day", F.lead("day").over(w))
+        d2
         .withColumn("rn", F.row_number().over(w))
         .crossJoin(F.broadcast(bounds))
         .transform(lineage_cut(eager=False))
@@ -5540,12 +5465,14 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("d0", F.col("day") - day1, day1))
         .alias("day"),
         F.lit(None).cast("double").alias("day_value"),
-        F.lit(None).cast("double").alias("filled_value"),
+        head_fill,
     )
     main = d2.select(
         "user_id",
         F.col("day").alias("kday"),
         "day_value",
+        "next_day",
+        *leads,
         F.explode(F.sequence(
             "day",
             F.coalesce(F.col("next_day") - day1, F.col("d1")),
@@ -5555,7 +5482,7 @@ def ts_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         F.when(F.col("day") == F.col("kday"), F.col("day_value"))
         .alias("day_value"),
-        F.col("day_value").alias("filled_value"),
+        fill,
     )
     return head.unionByName(main.select(*head.columns))
 
@@ -5616,36 +5543,6 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 1.53 -> 0.98 s at sf1 (1.8x DuckDB, was 2.8x),
     identical output.  Exchanges: the (user, day) fact aggregate +
     one day-grain window; everything else is a generator."""
-    ev = load_table(spark, sf_dir, "events")
-    day1 = F.expr("INTERVAL 1 DAY")
-    daily = ev.groupBy(
-        "user_id", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(dsum(F.col("value"), 2).alias("day_value")).transform(
-        lineage_cut(eager=False))
-    bounds = daily.agg(
-        F.min("day").alias("d0"),
-        F.max("day").alias("d1"),
-    )
-    w = W.partitionBy("user_id").orderBy("day")
-    # same two-consumer cut as ts_resample_ffill: head + main both
-    # read d2, so the window subtree otherwise runs per branch
-    d2 = (
-        daily
-        .withColumn("next_day", F.lead("day").over(w))
-        .withColumn("next_value", F.lead("day_value").over(w))
-        .withColumn("rn", F.row_number().over(w))
-        .crossJoin(F.broadcast(bounds))
-        .transform(lineage_cut(eager=False))
-    )
-    head = d2.filter(
-        (F.col("rn") == 1) & (F.col("day") > F.col("d0"))
-    ).select(
-        "user_id",
-        F.explode(F.sequence("d0", F.col("day") - day1, day1))
-        .alias("day"),
-        F.lit(None).cast("double").alias("day_value"),
-        F.round(F.col("day_value"), 6).alias("interp_value"),
-    )
     gap_frac = (
         F.datediff(F.col("day"), F.col("kday")).cast("double")
         / F.datediff(F.col("next_day"), F.col("kday")).cast("double")
@@ -5657,24 +5554,12 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("day_value")
             + (F.col("next_value") - F.col("day_value")) * gap_frac)
     )
-    main = d2.select(
-        "user_id",
-        F.col("day").alias("kday"),
-        "day_value",
-        "next_day",
-        "next_value",
-        F.explode(F.sequence(
-            "day",
-            F.coalesce(F.col("next_day") - day1, F.col("d1")),
-            day1)).alias("day"),
-    ).select(
-        "user_id",
-        "day",
-        F.when(F.col("day") == F.col("kday"), F.col("day_value"))
-        .alias("day_value"),
+    return _daily_grid(
+        spark, sf_dir,
+        F.round(F.col("day_value"), 6).alias("interp_value"),
         F.round(interp, 6).alias("interp_value"),
+        leads={"next_value": "day_value"},
     )
-    return head.unionByName(main.select(*head.columns))
 
 
 @register(
