@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from wrds2pg_spark.sinks.postgres import (
     PsqlError, comment_sql, ddl_script, get_table_comment, psql_runners,
-    table_comment_query, update_postgres_copy,
+    table_comment_query, update_postgres,
 )
 
 PGBASE = "/tmp/wrds2pg_spark_pgtest"
@@ -130,7 +130,7 @@ def test_update_postgres_copy_roundtrip(spark, runners):
         F.col("d").cast("date").alias("d"),
         F.col("ts").cast("timestamp_ntz").alias("ts"),
     )
-    assert update_postgres_copy(
+    assert update_postgres(
         df, "roundtrip", "wrds",
         execute_sql=execute_sql, copy_csv=copy_csv,
         modified="Last modified: 2026-08-16 00:00:00", force=True,
@@ -160,31 +160,57 @@ def test_update_postgres_copy_roundtrip(spark, runners):
 def test_update_postgres_copy_gate_and_swap(spark, runners):
     """The idempotency gate (needs_update) and the atomic staging
     swap, against the live server: second call with the same stamp is
-    a no-op; stage_and_rename leaves no __staging table behind and the
-    final table is the new data."""
+    a no-op; a newer stamp swaps the new data in and leaves no
+    __staging table behind."""
     execute_sql, execute_query, copy_csv = runners
     df1 = spark.range(5).select(F.col("id").cast("bigint").alias("id"))
     stamp = "Last modified: 2025-12-31 00:00:00"
-    assert update_postgres_copy(
+    assert update_postgres(
         df1, "swapped", "wrds", execute_sql=execute_sql,
         copy_csv=copy_csv, modified=stamp)
     sink_stamp = get_table_comment("wrds", "swapped", execute_query)
     assert sink_stamp == stamp
     # same stamp -> gate refuses
-    assert not update_postgres_copy(
+    assert not update_postgres(
         df1, "swapped", "wrds", execute_sql=execute_sql,
         copy_csv=copy_csv, modified=stamp, sink_modified=sink_stamp)
-    # newer stamp via staging swap
+    # newer stamp: the staging swap replaces the table
     df2 = spark.range(9).select(F.col("id").cast("bigint").alias("id"))
-    assert update_postgres_copy(
+    assert update_postgres(
         df2, "swapped", "wrds", execute_sql=execute_sql,
         copy_csv=copy_csv, modified="Last modified: 2026-01-01 00:00:00",
-        sink_modified=sink_stamp, stage_and_rename=True)
+        sink_modified=sink_stamp)
     assert execute_query('SELECT count(*) FROM "wrds"."swapped"') \
         == [("9",)]
     assert execute_query(
         "SELECT count(*) FROM information_schema.tables "
         "WHERE table_name = 'swapped__staging'") == [("0",)]
+
+
+def test_staged_copy_load_keeps_roles_live(spark, runners):
+    """create_roles under the staging swap, against the live server:
+    the owner, the grant and the stamp made on the staging table carry
+    over through the RENAME.  A schema of its own, because CREATE ROLE
+    is not idempotent and test_ddl_roles_grants_live made "wrds"."""
+    execute_sql, execute_query, copy_csv = runners
+    stamp = "Last modified: 2026-02-01 00:00:00"
+    df = spark.range(4).select(F.col("id").cast("bigint").alias("id"))
+    assert update_postgres(
+        df, "held", "staged_roles", execute_sql=execute_sql,
+        copy_csv=copy_csv, modified=stamp, create_roles=True)
+    assert execute_query(
+        "SELECT has_table_privilege('staged_roles_access', "
+        "'staged_roles.held', 'SELECT')") == [("t",)]
+    assert execute_query(
+        "SELECT tableowner FROM pg_tables WHERE schemaname = "
+        "'staged_roles' AND tablename = 'held'") == [("staged_roles",)]
+    assert execute_query(
+        'SELECT count(*) FROM "staged_roles"."held"') == [("4",)]
+    assert get_table_comment("staged_roles", "held", execute_query) == stamp
+    # no held__staging left behind
+    assert execute_query(
+        "SELECT table_name FROM information_schema.tables "
+        "WHERE table_schema = 'staged_roles'") == [("held",)]
 
 
 def test_copy_csv_gzip_path(spark, runners, tmp_path):
@@ -218,7 +244,7 @@ def test_wrds_update_copy_transport_end_to_end(spark, runners, tmp_path):
     """The FULL reference pipeline against a live server: sas7bdat
     source -> ingest options (drop + rename + where) -> DDL -> COPY ->
     stamp comment -> idempotent re-run.  This is wrds_update exactly
-    as a reference user would call it, with the COPY transport the
+    as a reference user would call it, with the COPY load the
     reference itself uses (wrds2pg/api.py:37-236 +
     postgres/copy.py:36-55)."""
     import pandas as pd
@@ -238,7 +264,7 @@ def test_wrds_update_copy_transport_end_to_end(spark, runners, tmp_path):
         }), src)
     kwargs = dict(
         execute_sql=execute_sql, execute_query=execute_query,
-        transport="copy", copy_csv=copy_csv,
+        copy_csv=copy_csv,
         drop="junk", rename="at=assets", where="fyear >= 2021",
     )
     assert wrds_update(spark, src, "funda", "live", "", **kwargs)

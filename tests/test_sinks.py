@@ -315,7 +315,9 @@ def test_up_to_date_call_reads_no_source_and_runs_no_job(
     spark.range(3).write.parquet(str(src))
     stamp = update.source_modified(str(src))
     data_dir = str(tmp_path / "lake")
-    seams = dict(execute_sql=lambda sql: None, copy_csv=lambda *a, **k: None)
+    seams = dict(execute_sql=lambda sql: None)
+    if entry == "pg_copy":
+        seams["copy_csv"] = lambda *a, **k: None
 
     def call():
         if entry == "pq":
@@ -326,8 +328,7 @@ def test_up_to_date_call_reads_no_source_and_runs_no_job(
                 spark, str(src), "t", "s", data_dir=data_dir, obs=2)
         return update.wrds_update(
             spark, str(src), "t", "s", "jdbc:postgresql://nowhere/db",
-            sink_modified=stamp, obs=2,
-            transport="copy" if entry == "pg_copy" else "jdbc", **seams)
+            sink_modified=stamp, obs=2, **seams)
 
     if entry in ("pq", "csv"):
         assert call() is True  # first write stamps the sink
@@ -443,43 +444,96 @@ def test_csv_encoding_wlatin1_roundtrip(spark, tmp_path):
     assert "Café Müller".encode() not in raw  # NOT utf-8
 
 
-def test_update_postgres_tz_session_init(spark):
+def _record_jdbc_writes(monkeypatch) -> list[dict]:
+    """Stub out the JDBC write: each ``save`` appends the options the
+    writer was given, so a test sees what a connection would get."""
+    from pyspark.sql import DataFrameWriter
+
+    option = DataFrameWriter.option
+    saved = []
+
+    def record_option(self, key, value):
+        self.__dict__.setdefault("_recorded", {})[key] = value
+        return option(self, key, value)
+
+    monkeypatch.setattr(DataFrameWriter, "option", record_option)
+    monkeypatch.setattr(
+        DataFrameWriter, "save",
+        lambda self, *a, **k: saved.append(self.__dict__.get("_recorded", {})))
+    return saved
+
+
+def test_update_postgres_tz_session_init(spark, monkeypatch):
     """tz lands as the JDBC connection's SET TimeZone statement
-    (reference wrds2pg/postgres/copy.py:42-43). The write itself needs
-    a live PG; asserting the DDL stream shows the knob is threaded."""
-    df = spark.range(1)
-    called = []
-    try:
-        update_postgres(
-            df, "t", "s", "jdbc:postgresql://nowhere:1/db",
-            modified=STAMP, sink_modified="", execute_sql=called.append,
-            tz="America/Chicago",
-        )
-    except Exception:
-        pass  # JDBC connect to nowhere fails after DDL — expected
-    assert any("CREATE TABLE" in s for s in called)
+    (reference wrds2pg/postgres/copy.py:42-43), on the staging table."""
+    saved = _record_jdbc_writes(monkeypatch)
+    assert update_postgres(
+        spark.range(1), "t", "s", "jdbc:postgresql://nowhere:1/db",
+        modified=STAMP, execute_sql=lambda sql: None, tz="America/Chicago",
+    ) is True
+    assert len(saved) == 1
+    assert saved[0]["sessionInitStatement"] == "SET TimeZone TO 'America/Chicago'"
+    assert saved[0]["dbtable"] == '"s"."t__staging"'
 
 
 def test_update_postgres_staging_swap_is_one_statement(spark, monkeypatch):
-    """With stage_and_rename the DROP and RENAME reach execute_sql as
-    ONE string: on a runner where every call is its own connection
-    (psql_runners), separate calls would leave readers without a table
-    between them and no table at all after a failure mid-swap."""
-    from pyspark.sql import DataFrameWriter
-
-    monkeypatch.setattr(DataFrameWriter, "save", lambda self, *a, **k: None)
+    """Every load goes through ``t__staging``, and the DROP and RENAME
+    reach execute_sql as ONE string, last: on a runner where every call
+    is its own connection (psql_runners), separate calls would leave
+    readers without a table between them and no table at all after a
+    failure mid-swap.  The stamp comment is made on the staging table,
+    so it goes live with the data in that statement."""
+    _record_jdbc_writes(monkeypatch)
     called = []
     assert update_postgres(
         spark.range(1), "t", "s", "jdbc:postgresql://nowhere:1/db",
-        modified=STAMP, execute_sql=called.append, stage_and_rename=True,
+        modified=STAMP, execute_sql=called.append,
     ) is True
     assert any('CREATE TABLE "s"."t__staging"' in c for c in called)
-    assert called[-2:] == [
+    assert comment_sql("s", "t__staging", STAMP) in called
+    assert called[-1] == (
         'BEGIN; DROP TABLE IF EXISTS "s"."t" CASCADE; '
-        'ALTER TABLE "s"."t__staging" RENAME TO "t"; COMMIT',
-        comment_sql("s", "t", STAMP),
-    ]
+        'ALTER TABLE "s"."t__staging" RENAME TO "t"; COMMIT')
+    # nothing before the swap touches the live table
+    assert not any('"s"."t" ' in c for c in called[:-1])
     assert "BEGIN" not in called
+
+
+def test_staged_load_keeps_create_roles(spark, monkeypatch):
+    """create_roles holds under the staging swap: the owner and the
+    grant are made on ``t__staging`` before the swap, and carry over
+    through the RENAME (live: test_staged_copy_load_keeps_roles_live)."""
+    _record_jdbc_writes(monkeypatch)
+    called = []
+    assert update_postgres(
+        spark.range(1), "t", "s", "jdbc:postgresql://nowhere:1/db",
+        modified=STAMP, execute_sql=called.append, create_roles=True,
+    ) is True
+    swap = len(called) - 1
+    assert called[swap].startswith("BEGIN; DROP TABLE")
+    owner = called.index('ALTER TABLE "s"."t__staging" OWNER TO "s"')
+    grant = called.index('GRANT SELECT ON "s"."t__staging" TO "s_access"')
+    assert called.index('CREATE ROLE "s_access"') < owner < grant < swap
+
+
+def test_wrds_update_without_execute_sql_raises_before_any_job(spark, tmp_path):
+    """Without execute_sql there is no DDL, swap or stamp: the load
+    would append the full table on every call.  It fails loudly before
+    the source is read."""
+    from wrds2pg_spark.update import wrds_update
+
+    src = tmp_path / "src.csv"
+    src.write_text("a,b\n1,2\n")
+    sc = spark.sparkContext
+    group = "pg_without_execute_sql"
+    sc.setJobGroup(group, "must fail before any job")
+    try:
+        with pytest.raises(ValueError, match="execute_sql"):
+            wrds_update(spark, str(src), "t", "s", "jdbc:postgresql://nowhere:1/db")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_write_sorted_rowgroup_stats_disjoint(spark, tmp_path):
@@ -698,6 +752,7 @@ def _write_sas(path, modified_dt, ids):
     ("rewrite_newer", [2.0, 3.0]),
     ("add_older", [1.0, 2.0, 9.0]),
     ("remove_older", [2.0]),
+    ("dir_rewrite_newer", [2.0, 3.0]),
 ])
 def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(
     spark, tmp_path, change, ids
@@ -706,7 +761,10 @@ def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(
     job, and each change to the lake reloads it: SAS rewriting a file
     with a newer header stamp, and — where the newest header stamp
     does not move — adding a file with an older stamp or removing one
-    that is not the newest."""
+    that is not the newest.  A ``dir_`` case names the lake by its
+    directory instead of a glob: it reads through the sas7bdat reader,
+    and an in-place rewrite, which leaves the directory's mtime alone,
+    still reloads it."""
     from wrds2pg_spark.paths import get_pq_path
 
     src = tmp_path / "src"
@@ -718,7 +776,8 @@ def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(
     past = datetime(2023, 1, 1).timestamp()
     for p in [*src.iterdir(), src]:
         os.utime(p, (past, past))
-    lake, data_dir = str(src / "*.sas7bdat"), str(tmp_path / "lake")
+    lake = str(src) if change.startswith("dir_") else str(src / "*.sas7bdat")
+    data_dir = str(tmp_path / "lake")
     assert wrds_update_pq(spark, lake, "t", "s", data_dir=data_dir) is True
 
     sc = spark.sparkContext
@@ -732,7 +791,7 @@ def test_wrds_update_pq_sas7bdat_glob_lake_stamp_gates(
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
-    if change == "rewrite_newer":
+    if change.endswith("rewrite_newer"):
         _write_sas(src / "a.sas7bdat", datetime(2022, 6, 1, 10), [3.0])
     elif change == "add_older":
         _write_sas(src / "b.sas7bdat", datetime(2022, 5, 2, 10), [9.0])

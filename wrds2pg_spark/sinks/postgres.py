@@ -1,29 +1,35 @@
-"""PostgreSQL sink: JDBC bulk write + the reference's catalog
-management (schema/role/grant/comment DDL).
+"""PostgreSQL sink: one staged load per table, plus the reference's
+catalog management (schema/role/grant/comment DDL).
 
 Reference behavior (wrds2pg/postgres/copy.py:57-247 ``wrds_to_pg`` +
 wrds2pg/api.py:37-236 ``wrds_update``): ensure schema and roles,
 DROP TABLE CASCADE, CREATE TABLE with inferred PG types, stream rows
 in via COPY, grant, and store the "Last modified" stamp as the table
-comment (wrds2pg/postgres/ddl.py:26-38).
+comment (wrds2pg/postgres/ddl.py:26-38), all in one COPY transaction
+(copy.py:38-52).
 
-Spark mapping: ``df.write.jdbc(mode="overwrite")`` with
-``createTableColumnTypes`` pinning the exact PG column types, and the
-admin DDL issued as plain SQL.  The JDBC writer inserts per partition
-in parallel — the distributed-friendly shape; the reference's
-single-transaction COPY atomicity can be recovered with
-``stage_and_rename=True`` (write to a staging table, then swap in one
-transaction — SURVEY §7 hard part 5).
+``update_postgres`` is the only load body: gate on the stamps, create
+``{table}__staging`` with its exact types, owner, grants and stamp
+comment, move the rows into it, then swap it in with one DROP+RENAME
+statement.  Owner, grants and comment carry over through the RENAME,
+so the data and its stamp go live together, and a failure before the
+swap leaves the old table and its old stamp in place.  Two row movers
+fill the staging table: COPY from a CSV export when the caller passes
+a ``copy_csv`` seam, JDBC append otherwise.
 
-No PostgreSQL server or JDBC driver ships in this container, so
-``update_postgres`` takes an ``execute_sql`` callable for the admin
-statements (tests inject a recorder; production passes a psycopg or
-JDBC runner).  All SQL generation is pure and unit-tested.
+This module owns no connections: the caller passes ``execute_sql``
+(and ``copy_csv``) callables — ``psql_runners`` builds them on the
+``psql`` CLI, tests inject recorders.  All SQL generation is pure and
+unit-tested.
 """
 
 from __future__ import annotations
 
+import glob
 import logging
+import os
+import shutil
+import tempfile
 from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -32,7 +38,7 @@ from wrds2pg_spark.catalog import needs_update
 
 __all__ = [
     "create_table_sql", "comment_sql", "ddl_script", "update_postgres",
-    "update_postgres_copy", "psql_runners", "PsqlError",
+    "psql_runners", "PsqlError",
     "spark_to_pg_type",
 ]
 
@@ -137,7 +143,6 @@ def ddl_script(
     col_types: dict[str, str],
     *,
     create_roles: bool = False,
-    drop_existing: bool = True,
     modified: str = "",
 ) -> list[str]:
     """The full admin-DDL sequence the reference issues around a load
@@ -152,8 +157,7 @@ def ddl_script(
             f'CREATE ROLE "{access}"',
             f'GRANT USAGE ON SCHEMA "{schema}" TO "{access}"',
         ]
-    if drop_existing:
-        stmts.append(f'DROP TABLE IF EXISTS "{schema}"."{table_name}" CASCADE')
+    stmts.append(f'DROP TABLE IF EXISTS "{schema}"."{table_name}" CASCADE')
     stmts.append(create_table_sql(schema, table_name, names, col_types))
     if create_roles:
         access = f"{schema}_access"
@@ -182,57 +186,63 @@ def update_postgres(
     df: DataFrame,
     table_name: str,
     schema: str,
-    jdbc_url: str,
+    jdbc_url: str = "",
     *,
+    execute_sql: Callable[[str], None],
+    copy_csv: Callable[..., None] | None = None,
     modified: str = "",
     sink_modified: str = "",
     force: bool = False,
     col_types: dict[str, str] | None = None,
     create_roles: bool = False,
-    execute_sql: Callable[[str], None] | None = None,
-    jdbc_options: dict[str, str] | None = None,
-    stage_and_rename: bool = False,
     tz: str = "UTC",
 ) -> bool:
-    """Gate + admin DDL + JDBC bulk write + stamp comment.
-
-    ``tz`` mirrors the reference's per-connection
-    ``SET TimeZone TO '{tz}'`` (wrds2pg/postgres/copy.py:42-43,
-    api.py:49): issued via JDBC ``sessionInitStatement`` so every
-    executor's write connection interprets timestamp literals in the
-    same zone the reference would.
+    """Gate, staged load, swap: the one PostgreSQL load path.
 
     ``sink_modified`` is the stamp read from the existing table's
-    comment (caller queries it — this module issues, never reads,
-    admin SQL).  Returns True when a write happened.
+    comment (the caller queries it — this module issues, never reads,
+    admin SQL).  When the gate opens, ``ddl_script`` builds
+    ``{table}__staging`` with ``create_roles``' owner and grants and the
+    ``modified`` comment, the rows move in, and ``_swap_sql`` replaces
+    the live table in one statement — the reference's single-transaction
+    load (wrds2pg/postgres/copy.py:38-52) without holding a long lock.
+    Returns True when a load happened.
 
-    ``stage_and_rename`` writes to ``{table}__staging`` and swaps with
-    a DROP+RENAME in one transaction, recovering the reference's
-    atomic-replace semantics (single COPY transaction,
-    wrds2pg/postgres/copy.py:38-52) without holding a long lock.
-    """
+    ``copy_csv`` given moves the rows with COPY (``_copy_load``);
+    otherwise they go through JDBC to ``jdbc_url``, whose connections
+    run ``SET TimeZone TO '{tz}'`` first, as the reference's do
+    (wrds2pg/postgres/copy.py:42-43, api.py:49)."""
     if not needs_update(modified, sink_modified, force):
         log.info("%s.%s already up to date", schema, table_name)
         return False
 
-    types = pg_types_for(df, col_types)
+    staging = f"{table_name}__staging"
     names = [f.name.lower() for f in df.schema.fields]
-    target = f"{table_name}__staging" if stage_and_rename else table_name
+    for stmt in ddl_script(
+        schema, staging, names, pg_types_for(df, col_types),
+        create_roles=create_roles, modified=modified,
+    ):
+        execute_sql(stmt)
+    if copy_csv is None:
+        _jdbc_append(df, jdbc_url, schema, staging, tz)
+    else:
+        _copy_load(df, schema, staging, copy_csv)
+    execute_sql(_swap_sql(schema, staging, table_name))
+    return True
 
-    if execute_sql is not None:
-        for stmt in ddl_script(
-            schema, target, names, types,
-            create_roles=create_roles and not stage_and_rename,
-        ):
-            execute_sql(stmt)
 
+def _jdbc_append(
+    df: DataFrame, jdbc_url: str, schema: str, table: str, tz: str
+) -> None:
+    """JDBC row mover: per-partition batched inserts into the table
+    ``ddl_script`` created with the exact types."""
     writer = (
-        df.write.mode("append")  # table pre-created by ddl_script with exact types
+        df.write.mode("append")
         .format("jdbc")
         .option("url", jdbc_url)
-        .option("dbtable", f'"{schema}"."{target}"')
-        # per-partition batched inserts; reWriteBatchedInserts turns
-        # them into multi-row statements server-side
+        .option("dbtable", f'"{schema}"."{table}"')
+        # reWriteBatchedInserts turns the batches into multi-row
+        # statements server-side
         .option("batchsize", "10000")
         .option("reWriteBatchedInserts", "true")
     )
@@ -240,31 +250,54 @@ def update_postgres(
         writer = writer.option(
             "sessionInitStatement", f"SET TimeZone TO '{tz}'"
         )
-    for k, v in (jdbc_options or {}).items():
-        writer = writer.option(k, v)
     writer.save()
 
-    if execute_sql is not None:
-        if stage_and_rename:
-            execute_sql(_swap_sql(schema, target, table_name))
-        if modified:
-            execute_sql(comment_sql(schema, table_name, modified))
-    return True
+
+def _copy_load(
+    df: DataFrame, schema: str, table: str, copy_csv: Callable[..., None]
+) -> None:
+    """COPY row mover: ``df.write.csv`` exports every partition in
+    parallel (the cluster-side cost), then ``copy_csv`` loads the part
+    files one by one through the client.  At 100 TB with a real PG
+    fleet you'd fan the part files across parallel COPY sessions (they
+    are independent); the staging swap keeps the visible table atomic
+    either way.  The CSV dialect is pinned to COPY's (quotes doubled
+    via escape='"', unquoted empty = NULL, quoted empty = empty string,
+    ISO timestamps) so text containing delimiters, quotes and newlines
+    round-trips byte-exactly — asserted against a live server in
+    tests/test_postgres_live.py."""
+    out_dir = tempfile.mkdtemp(prefix="wrds2pg_spark_pg_copy_")
+    try:
+        (
+            df.write.mode("overwrite")
+            .option("escape", '"')  # CSV quote doubling, COPY's dialect
+            .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
+            .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSSXXX")
+            .csv(out_dir)
+        )
+        # chmod AFTER the write (overwrite mode recreates the dir):
+        # the COPY client may run as another OS user (the scratch
+        # tests run psql as `postgres` while Spark writes as root)
+        os.chmod(out_dir, 0o755)
+        for p in sorted(glob.glob(os.path.join(out_dir, "part-*"))):
+            os.chmod(p, 0o644)
+            copy_csv(schema, table, p)
+    finally:
+        shutil.rmtree(out_dir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
-# psql-CLI client + COPY transport (round 10)
+# psql-CLI client
 #
-# The reference's actual row transport is COPY over a libpq connection
+# The reference moves its rows with COPY over a libpq connection
 # (wrds2pg/postgres/copy.py:36-55: SAS -> CSV pipe -> COPY CSV in one
-# transaction).  The JDBC path above is the cluster-native write; this
-# section recovers the reference-parity COPY path with ZERO Python
-# dependencies — the `psql` CLI is the client — so the sink is
-# exercisable against a real server wherever PostgreSQL is installed
+# transaction).  These runners give the COPY mover a client with ZERO
+# Python dependencies — the `psql` CLI — so the sink is exercisable
+# against a real server wherever PostgreSQL is installed
 # (tests/test_postgres_live.py runs the whole matrix against a scratch
-# instance).  The runners implement the execute_sql / execute_query
-# seams, keeping the module's no-owned-connections doctrine: swap in a
-# psycopg runner and nothing else changes.
+# instance).  The runners implement the execute_sql / execute_query /
+# copy_csv seams, keeping the module's no-owned-connections doctrine:
+# swap in a psycopg runner and nothing else changes.
 # ---------------------------------------------------------------------------
 
 
@@ -284,7 +317,7 @@ def psql_runners(psql_argv: Sequence[str], cwd: str = "/tmp"):
     process/connection, BUT a single ``execute_sql`` string may carry
     multiple ';'-separated statements — psql -c sends them as one
     simple-query message, which PostgreSQL runs in one implicit
-    transaction.  update_postgres_copy relies on exactly that for the
+    transaction.  update_postgres relies on exactly that for the
     atomic staging swap.
 
     ``copy_csv(schema, table, path, header=False)`` issues client-side
@@ -332,82 +365,3 @@ def psql_runners(psql_argv: Sequence[str], cwd: str = "/tmp"):
 
 def _psql_quote(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
-
-
-def update_postgres_copy(
-    df: DataFrame,
-    table_name: str,
-    schema: str,
-    *,
-    execute_sql: Callable[[str], None],
-    copy_csv: Callable[..., None],
-    modified: str = "",
-    sink_modified: str = "",
-    force: bool = False,
-    col_types: dict[str, str] | None = None,
-    create_roles: bool = False,
-    stage_and_rename: bool = False,
-    csv_dir: str | None = None,
-    keep_csv: bool = False,
-) -> bool:
-    """Gate + admin DDL + COPY bulk load + stamp comment — the
-    COPY-transport twin of :func:`update_postgres`, matching the
-    reference's load path statement-for-statement
-    (wrds2pg/postgres/copy.py:57-247: ensure schema/roles, DROP,
-    CREATE with exact types, COPY CSV, grant, comment stamp).
-
-    Scale shape: the export is ``df.write.csv`` — every executor
-    writes its partition in parallel (the cluster-side cost), and the
-    COPY loads stream file-per-file through one client.  At 100 TB
-    with a real PG fleet you'd fan the part files across parallel
-    COPY sessions (they are independent); the staging swap keeps the
-    visible table atomic either way.  CSV dialect is pinned to COPY's
-    (quotes doubled via escape='"', unquoted empty = NULL, quoted
-    empty = empty string, ISO timestamps) so text containing
-    delimiters, quotes and newlines round-trips byte-exactly —
-    asserted against a live server in tests/test_postgres_live.py."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    if not needs_update(modified, sink_modified, force):
-        log.info("%s.%s already up to date", schema, table_name)
-        return False
-
-    types = pg_types_for(df, col_types)
-    names = [f.name.lower() for f in df.schema.fields]
-    target = f"{table_name}__staging" if stage_and_rename else table_name
-
-    for stmt in ddl_script(
-        schema, target, names, types,
-        create_roles=create_roles and not stage_and_rename,
-    ):
-        execute_sql(stmt)
-
-    out_dir = csv_dir or tempfile.mkdtemp(prefix="wrds2pg_spark_pg_copy_")
-    (
-        df.write.mode("overwrite")
-        .option("escape", '"')  # CSV quote doubling, COPY's dialect
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSSXXX")
-        .csv(out_dir)
-    )
-    try:
-        # chmod AFTER the write (overwrite mode recreates the dir):
-        # the COPY client may run as another OS user (the scratch
-        # tests run psql as `postgres` while Spark writes as root)
-        os.chmod(out_dir, 0o755)
-        parts = sorted(glob.glob(os.path.join(out_dir, "part-*")))
-        for p in parts:
-            os.chmod(p, 0o644)
-            copy_csv(schema, target, p)
-    finally:
-        if not keep_csv:
-            shutil.rmtree(out_dir, ignore_errors=True)
-
-    if stage_and_rename:
-        execute_sql(_swap_sql(schema, target, table_name))
-    if modified:
-        execute_sql(comment_sql(schema, table_name, modified))
-    return True
