@@ -125,6 +125,62 @@ def test_read_sas7bdat_infers_schema_from_real_file(spark, tmp_path):
     assert sorted(r["ret"] for r in df.collect()) == [-0.01, 0.05, 0.125]
 
 
+@pytest.fixture()
+def sas_lake(tmp_path):
+    """Three sas7bdat files of 50 rows each, ``id`` 0..149 in file
+    order."""
+    import numpy as np
+    import pandas as pd
+
+    from wrds2pg_spark.sinks.sas7bdat import write_sas7bdat
+
+    lake = tmp_path / "lake"
+    lake.mkdir()
+    for i in range(3):
+        write_sas7bdat(
+            pd.DataFrame({"ID": np.arange(50 * i, 50 * (i + 1), dtype="float64")}),
+            str(lake / f"part{i}.sas7bdat"))
+    return str(lake)
+
+
+@pytest.mark.parametrize("obs,tasks", [(0, 0), (1, 1), (50, 1), (51, 2), (120, 3), (500, 3)])
+def test_read_sas7bdat_obs_takes_first_rows_across_files(spark, sas_lake, obs, tasks):
+    """``obs`` over a lake is SAS ``obs=`` over the files read as one
+    dataset: the first rows in file order, and a file that owes no row
+    gets no task."""
+    from wrds2pg_spark.sources.sas7bdat import read_sas7bdat
+
+    df = read_sas7bdat(spark, sas_lake, chunksize=16, obs=obs)
+    assert [r["id"] for r in df.collect()] == [float(i) for i in range(min(obs, 150))]
+    assert df.rdd.getNumPartitions() == tasks
+
+
+def test_read_sas7bdat_obs_rejects_negative(spark, sas_lake):
+    from wrds2pg_spark.sources.sas7bdat import read_sas7bdat
+
+    with pytest.raises(ValueError, match="obs"):
+        read_sas7bdat(spark, sas_lake, obs=-1)
+
+
+def test_read_source_obs_puts_no_limit_above_the_sas_decode(spark, sas_lake):
+    """A Spark limit above the decode stops reading its Arrow stream
+    early, and Spark then kills the Python worker instead of reusing
+    it: every ``obs`` read forked a fresh worker.  ``read_source`` caps
+    a sas7bdat source inside the decode instead; other sources keep
+    the limit."""
+    from wrds2pg_spark import update
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    sas = update.read_source(spark, sas_lake + "/part0.sas7bdat", obs=30)
+    assert "Limit" not in plan(sas)
+    assert [r["id"] for r in sas.collect()] == [float(i) for i in range(30)]
+    pq = sas_lake + "_pq"
+    sas.write.parquet(pq)
+    assert "Limit" in plan(update.read_source(spark, pq, obs=3))
+
+
 def test_sas7bdat_multipage_roundtrip(tmp_path):
     """Rows spanning several data pages decode completely and exactly
     (page_length=1024 forces ~45 rows/page here)."""

@@ -8,7 +8,9 @@ Operation order mirrors the reference's dataset-option semantics:
    reference: copy.py:33, metadata.py:183,247, api.py:615)
 2. ``obs`` first-N limit — applied on the *input*, upstream of the
    where filter, as SAS applies ``obs=`` on the ``set`` statement
-   (codegen.py:47-50; doc api.py:99-102)
+   (codegen.py:47-50; doc api.py:99-102).  The ETL entry points hand
+   ``obs`` to ``update.read_source`` instead, which caps a sas7bdat
+   decode in place of a Spark limit
 3. ``drop`` / ``keep`` projection with ``prefix:`` wildcards
    (codegen.py:52-60)
 4. ``rename`` old=new pairs (codegen.py:35-38)

@@ -130,34 +130,59 @@ def infer_schema(path: str):
 
 
 def decode_file(
-    path: str, chunksize: int, target: pa.Schema
+    path: str, chunksize: int, target: pa.Schema, limit: int | None = None
 ) -> Iterator[pa.RecordBatch]:
     """Streaming per-file decode: ``pandas.read_sas`` chunks, normalized
     and conformed to ``target`` — columns picked by name, cast to the
     exact declared arrow types (pandas floats -> declared ints, an
-    all-null char chunk -> string)."""
+    all-null char chunk -> string).  ``limit`` stops the decode after
+    that many rows."""
     import pandas as pd
 
-    for chunk in pd.read_sas(
-        path, format="sas7bdat", chunksize=chunksize, iterator=True
-    ):
-        batch = pa.RecordBatch.from_pandas(
-            normalize_sas_chunk(chunk), preserve_index=False)
-        cols = []
-        for f in target:
-            # get_field_index returns -1 for a missing name, and
-            # batch.column(-1) would SILENTLY serve the last column —
-            # fail loudly instead (the declared-vs-file mismatch a user
-            # hits first: SAS names are stored uppercase, this reader
-            # lower-cases them)
-            idx = batch.schema.get_field_index(f.name)
-            if idx < 0:
-                raise KeyError(
-                    f"sas7bdat: declared column {f.name!r} not in "
-                    f"{path!r} (file has {batch.schema.names}; note "
-                    f"names are lower-cased on read)")
-            cols.append(batch.column(idx).cast(f.type))
-        yield pa.RecordBatch.from_arrays(cols, schema=target)
+    left = limit
+    with pd.read_sas(path, format="sas7bdat", iterator=True) as reader:
+        while left is None or left > 0:
+            chunk = reader.read(chunksize if left is None else min(chunksize, left))
+            if chunk.empty:
+                return
+            if left is not None:
+                left -= len(chunk)
+            batch = pa.RecordBatch.from_pandas(
+                normalize_sas_chunk(chunk), preserve_index=False)
+            cols = []
+            for f in target:
+                # get_field_index returns -1 for a missing name, and
+                # batch.column(-1) would SILENTLY serve the last column —
+                # fail loudly instead (the declared-vs-file mismatch a user
+                # hits first: SAS names are stored uppercase, this reader
+                # lower-cases them)
+                idx = batch.schema.get_field_index(f.name)
+                if idx < 0:
+                    raise KeyError(
+                        f"sas7bdat: declared column {f.name!r} not in "
+                        f"{path!r} (file has {batch.schema.names}; note "
+                        f"names are lower-cased on read)")
+                cols.append(batch.column(idx).cast(f.type))
+            yield pa.RecordBatch.from_arrays(cols, schema=target)
+
+
+def _first_rows(files: list[str], obs: int) -> list[int]:
+    """Per file, the rows it still owes to the lake's first ``obs``
+    (SAS ``obs=`` over the files read as one dataset, in order), from
+    the header row counts; the list stops at the first file that owes
+    none."""
+    import pandas as pd
+
+    if obs < 0:
+        raise ValueError(f"obs must be >= 0, got {obs}")
+    owed, left = [], obs
+    for path in files:
+        if left <= 0:
+            break
+        owed.append(left)
+        with pd.read_sas(path, format="sas7bdat", iterator=True) as reader:
+            left -= reader.row_count
+    return owed
 
 
 def read_sas7bdat(
@@ -166,6 +191,7 @@ def read_sas7bdat(
     *,
     chunksize: int = 262_144,
     schema=None,
+    obs: int | None = None,
 ) -> DataFrame:
     """Read one file, a glob, or a directory of ``.sas7bdat`` files.
 
@@ -173,6 +199,14 @@ def read_sas7bdat(
     reads to be planned without touching data; when omitted, the first
     file's first chunk is sampled driver-side to infer it (one small
     read, see ``infer_schema``).
+
+    ``obs`` reads only the first ``obs`` rows, the files taken in
+    order: each task stops its decode at the rows its file owes, and a
+    file that owes none gets no task.  The cap sits in the decode, not
+    in a Spark ``limit`` above it: a limit stops reading the Arrow
+    stream before its end, and Spark then kills the Python worker
+    instead of reusing it, so every such read forked a fresh worker
+    that imported pandas and pyarrow again.
     """
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -183,11 +217,13 @@ def read_sas7bdat(
     elif isinstance(schema, str):
         schema = StructType.fromDDL(schema)
     target = to_arrow_schema(schema)
+    owed = [None] * len(files) if obs is None else _first_rows(files, int(obs))
+    files = files[:len(owed)]
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             for i in batch.column("id").to_pylist():
-                yield from decode_file(files[i], chunksize, target)
+                yield from decode_file(files[i], chunksize, target, owed[i])
 
     # Exactly one file per task, with NO exchange and no RDD stage:
     # spark.range with numPartitions=len(files) puts id i alone in
@@ -199,6 +235,7 @@ def read_sas7bdat(
     # under a second Python worker daemon.  The decode streams
     # pandas.read_sas(chunksize) per file, so a multi-GB SAS file
     # never materializes in memory (the binaryFile alternative holds
-    # whole files as rows; rejected).
-    return spark.range(len(files), numPartitions=len(files)).mapInArrow(
+    # whole files as rows; rejected).  obs=0 leaves no file to read,
+    # and spark.range still asks for at least one partition.
+    return spark.range(len(files), numPartitions=max(1, len(files))).mapInArrow(
         decode, schema)

@@ -28,6 +28,7 @@ from __future__ import annotations
 import glob
 import logging
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -182,30 +183,35 @@ def resolve_encoding(
 
 def read_source(
     spark: SparkSession, source_path: str, encoding: str | None = None,
+    obs: int | None = None,
 ) -> DataFrame:
     """Read the source with the reader for its ``_source_kind``.
     ``encoding`` applies to CSV sources (the reference's
     ``encoding``/``sas_encoding``, wrds2pg/api.py:48; parquet carries
-    its own encoding)."""
+    its own encoding).  ``obs`` keeps only the first rows: the sas7bdat
+    reader stops its decode there (see ``read_sas7bdat``), the others
+    take a Spark ``limit``."""
     kind = _source_kind(source_path)
-    if kind == "parquet":
-        return spark.read.parquet(source_path)
     if kind == "sas7bdat":
         # the file's own header carries its charset (the reference's
         # sas_encoding sets the remote SAS session; no session here)
         from wrds2pg_spark.sources.sas7bdat import read_sas7bdat
 
-        return read_sas7bdat(spark, source_path)
-    reader = spark.read.option("header", "true")
-    if encoding:
-        from wrds2pg_spark.sources.csv import (
-            _enable_full_charsets, normalize_encoding,
-        )
+        return read_sas7bdat(spark, source_path, obs=obs)
+    if kind == "parquet":
+        df = spark.read.parquet(source_path)
+    else:
+        reader = spark.read.option("header", "true")
+        if encoding:
+            from wrds2pg_spark.sources.csv import (
+                _enable_full_charsets, normalize_encoding,
+            )
 
-        charset = normalize_encoding(encoding)
-        _enable_full_charsets(spark, charset)
-        reader = reader.option("encoding", charset)
-    return reader.csv(source_path)
+            charset = normalize_encoding(encoding)
+            _enable_full_charsets(spark, charset)
+            reader = reader.option("encoding", charset)
+        df = reader.csv(source_path)
+    return df if obs is None else df.limit(int(obs))
 
 
 def _read_if_stale(
@@ -237,9 +243,11 @@ def _read_if_stale(
     if not needs_update(modified, sink_modified, force):
         log.info("%s already up to date", target)
         return None
+    opts = IngestOptions(**ingest_kwargs)
+    # the reader takes the first obs rows, so the chain skips its limit
     df = apply_options(
-        read_source(spark, source_path, encoding),
-        IngestOptions(**ingest_kwargs),
+        read_source(spark, source_path, encoding, opts.obs),
+        replace(opts, obs=None),
     )
     return df, modified
 
